@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** External-table registration — the Spark-native form of the
   * reference's `CREATE OR REPLACE EXTERNAL TABLE data_stage.
@@ -90,11 +91,13 @@ object ExternalTable {
   }
 
   /** Typed registration for parquet staging data (the engine's native
-    * columnar staging format, SURVEY.md §1.2).
+    * columnar staging format, SURVEY.md §1.2). A caller that just wrote
+    * the files passes the `schema` it wrote them with; the read then
+    * skips footer inference, which is a Spark job of its own.
     */
   def registerParquet(spark: SparkSession, entity: String,
-      location: String): DataFrame = {
-    val df = spark.read.parquet(location)
+      location: String, schema: Option[StructType] = None): DataFrame = {
+    val df = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(location)
     df.createOrReplaceTempView(s"t_$entity")
     df
   }

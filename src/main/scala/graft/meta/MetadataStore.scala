@@ -1,6 +1,10 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import graft.operators.MetaParquet
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Key-value pipeline metadata table — the Spark-native form of
@@ -13,9 +17,25 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * The table is intentionally tiny (pipeline configuration, not data),
   * so updates are copy-on-write through the driver: read → mutate →
-  * overwrite one parquet file. This is the file-storage answer to the
+  * rewrite one parquet file. This is the file-storage answer to the
   * reference's in-warehouse `UPDATE` (SURVEY.md §2.8 D1) — at 100 TB
   * the *data* never takes this path, only metadata does.
+  *
+  * I/O goes through [[graft.operators.MetaParquet]] in the driver, the
+  * codec the store's commit log uses: a lookup or an update costs file
+  * I/O, not a Spark job. The layout stays a directory holding one
+  * parquet part, so [[df]] and any `spark.read.parquet` over the path
+  * read it as before, and directories written by the earlier
+  * `createDataFrame(...).write.parquet` path read and update in place
+  * (every visible part is read; an update replaces them all).
+  *
+  * Each write is published crash-safely: the new part is written to a
+  * hidden sibling `.<name>.tmp`, the live directory is renamed aside to
+  * `.<name>.bak`, the tmp is renamed into place and the backup dropped.
+  * At every instant either the live directory or the backup holds a
+  * complete table; the next access finishes or rolls back a publish a
+  * crash interrupted. Read-modify-write cycles on one path are
+  * serialized within the JVM.
   */
 final case class MetaEntry(m_key: String, m_key_type: String, m_value: String)
 
@@ -26,19 +46,61 @@ class MetadataStore(spark: SparkSession, path: String) {
     StructField("m_key_type", StringType),
     StructField("m_value", StringType)))
 
+  private val cols = schema.fieldNames.toSeq.map(MetaParquet.Col(_, "string"))
+  // the message name Spark's own parquet writer uses
+  private val fileSchema = MetaParquet.schemaOf("spark_schema", cols)
+
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs: FileSystem = dir.getFileSystem(conf)
+
+  private val dir = {
+    val p = new Path(path)
+    p.getFileSystem(conf).makeQualified(p)
+  }
+  private val tmp = new Path(dir.getParent, s".${dir.getName}.tmp")
+  private val bak = new Path(dir.getParent, s".${dir.getName}.bak")
+  private val lock = MetadataStore.lockFor(dir)
+
   def init(entries: Seq[MetaEntry]): Unit = write(entries)
 
-  def df: DataFrame = spark.read.schema(schema).parquet(path)
+  def df: DataFrame = {
+    lock.synchronized(recover(fs))
+    spark.read.schema(schema).parquet(path)
+  }
 
-  private def readAll(): Seq[MetaEntry] =
-    df.collect().toSeq.map(r =>
-      MetaEntry(r.getString(0), r.getString(1), r.getString(2)))
+  /** Finish or roll back a publish that a crash interrupted: a backup
+    * beside a live directory is a finished publish's leftover; a
+    * backup alone is the last complete table.
+    */
+  private def recover(f: FileSystem): Unit =
+    if (f.exists(bak)) {
+      if (f.exists(dir)) f.delete(bak, true)
+      else if (!f.rename(bak, dir))
+        sys.error(s"MetadataStore: cannot restore $dir from $bak")
+    }
 
-  private def write(entries: Seq[MetaEntry]): Unit = {
-    val rows = entries.map(e => Row(e.m_key, e.m_key_type, e.m_value))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path)
+  private def readAll(): Seq[MetaEntry] = lock.synchronized {
+    val f = fs
+    recover(f)
+    MetaParquet.read(f, conf, dir).map { r =>
+      def s(c: String) = r.get(c).map(_.asInstanceOf[String]).orNull
+      MetaEntry(s("m_key"), s("m_key_type"), s("m_value"))
+    }
+  }
+
+  private def write(entries: Seq[MetaEntry]): Unit = lock.synchronized {
+    val f = fs
+    recover(f)
+    if (f.exists(tmp) && !f.delete(tmp, true))
+      sys.error(s"MetadataStore: cannot clear $tmp")
+    MetaParquet.write(conf, tmp, fileSchema, cols, entries.map(e =>
+      Map[String, Any]("m_key" -> e.m_key, "m_key_type" -> e.m_key_type,
+        "m_value" -> e.m_value)))
+    if (f.exists(dir) && !f.rename(dir, bak))
+      sys.error(s"MetadataStore: cannot move $dir aside")
+    if (!f.rename(tmp, dir))
+      sys.error(s"MetadataStore: cannot publish $dir")
+    f.delete(bak, true)
   }
 
   /** `SELECT m_value FROM … WHERE m_key = ?` (reference :105-107). */
@@ -52,22 +114,31 @@ class MetadataStore(spark: SparkSession, path: String) {
   /** Keyed UPDATE (reference :80-92): `SET m_value = m_key_type || '/'
     * || key || '/' || suffix WHERE m_key = key`.
     */
-  def updatePathValue(key: String, suffix: String): Unit = {
-    val updated = readAll().map {
-      case e if e.m_key == key =>
-        e.copy(m_value = s"${e.m_key_type}/$key/$suffix")
-      case e => e
+  def updatePathValue(key: String, suffix: String): Unit =
+    lock.synchronized {
+      val updated = readAll().map {
+        case e if e.m_key == key =>
+          e.copy(m_value = s"${e.m_key_type}/$key/$suffix")
+        case e => e
+      }
+      write(updated)
     }
-    write(updated)
-  }
 
   /** General keyed update. */
-  def put(key: String, keyType: String, value: String): Unit = {
-    val all = readAll()
-    val updated =
-      if (all.exists(_.m_key == key))
-        all.map(e => if (e.m_key == key) MetaEntry(key, keyType, value) else e)
-      else all :+ MetaEntry(key, keyType, value)
-    write(updated)
-  }
+  def put(key: String, keyType: String, value: String): Unit =
+    lock.synchronized {
+      val all = readAll()
+      val updated =
+        if (all.exists(_.m_key == key))
+          all.map(e => if (e.m_key == key) MetaEntry(key, keyType, value) else e)
+        else all :+ MetaEntry(key, keyType, value)
+      write(updated)
+    }
+}
+
+object MetadataStore {
+  private val locks = new ConcurrentHashMap[Path, AnyRef]()
+
+  private def lockFor(dir: Path): AnyRef =
+    locks.computeIfAbsent(dir, _ => new AnyRef)
 }

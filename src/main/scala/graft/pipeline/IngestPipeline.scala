@@ -5,7 +5,7 @@ import java.time.LocalDate
 import graft.check.{Check, CheckResult, CheckRunner}
 import graft.ingest.{ExternalTable, FileSensor, Partitioner}
 import graft.meta.MetadataStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference DAG (`ingest_bundesliga_match_scores`, 10 linear
@@ -19,14 +19,27 @@ import org.apache.spark.sql.functions._
   *  1. key-type lookup from metadata (get_key_type_from_snowflake)
   *  2. sense landing files (look_for_…_file_in_s3)
   *  3. partition suffix from run date (generate_s3_partition)
-  *  4. metadata path update (generate_…_sql + update_…_metadata)
-  *  5. read-back of the updated path (get_s3_partition_metadata)
+  *  4. metadata path update (generate_…_sql + update_…_metadata) —
+  *     driver-side parquet I/O through [[MetadataStore]], no Spark job
+  *  5. read-back of the updated path (get_s3_partition_metadata) —
+  *     also driver-side
   *  6. list + copy into dated partition (list_of_S3_files_to_copy +
-  *     copy_files_within_s3) — here a partitioned parquet write
+  *     copy_files_within_s3) — here a partitioned parquet write; the
+  *     staged row count rides that write as an observed metric
   *  7. header-sniff schema + external table (generate_external_table_
-  *     ddl + create_…_external_table)
+  *     ddl + create_…_external_table) — the staged view is registered
+  *     with the schema the write used, so no footer-inference job runs
   *  8. validation checkpoint (DataValidator.validate_staging_table_
-  *     data — data_validator.py:14-39), Check algebra in one pass
+  *     data — data_validator.py:14-39), Check algebra in one exact pass
+  *
+  * A batch thus submits only the jobs that touch data: the header
+  * sniff, the staging write and the check pass.
+  *
+  * The observed `stagedCount` counts the rows the write persisted. It
+  * inherits the invariant `VersionedStore`'s group writes document: a
+  * SPECULATIVE duplicate task that also completes would count its rows
+  * twice, so a deployment that enables `spark.speculation` must keep it
+  * off for this job (it is off by default and in local mode).
   */
 final case class PipelineConfig(
     entity: String,
@@ -75,10 +88,14 @@ object IngestPipeline {
     // partition path (columnar staging, SURVEY.md §1.2)
     val raw = ExternalTable.register(spark, s"${conf.entity}_landing",
       conf.landingGlob, conf.delimiter)
-    raw.write.mode("overwrite").parquet(stagedPath)
+    val written = Observation()
+    raw.observe(written, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(stagedPath)
+    val stagedCount = written.get("n").asInstanceOf[Long]
 
     // 7. external table over the staged partition (reference :145-206)
-    val staged = ExternalTable.registerParquet(spark, conf.entity, stagedPath)
+    val staged = ExternalTable.registerParquet(spark, conf.entity,
+      stagedPath, Some(raw.schema))
 
     // 8. validation checkpoint (data_validator.py:14-39) — one pass
     val results =
@@ -86,6 +103,6 @@ object IngestPipeline {
       else Seq.empty
 
     PipelineResult(conf.entity, sensed, suffix, stagedPath,
-      s"t_${conf.entity}", staged.count(), results)
+      s"t_${conf.entity}", stagedCount, results)
   }
 }

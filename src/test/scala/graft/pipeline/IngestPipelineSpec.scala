@@ -3,8 +3,12 @@ package graft.pipeline
 import java.nio.file.Files
 import java.time.LocalDate
 
-import graft.SparkFixture
-import graft.check.{ColumnsMatchOrdered, InSet, NotNull}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+import graft.{JobSites, SparkFixture}
+import graft.check.{ColumnsMatchOrdered, InSet, NotNull, Unique}
 import graft.ingest.FileSensor
 import graft.meta.{MetaEntry, MetadataStore}
 import org.scalatest.funsuite.AnyFunSuite
@@ -90,5 +94,57 @@ class IngestPipelineSpec extends AnyFunSuite with SparkFixture with Matchers {
       checks = Seq(InSet("round", Seq("Regular Season", "Playoffs")))))
     result.validationPassed shouldBe false
     result.checkResults.head.violations shouldBe 1L
+  }
+
+  private def conf(landing: String, root: String, raw: String,
+      checks: Seq[graft.check.Check] = Nil) = PipelineConfig(
+    entity = entity,
+    landingGlob = s"$landing/${entity}*",
+    rawRoot = s"$root/$raw",
+    runDate = LocalDate.of(2022, 5, 12),
+    sensor = FileSensor.SensorConfig(pokeIntervalMs = 10, timeoutMs = 1000),
+    checks = checks)
+
+  test("header-only landing file: staged count 0, the call returns") {
+    val (root, landing, meta) = setup()
+    Files.write(java.nio.file.Paths.get(landing, s"${entity}_1.csv"),
+      ",round,day,date,home,score,away\n".getBytes)
+    val run = Future(IngestPipeline.run(spark, meta,
+      conf(landing, root, "raw", Seq(NotNull("home")))))
+    val result = Await.result(run, 2.minutes)
+    result.stagedCount shouldBe 0
+    result.validationPassed shouldBe true
+    spark.table(s"t_$entity").count() shouldBe 0
+  }
+
+  test("multi-file landing zone: the observed staged count equals " +
+      "the staged table's") {
+    val (root, landing, meta) = setup()
+    (2 to 4).foreach { f =>
+      Files.write(java.nio.file.Paths.get(landing, s"${entity}_$f.csv"),
+        ((",round,day,date,home,score,away" +: (0 until f * 5).map(i =>
+          s"${f * 100 + i},Playoffs,Sat,2022-05-12,X$i,1-0,Y$i")))
+          .mkString("\n").getBytes)
+    }
+    val result = IngestPipeline.run(spark, meta, conf(landing, root, "raw"))
+    result.sensedFiles should have size 4
+    result.stagedCount shouldBe 3 + 10 + 15 + 20
+    result.stagedCount shouldBe spark.table(s"t_$entity").count()
+  }
+
+  test("a batch submits no metadata job, no staged recount and no " +
+      "parquet footer inference") {
+    val (root, landing, meta) = setup()
+    var result: PipelineResult = null
+    val sites = JobSites.during(spark) {
+      result = IngestPipeline.run(spark, meta, conf(landing, root, "raw",
+        Seq(NotNull("home"), Unique(Seq("data_id")))))
+    }
+    result.stagedCount shouldBe 3
+    result.validationPassed shouldBe true
+    sites should not be empty
+    sites.filter(_.contains("MetadataStore.scala")) shouldBe empty
+    sites.filter(_.contains("count at IngestPipeline")) shouldBe empty
+    sites.filter(_.contains("parquet at ExternalTable")) shouldBe empty
   }
 }

@@ -1,5 +1,12 @@
 package graft.transform
 
+import java.util.concurrent.{CyclicBarrier, TimeUnit}
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
 import graft.SparkFixture
 import graft.check.{NotNull, Unique}
 import org.apache.spark.sql.functions._
@@ -157,5 +164,76 @@ class ModelRegistrySpec extends AnyFunSuite with SparkFixture with Matchers {
     // nothing landed: the store is still empty
     graft.operators.VersionedStore
       .isEmpty(spark, store) shouldBe true
+  }
+
+  private def poolThreads(): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith(ModelRegistry.ThreadPrefix))
+
+  /** Both parties of a two-model rendezvous, so their builds overlap. */
+  private def rendezvous(): () => Unit = {
+    val b = new CyclicBarrier(2)
+    () => { b.await(30, TimeUnit.SECONDS); () }
+  }
+
+  test("a ref cycle across two threads fails loudly, never deadlocks") {
+    val meet = rendezvous()
+    val r = new ModelRegistry(spark)
+      .register(Model("a", View, ref => { meet(); ref("b") }))
+      .register(Model("b", View, ref => { meet(); ref("a") }))
+    val run = Future(intercept[IllegalArgumentException](r.run()))
+    Await.result(run, 60.seconds).getMessage should
+      include("cycle detected")
+    poolThreads() shouldBe empty
+  }
+
+  test("a model two concurrent models ref is built once: its " +
+      "incremental store gains one version per run()") {
+    val s = spark
+    import s.implicits._
+    val store = tmpStore("inc-shared")
+    val meet = rendezvous()
+    @volatile var builds = 0
+    val reg = new ModelRegistry(spark)
+      .register(Model("left_model", View,
+        ref => { meet(); ref("shared") }))
+      .register(Model("right_model", Table,
+        ref => { meet(); ref("shared") }, tests = Seq(NotNull("id"))))
+      .register(IncrementalModel("shared", store,
+        build = (_, _) => {
+          synchronized(builds += 1)
+          Seq((1L, 10)).toDF("id", "v")
+        },
+        tests = Seq(NotNull("v"))))
+    def versions() = graft.operators.VersionedStore.versions(spark, store).size
+    val built = reg.run()
+    builds shouldBe 1
+    val v1 = versions()
+    built("left_model").count() shouldBe 1
+    built("right_model").count() shouldBe 1
+    val again = reg.run()
+    builds shouldBe 2
+    versions() shouldBe v1 + 1
+    again("left_model").count() shouldBe 2
+    again("right_model").count() shouldBe 2
+    // test() runs once more, then both suites
+    val tested = reg.test()
+    builds shouldBe 3
+    versions() shouldBe v1 + 2
+    tested.keySet shouldBe Set("right_model", "shared")
+    tested.values.flatten.forall(_.passed) shouldBe true
+    poolThreads() shouldBe empty
+  }
+
+  test("a failing model rethrows its own exception, unwrapped, and " +
+      "leaves no pool thread behind") {
+    val boom = new IllegalStateException("model body failed")
+    val r = new ModelRegistry(spark)
+      .register(Model("ok", View, _ => spark.range(3).toDF("id")))
+      .register(Model("bad", View, _ => throw boom))
+      .register(Model("downstream", View, ref => ref("bad")))
+    val e = intercept[IllegalStateException](r.run())
+    e shouldBe theSameInstanceAs(boom)
+    poolThreads() shouldBe empty
   }
 }
