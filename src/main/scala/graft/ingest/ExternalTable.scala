@@ -91,13 +91,13 @@ object ExternalTable {
   }
 
   /** Typed registration for parquet staging data (the engine's native
-    * columnar staging format, SURVEY.md §1.2). A caller that just wrote
-    * the files passes the `schema` it wrote them with; the read then
-    * skips footer inference, which is a Spark job of its own.
+    * columnar staging format, SURVEY.md §1.2). The caller passes the
+    * `schema` it wrote the files with, so the read skips footer
+    * inference, which is a Spark job of its own.
     */
   def registerParquet(spark: SparkSession, entity: String,
-      location: String, schema: Option[StructType] = None): DataFrame = {
-    val df = schema.fold(spark.read)(s => spark.read.schema(s)).parquet(location)
+      location: String, schema: StructType): DataFrame = {
+    val df = spark.read.schema(schema).parquet(location)
     df.createOrReplaceTempView(s"t_$entity")
     df
   }

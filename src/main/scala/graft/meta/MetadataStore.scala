@@ -29,13 +29,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * `createDataFrame(...).write.parquet` path read and update in place
   * (every visible part is read; an update replaces them all).
   *
-  * Each write is published crash-safely: the new part is written to a
-  * hidden sibling `.<name>.tmp`, the live directory is renamed aside to
-  * `.<name>.bak`, the tmp is renamed into place and the backup dropped.
-  * At every instant either the live directory or the backup holds a
-  * complete table; the next access finishes or rolls back a publish a
-  * crash interrupted. Read-modify-write cycles on one path are
-  * serialized within the JVM.
+  * Each write is published crash-safely through
+  * [[graft.operators.MetaParquet.publish]] (hidden tmp sibling, live
+  * directory renamed aside to a backup, tmp renamed in, backup
+  * dropped); the next access finishes or rolls back a publish a crash
+  * interrupted. Read-modify-write cycles on one path are serialized
+  * within the JVM.
   */
 final case class MetaEntry(m_key: String, m_key_type: String, m_value: String)
 
@@ -57,31 +56,18 @@ class MetadataStore(spark: SparkSession, path: String) {
     val p = new Path(path)
     p.getFileSystem(conf).makeQualified(p)
   }
-  private val tmp = new Path(dir.getParent, s".${dir.getName}.tmp")
-  private val bak = new Path(dir.getParent, s".${dir.getName}.bak")
   private val lock = MetadataStore.lockFor(dir)
 
   def init(entries: Seq[MetaEntry]): Unit = write(entries)
 
   def df: DataFrame = {
-    lock.synchronized(recover(fs))
+    lock.synchronized(MetaParquet.recover(fs, dir))
     spark.read.schema(schema).parquet(path)
   }
 
-  /** Finish or roll back a publish that a crash interrupted: a backup
-    * beside a live directory is a finished publish's leftover; a
-    * backup alone is the last complete table.
-    */
-  private def recover(f: FileSystem): Unit =
-    if (f.exists(bak)) {
-      if (f.exists(dir)) f.delete(bak, true)
-      else if (!f.rename(bak, dir))
-        sys.error(s"MetadataStore: cannot restore $dir from $bak")
-    }
-
   private def readAll(): Seq[MetaEntry] = lock.synchronized {
     val f = fs
-    recover(f)
+    MetaParquet.recover(f, dir)
     MetaParquet.read(f, conf, dir).map { r =>
       def s(c: String) = r.get(c).map(_.asInstanceOf[String]).orNull
       MetaEntry(s("m_key"), s("m_key_type"), s("m_value"))
@@ -89,18 +75,9 @@ class MetadataStore(spark: SparkSession, path: String) {
   }
 
   private def write(entries: Seq[MetaEntry]): Unit = lock.synchronized {
-    val f = fs
-    recover(f)
-    if (f.exists(tmp) && !f.delete(tmp, true))
-      sys.error(s"MetadataStore: cannot clear $tmp")
-    MetaParquet.write(conf, tmp, fileSchema, cols, entries.map(e =>
+    MetaParquet.publish(fs, conf, dir, fileSchema, cols, entries.map(e =>
       Map[String, Any]("m_key" -> e.m_key, "m_key_type" -> e.m_key_type,
         "m_value" -> e.m_value)))
-    if (f.exists(dir) && !f.rename(dir, bak))
-      sys.error(s"MetadataStore: cannot move $dir aside")
-    if (!f.rename(tmp, dir))
-      sys.error(s"MetadataStore: cannot publish $dir")
-    f.delete(bak, true)
   }
 
   /** `SELECT m_value FROM … WHERE m_key = ?` (reference :105-107). */

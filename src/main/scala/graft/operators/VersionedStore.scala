@@ -3576,7 +3576,8 @@ object VersionedStore {
     * anything — a rejected batch leaves no trace in the log or under
     * data/. Enforcement at the write boundary is what keeps a 100 TB
     * table clean: validating after the fact means a full-table scan
-    * and a mess to unwind.
+    * and a mess to unwind. A write is published crash-safely through
+    * [[MetaParquet.publish]].
     */
   private val constraintCols = Seq(
     MetaParquet.Col("kind", "string"),
@@ -3587,21 +3588,12 @@ object VersionedStore {
 
   def setConstraints(spark: SparkSession, path: String,
       checks: Seq[graft.check.Check]): Unit = {
-    val f = fs(spark)
-    val tmp = new Path(s"$path/.constraints-tmp")
-    val dest = new Path(s"$path/constraints")
-    if (f.exists(tmp) && !f.delete(tmp, true))
-      sys.error(s"VersionedStore.setConstraints: cannot clear $tmp")
-    MetaParquet.write(spark.sparkContext.hadoopConfiguration, tmp,
-      constraintSchema, constraintCols,
+    MetaParquet.publish(fs(spark), spark.sparkContext.hadoopConfiguration,
+      new Path(s"$path/constraints"), constraintSchema, constraintCols,
       checks.map(graft.check.CheckCodec.encode).map {
         case (kind, column, args) => Map[String, Any](
           "kind" -> kind, "column" -> column, "args" -> args)
       })
-    if (f.exists(dest) && !f.delete(dest, true))
-      sys.error(s"VersionedStore.setConstraints: cannot replace $dest")
-    if (!f.rename(tmp, dest))
-      sys.error(s"VersionedStore.setConstraints: cannot publish $dest")
   }
 
   /** The table's persisted constraints (empty if none were set). */
@@ -3609,6 +3601,7 @@ object VersionedStore {
       path: String): Seq[graft.check.Check] = {
     val dest = new Path(s"$path/constraints")
     val f = fs(spark)
+    MetaParquet.recover(f, dest)
     if (!f.exists(dest)) Seq.empty
     else MetaParquet.read(f,
         spark.sparkContext.hadoopConfiguration, dest)
@@ -3624,8 +3617,9 @@ object VersionedStore {
   /** Persist free-form table PROPERTIES (the TBLPROPERTIES of the
     * public designs) beside the log — retention policies, owners,
     * maintenance hints live WITH the table instead of in whichever
-    * job happens to run maintenance. Same tmp+rename publication as
-    * constraints; a full map replace, read-modify-write for updates.
+    * job happens to run maintenance. Published like constraints
+    * ([[MetaParquet.publish]]); a full map replace, read-modify-write
+    * for updates.
     */
   private val propCols = Seq(
     MetaParquet.Col("key", "string"),
@@ -3635,19 +3629,10 @@ object VersionedStore {
 
   def setProperties(spark: SparkSession, path: String,
       props: Map[String, String]): Unit = {
-    val f = fs(spark)
-    val tmp = new Path(s"$path/.properties-tmp")
-    val dest = new Path(s"$path/properties")
-    if (f.exists(tmp) && !f.delete(tmp, true))
-      sys.error(s"VersionedStore.setProperties: cannot clear $tmp")
-    MetaParquet.write(spark.sparkContext.hadoopConfiguration, tmp,
-      propSchema, propCols,
+    MetaParquet.publish(fs(spark), spark.sparkContext.hadoopConfiguration,
+      new Path(s"$path/properties"), propSchema, propCols,
       props.toSeq.map { case (k, v) =>
         Map[String, Any]("key" -> k, "value" -> v) })
-    if (f.exists(dest) && !f.delete(dest, true))
-      sys.error(s"VersionedStore.setProperties: cannot replace $dest")
-    if (!f.rename(tmp, dest))
-      sys.error(s"VersionedStore.setProperties: cannot publish $dest")
   }
 
   /** The table's persisted properties (empty if none were set). */
@@ -3655,6 +3640,7 @@ object VersionedStore {
       path: String): Map[String, String] = {
     val dest = new Path(s"$path/properties")
     val f = fs(spark)
+    MetaParquet.recover(f, dest)
     if (!f.exists(dest)) Map.empty
     else MetaParquet.read(f,
         spark.sparkContext.hadoopConfiguration, dest)

@@ -95,7 +95,7 @@ object IngestPipeline {
 
     // 7. external table over the staged partition (reference :145-206)
     val staged = ExternalTable.registerParquet(spark, conf.entity,
-      stagedPath, Some(raw.schema))
+      stagedPath, raw.schema)
 
     // 8. validation checkpoint (data_validator.py:14-39) — one pass
     val results =

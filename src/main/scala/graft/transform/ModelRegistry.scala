@@ -74,11 +74,16 @@ final case class IncrementalModel(
   * Concurrency (dbt's `threads`): [[run]] resolves every registered
   * model on its own thread, and [[test]] also evaluates each model's
   * suite on that thread as soon as the model is built, so independent
-  * models and suites overlap their Spark jobs. Each call builds a pool sized to its work (at most the
-  * context's default parallelism) and shuts it down before it returns
-  * or throws. The pool's threads are created from the calling thread,
-  * so they inherit its Spark local properties (job group, description,
-  * scheduler pool) and active session.
+  * models and suites overlap their Spark jobs. Each call builds a pool
+  * sized to its work (at most the context's default parallelism) and
+  * shuts it down before it returns or throws. The pool's threads are
+  * created from the calling thread, so they inherit its Spark local
+  * properties (job group, description, scheduler pool) and active
+  * session.
+  *
+  * Ordering: only `ref` orders models. A model that reads another
+  * model by name (`spark.table(...)`, a temp view) instead of through
+  * `ref` races with that model's build.
   *
   * Memoization: a model is claimed once per run() through a promise.
   * The thread that claims it builds it, resolving its own `ref`s inline;
@@ -90,10 +95,14 @@ final case class IncrementalModel(
   * the wait-for chain (claim owner → the claim that owner waits on →
   * …). Reaching itself means a ref cycle, reported as the same
   * `IllegalArgumentException("cycle detected at model: …")` as a cycle
-  * within one thread; it never deadlocks. Failures are rethrown
-  * unwrapped: a failing model fails every model waiting on it with its
-  * original exception, every started task finishes before the call
-  * returns, and the first failure in registration order is rethrown.
+  * within one thread; it never deadlocks.
+  *
+  * Failures: a failing model fails every model that refs it, with its
+  * original exception. Models that do not depend on it still
+  * materialize in the same call: a sibling `Table` is overwritten and a
+  * sibling incremental store advances. Every started task finishes
+  * before the call returns, and the first failure in registration
+  * order is then rethrown, unwrapped.
   */
 class ModelRegistry(spark: SparkSession) {
   import graft.operators.VersionedStore

@@ -504,6 +504,32 @@ class VersionedStoreScaleSpec extends AnyFunSuite with SparkFixture
       (7 * day).toString
   }
 
+  test("a properties or constraints publish cut between its two " +
+      "renames rolls back to the last complete table") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val p = freshPath()
+    VersionedStore.create(spark, p)
+    VersionedStore.setProperties(spark, p, Map("owner" -> "corpus"))
+    VersionedStore.setConstraints(spark, p,
+      Seq(graft.check.NotNull("id")))
+    val f = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    // state after the live dir moved aside and before the new one
+    // moved in
+    f.rename(new Path(s"$p/properties"),
+      new Path(s"$p/.properties.bak")) shouldBe true
+    f.rename(new Path(s"$p/constraints"),
+      new Path(s"$p/.constraints.bak")) shouldBe true
+    VersionedStore.propertiesOf(spark, p) shouldBe Map("owner" -> "corpus")
+    VersionedStore.constraintsOf(spark, p) shouldBe
+      Seq(graft.check.NotNull("id"))
+    f.exists(new Path(s"$p/.properties.bak")) shouldBe false
+    // a replace leaves only the new map and no hidden siblings
+    VersionedStore.setProperties(spark, p, Map("team" -> "search"))
+    VersionedStore.propertiesOf(spark, p) shouldBe Map("team" -> "search")
+    f.listStatus(new Path(p)).map(_.getPath.getName)
+      .filter(_.startsWith(".properties")) shouldBe empty
+  }
+
   // -------------------------------------------- zorder + log stats
 
   test("z-order compaction prunes on BOTH clustered columns where " +

@@ -236,4 +236,26 @@ class ModelRegistrySpec extends AnyFunSuite with SparkFixture with Matchers {
     e shouldBe theSameInstanceAs(boom)
     poolThreads() shouldBe empty
   }
+
+  test("a failing model does not stop an unrelated incremental model: " +
+      "its store still advances once in the same run()") {
+    val s = spark
+    import s.implicits._
+    val store = tmpStore("inc-beside-failure")
+    val boom = new IllegalStateException("model body failed")
+    val reg = new ModelRegistry(spark)
+      .register(Model("bad", Table, _ => throw boom))
+      .register(IncrementalModel("inc_beside", store,
+        build = (_, _) => Seq((1L, 10)).toDF("id", "v")))
+    def versions() = graft.operators.VersionedStore.versions(spark, store).size
+    intercept[IllegalStateException](reg.run()) shouldBe
+      theSameInstanceAs(boom)
+    val v1 = versions()
+    graft.operators.VersionedStore.read(spark, store).count() shouldBe 1
+    intercept[IllegalStateException](reg.run()) shouldBe
+      theSameInstanceAs(boom)
+    versions() shouldBe v1 + 1
+    graft.operators.VersionedStore.read(spark, store).count() shouldBe 2
+    poolThreads() shouldBe empty
+  }
 }
