@@ -110,9 +110,6 @@ final case class CheckResult(check: String, violations: Long) {
 
 object CheckRunner {
 
-  /** Evaluate a suite against a DataFrame in a single aggregation pass
-    * (plus zero-cost metadata checks). Returns one result per check.
-    */
   /** Duplicate ids (e.g. two InSet checks on the same column) would
     * silently collapse into one result row and emit duplicate agg
     * column names — reject the suite up front instead.
@@ -126,21 +123,36 @@ object CheckRunner {
         "give conflicting checks distinct columns/parameters")
   }
 
-  def run(df: DataFrame, checks: Seq[Check]): Seq[CheckResult] = {
+  /** The suite's violation-count aggregates, one per row-level or
+    * [[Unique]] check, each named by its check id (distinct ids
+    * required). `exact` counts [[Unique]] violations with a distinct
+    * aggregate; otherwise with `approx_count_distinct` (HLL, ±2.5%),
+    * the only form observed metrics accept.
+    */
+  private def aggCols(checks: Seq[Check], exact: Boolean): Seq[Column] = {
     requireDistinctIds(checks)
+    checks.collect {
+      case rc: RowCheck => rc.agg
+      case u: Unique =>
+        val key = struct(u.columns.map(col): _*)
+        if (exact) (count(lit(1)) - count_distinct(key)).as(u.id)
+        else greatest(count(lit(1)) - approx_count_distinct(key),
+          lit(0L)).as(u.id)
+    }
+  }
+
+  /** Evaluate a suite against a DataFrame in a single aggregation pass
+    * (plus zero-cost metadata checks). Returns one result per check.
+    */
+  def run(df: DataFrame, checks: Seq[Check]): Seq[CheckResult] = {
+    val aggs = aggCols(checks, exact = true)
     val metaResults = checks.collect { case c @ ColumnsMatchOrdered(exp) =>
       CheckResult(c.id, if (df.schema.fieldNames.sameElements(exp)) 0L else 1L)
     }
-    val aggCols = checks.collect {
-      case rc: RowCheck => rc.agg
-      case u: Unique =>
-        (count(lit(1)) - count_distinct(struct(u.columns.map(col): _*)))
-          .as(u.id)
-    }
     val aggResults =
-      if (aggCols.isEmpty) Seq.empty
+      if (aggs.isEmpty) Seq.empty
       else {
-        val row = df.agg(aggCols.head, aggCols.tail: _*).head()
+        val row = df.agg(aggs.head, aggs.tail: _*).head()
         row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
           CheckResult(n, if (row.isNullAt(i)) 0L else row.getLong(i))
         }.toSeq
@@ -154,15 +166,9 @@ object CheckRunner {
     * analog of data_validator.py:29-39) — used by declared queries.
     */
   def reportDf(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    requireDistinctIds(checks)
-    val aggCols = checks.collect {
-      case rc: RowCheck => rc.agg
-      case u: Unique =>
-        (count(lit(1)) - count_distinct(struct(u.columns.map(col): _*)))
-          .as(u.id)
-    }
-    require(aggCols.nonEmpty, "no aggregable checks in suite")
-    df.agg(aggCols.head, aggCols.tail: _*)
+    val aggs = aggCols(checks, exact = true)
+    require(aggs.nonEmpty, "no aggregable checks in suite")
+    df.agg(aggs.head, aggs.tail: _*)
   }
 
   def success(results: Seq[CheckResult]): Boolean = results.forall(_.passed)
@@ -183,18 +189,10 @@ object CheckRunner {
     */
   def observed(df: DataFrame, checks: Seq[Check])
       : (DataFrame, org.apache.spark.sql.Observation) = {
-    requireDistinctIds(checks)
-    val aggCols = checks.collect {
-      case rc: RowCheck => rc.agg
-      case u: Unique =>
-        greatest(
-          count(lit(1)) -
-            approx_count_distinct(struct(u.columns.map(col): _*)),
-          lit(0L)).as(u.id)
-    }
-    require(aggCols.nonEmpty, "no aggregable checks in suite")
+    val aggs = aggCols(checks, exact = false)
+    require(aggs.nonEmpty, "no aggregable checks in suite")
     val obs = org.apache.spark.sql.Observation()
-    (df.observe(obs, aggCols.head, aggCols.tail: _*), obs)
+    (df.observe(obs, aggs.head, aggs.tail: _*), obs)
   }
 
   /** Collect [[observed]] metrics after the action (blocks until the

@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** External-table registration — the Spark-native form of the
   * reference's `CREATE OR REPLACE EXTERNAL TABLE data_stage.
@@ -28,18 +28,8 @@ object ExternalTable {
     */
   def register(spark: SparkSession, entity: String, location: String,
       delimiter: String = ",", quote: String = "\"",
-      escape: String = "\""): DataFrame = {
-    val schema = SchemaInference.inferHeaderSchema(spark, location, delimiter)
-    val df = spark.read
-      .option("header", "true")
-      .option("delimiter", delimiter)
-      .option("quote", quote)
-      .option("escape", escape)
-      .schema(schema)
-      .csv(location)
-    df.createOrReplaceTempView(s"t_$entity")
-    df
-  }
+      escape: String = "\""): DataFrame =
+    csvView(spark, entity, location, delimiter, quote, escape, None)
 
   /** [[register]] with PERMISSIVE corrupt-row capture: a malformed
     * line (excess tokens, broken quoting) is neither dropped silently
@@ -51,20 +41,33 @@ object ExternalTable {
     */
   def registerPermissive(spark: SparkSession, entity: String,
       location: String, delimiter: String = ",", quote: String = "\"",
-      escape: String = "\""): DataFrame = {
-    val schema = SchemaInference
-      .inferHeaderSchema(spark, location, delimiter)
-      .add("_corrupt_record", org.apache.spark.sql.types.StringType,
-        nullable = true)
-    val df = spark.read
+      escape: String = "\""): DataFrame =
+    csvView(spark, entity, location, delimiter, quote, escape,
+      Some("_corrupt_record"))
+
+  /** The CSV scan both temp-view registrations share: header row,
+    * dialect options and the header-sniffed all-string schema,
+    * registered as `t_<entity>`. `corrupt` names the column a
+    * PERMISSIVE scan parks malformed lines in (None: no capture).
+    */
+  private def csvView(spark: SparkSession, entity: String,
+      location: String, delimiter: String, quote: String,
+      escape: String, corrupt: Option[String]): DataFrame = {
+    val header =
+      SchemaInference.inferHeaderSchema(spark, location, delimiter)
+    val reader = spark.read
       .option("header", "true")
       .option("delimiter", delimiter)
       .option("quote", quote)
       .option("escape", escape)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(schema)
-      .csv(location)
+    val df = corrupt match {
+      case None => reader.schema(header).csv(location)
+      case Some(c) => reader
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", c)
+        .schema(header.add(c, StringType, nullable = true))
+        .csv(location)
+    }
     df.createOrReplaceTempView(s"t_$entity")
     df
   }

@@ -8,9 +8,9 @@ import org.apache.hadoop.fs.Path
   * embeddings, rollups); "which data trained this model" is only
   * answerable if the EXACT version of every input is recorded at
   * launch, atomically, in one place. A manifest is a KB-scale parquet
-  * of (store_path, version) rows published with the same tmp+rename
-  * commit as a store version: readers see the whole pin set or
-  * nothing.
+  * of (store_path, version) rows published through
+  * [[MetaParquet.publish]]: readers see the whole previous pin set or
+  * the whole new one, never a partial or missing manifest.
   *
   * Reading THROUGH the manifest ([[readAll]]) serves each store at
   * its pinned version regardless of any appends, merges, deletes, or
@@ -22,43 +22,39 @@ import org.apache.hadoop.fs.Path
   */
 object StoreManifest {
 
-  /** Pin each store's CURRENT latest version into a manifest at
-    * `manifestPath`. Returns the pinned (store → version) map.
-    */
   private val cols = Seq(
     MetaParquet.Col("store_path", "string"),
     MetaParquet.Col("version", "long"))
   private val schema = MetaParquet.schemaOf("graft_manifest", cols)
 
+  /** Pin each store's CURRENT latest version into a manifest at
+    * `manifestPath`. Returns the pinned (store → version) map. The
+    * manifest is published through [[MetaParquet.publish]]: a crash
+    * mid-publish leaves the previous pin set recoverable, never none.
+    */
   def pin(spark: SparkSession, stores: Seq[String],
       manifestPath: String): Map[String, Long] = {
     val pinned = stores.map(p =>
       p -> VersionedStore.latestVersion(spark, p))
-    val f = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$manifestPath.tmp")
-    val dest = new Path(manifestPath)
-    if (f.exists(tmp) && !f.delete(tmp, true))
-      sys.error(s"StoreManifest.pin: cannot clear $tmp")
+    val conf = spark.sparkContext.hadoopConfiguration
     // KB-scale metadata: driver-side parquet write (same layout the
     // previous coalesce(1) Spark write produced), no Spark job
-    MetaParquet.write(spark.sparkContext.hadoopConfiguration, tmp,
-      schema, cols, pinned.map { case (p, v) =>
+    MetaParquet.publish(org.apache.hadoop.fs.FileSystem.get(conf), conf,
+      new Path(manifestPath), schema, cols, pinned.map { case (p, v) =>
         Map[String, Any]("store_path" -> p, "version" -> v) })
-    if (f.exists(dest) && !f.delete(dest, true))
-      sys.error(s"StoreManifest.pin: cannot replace $dest")
-    if (!f.rename(tmp, dest))
-      sys.error(s"StoreManifest.pin: cannot publish $dest")
     pinned.toMap
   }
 
-  /** The pinned versions recorded in a manifest. */
+  /** The pinned versions recorded in a manifest (after finishing or
+    * rolling back a publish a crash interrupted).
+    */
   def versions(spark: SparkSession,
       manifestPath: String): Map[String, Long] = {
-    val f = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    MetaParquet.read(f, spark.sparkContext.hadoopConfiguration,
-        new Path(manifestPath))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val f = org.apache.hadoop.fs.FileSystem.get(conf)
+    val dir = new Path(manifestPath)
+    MetaParquet.recover(f, dir)
+    MetaParquet.read(f, conf, dir)
       .map(m => m("store_path").asInstanceOf[String] ->
         m("version").asInstanceOf[Long]).toMap
   }

@@ -241,22 +241,24 @@ object VersionedStore {
   /** One column's zone in a commit record: `t` = "l" (integral —
     * `lo`/`hi` are decimal-string longs) or "s" (string — raw
     * values, UTF8 binary order, the order Spark's min/max aggregates
-    * use). Multi-column and string zones are what let
-    * [[readRange]]/[[readRangeStr]]/[[merge]] prune on more than one
-    * key and on string keys.
+    * use). The zone is the ONLY per-group min/max the log carries —
+    * a `statsCol` hull is an ordinary "l" zone. Multi-column and
+    * string zones are what let [[readRange]]/[[readRangeStr]]/
+    * [[merge]] prune on more than one key and on string keys.
     */
   final case class ColZone(c: String, t: String, lo: String, hi: String)
 
   /** Per-file-group zone stats carried in the commit record,
-    * computed from the group's written parquet (footer-cheap) at
-    * commit time. `stats` is the legacy single-numeric-column form
-    * (kept as the store's clustering discipline marker —
-    * [[storeStatsCol]]); `zones` carries any number of additional
-    * per-column (lo, hi) hulls, integral or string. Absent stats =
-    * unstatted group (always a candidate for any key range).
+    * computed from the group's written parquet at commit time.
+    * `zones` carries any number of per-column (lo, hi) hulls,
+    * integral or string; a group without a zone on a column is
+    * always a candidate for any key range on it. `stats` is only a
+    * NAME: the `statsCol` marker of the store's clustering
+    * discipline ([[storeStatsCol]]), set when the group carries an
+    * "l" zone on that column — its hull is that zone.
     */
   final case class GroupAdd(fid: Long, n: Long,
-      stats: Option[(String, Long, Long)] = None,
+      stats: Option[String] = None,
       schemaJson: Option[String] = None,
       zones: Seq[ColZone] = Nil,
       /** Foreign data location (absolute dir) for groups this store
@@ -535,34 +537,25 @@ object VersionedStore {
     val tmp = new Path(s"$path/log/.tmp-" +
       s"${java.util.UUID.randomUUID}-${versionName(v)}")
     val stamp = if (ts >= 0) ts else System.currentTimeMillis()
-    def baseRow(action: String): Map[String, Any] =
-      Map[String, Any]("action" -> action, "fid" -> -1L,
-        "rows" -> 0L, "txn" -> txn, "ts" -> stamp,
-        "zc" -> Nil, "zt" -> Nil, "zlo" -> Nil, "zhi" -> Nil,
-        "bc" -> Nil) ++ txnApp.map("txn_app" -> _) ++
-        (if (neutral) Seq("neutral" -> 1L) else Nil)
-    def addRow(action: String, a: GroupAdd): Map[String, Any] =
-      baseRow(action) ++ Map[String, Any](
-        "fid" -> a.fid, "rows" -> a.n,
-        "zc" -> a.zones.map(_.c), "zt" -> a.zones.map(_.t),
-        "zlo" -> a.zones.map(_.lo), "zhi" -> a.zones.map(_.hi),
-        "bc" -> a.blooms) ++
-        a.stats.toSeq.flatMap { case (c, l, h) =>
-          Seq("stat_col" -> c, "stat_min" -> l, "stat_max" -> h) } ++
-        a.schemaJson.map("schema_json" -> _) ++
-        a.loc.map("loc" -> _)
-    val rows: Seq[Map[String, Any]] =
-      adds.map(addRow("add", _)) ++ dvs.map(addRow("dv", _)) ++
-      removes.map(fid => baseRow("remove") + ("fid" -> fid)) ++
+    def rec(action: String, fid: Long = -1L,
+        schemaJson: Option[String] = None,
+        ren: Option[(String, String)] = None): LogRec =
+      LogRec(v, action, fid, 0L, txn, None, schemaJson, stamp,
+        ren = ren, txnApp = txnApp, neutral = neutral)
+    def addRec(action: String, a: GroupAdd): LogRec =
+      rec(action, a.fid, a.schemaJson).copy(rows = a.n,
+        stats = a.stats, zones = a.zones, loc = a.loc,
+        blooms = a.blooms)
+    val recs: Seq[LogRec] =
+      adds.map(addRec("add", _)) ++ dvs.map(addRec("dv", _)) ++
+      removes.map(rec("remove", _)) ++
       renames.map { case (from, to, newSchemaJson) =>
-        baseRow("rename") ++ Map[String, Any](
-          "schema_json" -> newSchemaJson,
-          "ren_from" -> from, "ren_to" -> to)
+        rec("rename", schemaJson = Some(newSchemaJson),
+          ren = Some((from, to)))
       } ++
       drops.map { case (logical, phys, newSchemaJson) =>
-        baseRow("drop") ++ Map[String, Any](
-          "schema_json" -> newSchemaJson,
-          "ren_from" -> logical, "ren_to" -> phys)
+        rec("drop", schemaJson = Some(newSchemaJson),
+          ren = Some((logical, phys)))
       } ++
       // the anchor's supremacy is enforced by [[actionPriority]]
       // (action "schema" sorts above every other record within a
@@ -571,13 +564,12 @@ object VersionedStore {
       // republished add records carry each group's ORIGINAL schema,
       // which is stale whenever the newest schema-bearing commit at
       // the restored version was a pure-metadata rename/drop)
-      schemaAnchor.toSeq.map(sj =>
-        baseRow("schema") + ("schema_json" -> sj))
+      schemaAnchor.toSeq.map(sj => rec("schema", schemaJson = Some(sj)))
     // driver-side metadata write: same parquet layout as the previous
     // coalesce(1) Spark write (one part file in the record dir), at
     // file-I/O latency instead of a Spark job per commit
     MetaParquet.write(spark.sparkContext.hadoopConfiguration, tmp,
-      logSchema, logCols, rows)
+      logSchema, logCols, recs.map(encode))
     val dest = new Path(s"$path/log/${versionName(v)}")
     // publication is the LogStore's exclusive-winner primitive:
     // `false` = a concurrent writer owns this version (the OCC loop
@@ -600,10 +592,11 @@ object VersionedStore {
 
   /** One parsed commit-record row. `txn` -1, `stats`/`zones` empty,
     * `ts` -1, and `schemaJson` None for records written before those
-    * columns existed.
+    * columns existed. `stats` is the `statsCol` marker's name only;
+    * its hull is the "l" entry of `zones` on that column.
     */
   private final case class LogRec(v: Long, action: String, fid: Long,
-      rows: Long, txn: Long, stats: Option[(String, Long, Long)],
+      rows: Long, txn: Long, stats: Option[String],
       schemaJson: Option[String], ts: Long = -1L,
       zones: Seq[ColZone] = Nil, loc: Option[String] = None,
       blooms: Seq[String] = Nil,
@@ -675,9 +668,31 @@ object VersionedStore {
   private val ckptCols = MetaParquet.Col("v", "long") +: logCols
   private val ckptSchema = MetaParquet.schemaOf("graft_ckpt", ckptCols)
 
+  /** Encode one [[LogRec]] as a raw metadata row (absent = NULL) —
+    * the one encoder behind both [[commitAt]] and [[checkpoint]]
+    * (which adds the record's version as `v`). `stat_min`/`stat_max`
+    * are never written: the marker's hull rides in the zones.
+    */
+  private def encode(r: LogRec): Map[String, Any] =
+    Map[String, Any]("action" -> r.action, "fid" -> r.fid,
+      "rows" -> r.rows, "txn" -> r.txn, "ts" -> r.ts,
+      "zc" -> r.zones.map(_.c), "zt" -> r.zones.map(_.t),
+      "zlo" -> r.zones.map(_.lo), "zhi" -> r.zones.map(_.hi),
+      "bc" -> r.blooms) ++
+      r.stats.map("stat_col" -> _) ++
+      r.schemaJson.map("schema_json" -> _) ++
+      r.loc.map("loc" -> _) ++
+      r.ren.toSeq.flatMap { case (from, to) =>
+        Seq("ren_from" -> from, "ren_to" -> to) } ++
+      r.txnApp.map("txn_app" -> _) ++
+      (if (r.neutral) Seq("neutral" -> 1L) else Nil)
+
   /** Decode one raw metadata row (name→value map; absent = NULL,
     * including columns the file predates) into a [[LogRec]] at
-    * version `v`.
+    * version `v`. Records written before the marker became a name
+    * carry its hull as `stat_min`/`stat_max`; that hull decodes into
+    * one more "l" zone unless the record already has a zone on the
+    * column (the zone wins).
     */
   private def recOf(m: Map[String, Any], v: Long): LogRec = {
     def str(n: String) = m.get(n).map(_.asInstanceOf[String])
@@ -686,13 +701,16 @@ object VersionedStore {
       case Some(s: Seq[_]) => s.map(_.asInstanceOf[String])
       case _ => Nil
     }
-    val stats = str("stat_col").flatMap(c =>
-      for (l <- lng("stat_min"); h <- lng("stat_max"))
-        yield (c, l, h))
     val (zc, zt, zlo, zhi) =
       (strs("zc"), strs("zt"), strs("zlo"), strs("zhi"))
-    val zones = zc.indices.map(i =>
+    val typed = zc.indices.map(i =>
       ColZone(zc(i), zt(i), zlo(i), zhi(i)))
+    val oldHull = for (c <- str("stat_col"); l <- lng("stat_min");
+        h <- lng("stat_max") if !typed.exists(_.c.equalsIgnoreCase(c)))
+      yield ColZone(c, "l", l.toString, h.toString)
+    val zones = typed ++ oldHull
+    val stats = str("stat_col").filter(c =>
+      zones.exists(z => z.c == c && z.t == "l"))
     val ren = for (f <- str("ren_from"); t <- str("ren_to"))
       yield (f, t)
     LogRec(v, str("action").getOrElse(
@@ -799,24 +817,8 @@ object VersionedStore {
     // checkpointers must never stage into each other's dir
     val tmp = new Path(s"$path/log/.tmp-ckpt-" +
       s"${java.util.UUID.randomUUID}-${versionName(v)}")
-    val rows: Seq[Map[String, Any]] = recs.map { r =>
-      Map[String, Any]("v" -> r.v, "action" -> r.action,
-        "fid" -> r.fid, "rows" -> r.rows, "txn" -> r.txn,
-        "ts" -> r.ts,
-        "zc" -> r.zones.map(_.c), "zt" -> r.zones.map(_.t),
-        "zlo" -> r.zones.map(_.lo), "zhi" -> r.zones.map(_.hi),
-        "bc" -> r.blooms) ++
-        r.stats.toSeq.flatMap { case (c, l, h) =>
-          Seq("stat_col" -> c, "stat_min" -> l, "stat_max" -> h) } ++
-        r.schemaJson.map("schema_json" -> _) ++
-        r.loc.map("loc" -> _) ++
-        r.ren.toSeq.flatMap { case (from, to) =>
-          Seq("ren_from" -> from, "ren_to" -> to) } ++
-        r.txnApp.map("txn_app" -> _) ++
-        (if (r.neutral) Seq("neutral" -> 1L) else Nil)
-    }
     MetaParquet.write(spark.sparkContext.hadoopConfiguration, tmp,
-      ckptSchema, ckptCols, rows)
+      ckptSchema, ckptCols, recs.map(r => encode(r) + ("v" -> r.v)))
     val dest = new Path(s"$path/log/ckpt-${versionName(v)}")
     // derived data, but still published through the LogStore so an
     // object-store deployment gets an atomic (never torn) snapshot;
@@ -980,29 +982,30 @@ object VersionedStore {
       locs.get(fid).getOrElse(dataDir(path, fid).toString))
   }
 
-  /** Zone stats of every statted file-group (fids are never reused
-    * once committed, so at most one add record per fid). Records
-    * written before the stats columns existed read as NULL under
-    * mergeSchema → simply absent here.
+  /** The `statsCol` marker of every marked file-group (fids are
+    * never reused once committed, so at most one add record per
+    * fid). Records written before the marker existed are simply
+    * absent here.
     */
-  private def groupStats(spark: SparkSession, path: String)
-      : Map[Long, (String, Long, Long)] =
+  private def groupStats(spark: SparkSession,
+      path: String): Map[Long, String] =
     logRecords(spark, path)
       .collect { case r if r.action == "add" && r.stats.isDefined =>
         r.fid -> r.stats.get }
       .toMap
 
   /** The store's maintained stats column, if EVERY live file-group
-    * carries stats on the same column — mutators use this to keep
-    * the discipline self-propagating (their new groups get stats on
-    * the same column), and key-range pruning is only sound when no
-    * live group is a stats blind spot.
+    * carries the marker on the same column — mutators use this to
+    * keep the discipline self-propagating (their new groups get the
+    * marker and its "l" zone on the same column), and key-range
+    * pruning is only sound when no live group is a blind spot. The
+    * marker is a name; the hull it stands for is the group's zone.
     */
   def storeStatsCol(spark: SparkSession,
       path: String): Option[String] = {
     val live = liveFids(spark, path, latestVersion(spark, path))
     val stats = groupStats(spark, path)
-    val cols = live.map(stats.get(_).map(_._1))
+    val cols = live.map(stats.get)
     if (live.nonEmpty && cols.forall(_ == cols.head)) cols.head
     else None
   }
@@ -1026,58 +1029,93 @@ object VersionedStore {
       .compareTo(org.apache.spark.unsafe.types.UTF8String
         .fromString(b))
 
-  /** Live file-groups whose `keyCol` zone [min,max] overlaps
-    * [lo,hi]; unstatted groups are always candidates. Consults BOTH
-    * the legacy single-numeric stat and the multi-column zones. This
-    * is the 100 TB lever for [[merge]]/[[deleteWhere]]: a keyed
+  /** Live file-groups at `v` whose `keyCol` zone of type `t`
+    * satisfies `overlaps`; groups without such a zone are always
+    * candidates (sound: pruning only ever weakens).
+    */
+  private def zoneCandidates(spark: SparkSession, path: String,
+      v: Long, keyCol: String, t: String)(
+      overlaps: ColZone => Boolean): Seq[Long] = {
+    val pk = physOf(spark, path, v, keyCol) // zones carry PHYSICAL names
+    val zones = groupZones(spark, path)
+    liveFids(spark, path, v).filter(fid =>
+      zones.getOrElse(fid, Nil).find(z => z.c == pk && z.t == t)
+        .forall(overlaps))
+  }
+
+  /** Live file-groups whose integral `keyCol` zone [min,max]
+    * overlaps [lo,hi]; groups without that zone are always
+    * candidates. A `statsCol` hull is such a zone like any other.
+    * This is the 100 TB lever for [[merge]]/[[deleteWhere]]: a keyed
     * mutation against a range-clustered store touches O(overlapping
     * groups), never O(table).
     */
   private[graft] def candidateFids(spark: SparkSession,
       path: String, v: Long, keyCol: String, lo: Long,
-      hi: Long): Seq[Long] = {
-    val pk = physOf(spark, path, v, keyCol) // zones carry PHYSICAL names
-    val stats = groupStats(spark, path)
-    val zones = groupZones(spark, path)
-    liveFids(spark, path, v).filter { fid =>
-      val legacyOk = stats.get(fid) match {
-        case Some((c, mn, mx)) if c == pk => mx >= lo && mn <= hi
-        case _ => true
-      }
-      val zoneOk = zones.getOrElse(fid, Nil)
-        .find(z => z.c == pk && z.t == "l") match {
-        case Some(z) => z.hi.toLong >= lo && z.lo.toLong <= hi
-        case None => true
-      }
-      legacyOk && zoneOk
-    }
-  }
+      hi: Long): Seq[Long] =
+    zoneCandidates(spark, path, v, keyCol, "l")(z =>
+      z.hi.toLong >= lo && z.lo.toLong <= hi)
 
   /** String-key variant of [[candidateFids]]: live groups whose
     * `keyCol` STRING zone overlaps [lo,hi] in UTF8 binary order;
     * groups without a string zone on the column are always
-    * candidates (sound: pruning only ever weakens).
+    * candidates.
     */
   private[graft] def candidateFidsStr(spark: SparkSession,
       path: String, v: Long, keyCol: String, lo: String,
-      hi: String): Seq[Long] = {
+      hi: String): Seq[Long] =
+    zoneCandidates(spark, path, v, keyCol, "s")(z =>
+      sCmp(z.hi, lo) >= 0 && sCmp(z.lo, hi) <= 0)
+
+  /** True when `keyCol`'s physical column carries a zone in some
+    * group live at `v` (a `statsCol` hull included) — the test that
+    * arms zone-pruned key reads and keyed mutations.
+    */
+  private def zoneArmed(spark: SparkSession, path: String, v: Long,
+      keyCol: String): Boolean = {
     val pk = physOf(spark, path, v, keyCol)
     val zones = groupZones(spark, path)
-    liveFids(spark, path, v).filter { fid =>
-      zones.getOrElse(fid, Nil)
-        .find(z => z.c == pk && z.t == "s") match {
-        case Some(z) => sCmp(z.hi, lo) >= 0 && sCmp(z.lo, hi) <= 0
-        case None => true
-      }
-    }
+    liveFids(spark, path, v).exists(fid =>
+      zones.getOrElse(fid, Nil).exists(_.c == pk))
   }
 
-  /** Write `df` as file-group `fid` and return its commit entry —
-    * count and (when `statsCol` set) min/max are computed from the
-    * WRITTEN parquet, so `df` is evaluated exactly once and the
-    * count is footer-cheap. An empty or all-NULL stat column commits
-    * the group unstatted (always a candidate), never a bogus zone.
+  /** Live file-groups a single-key mutation's detection scan must
+    * read. When the key is zone-armed, the span of `keys`' key
+    * values prunes to the groups whose zone overlaps it — string
+    * zones for a string key, integral zones otherwise; a span with
+    * no non-NULL key matches nothing. `span` is that (min, max) row
+    * when the caller already computed it (its first two fields);
+    * otherwise one aggregate over `keys` computes it. Any other key
+    * shape reads every live group.
     */
+  private def keySpanFids(spark: SparkSession, path: String, v: Long,
+      keyCols: Seq[String], keys: DataFrame,
+      span: Option[org.apache.spark.sql.Row] = None): Seq[Long] =
+    keyCols match {
+      case Seq(c) if zoneArmed(spark, path, v, c) =>
+        val isStr = keys.schema(c).dataType ==
+          org.apache.spark.sql.types.StringType
+        val r = span.getOrElse {
+          val aggs = keySpanAggs(keys, c)
+          keys.agg(aggs.head, aggs.tail: _*).head
+        }
+        if (r.isNullAt(0)) Seq.empty
+        else if (isStr)
+          candidateFidsStr(spark, path, v, c, r.getString(0),
+            r.getString(1))
+        else candidateFids(spark, path, v, c, r.getLong(0),
+          r.getLong(1))
+      case _ => liveFids(spark, path, v)
+    }
+
+  /** (min, max) of key column `c` in the form its zones compare:
+    * raw strings for a string key, longs otherwise.
+    */
+  private def keySpanAggs(keys: DataFrame, c: String): Seq[Column] =
+    if (keys.schema(c).dataType == org.apache.spark.sql.types.StringType)
+      Seq(min(col(c)), max(col(c)))
+    else Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))
+
   /** Which zone type a column's declared dtype gets: integral (and
     * date — days since epoch) → "l", string → "s", anything else →
     * no zone (None). Zone bounds are engine-portable scalars, never
@@ -1108,6 +1146,33 @@ object VersionedStore {
     Seq(min(v).cast("string").as(s"_zlo_$c"),
       max(v).cast("string").as(s"_zhi_$c"))
   }
+
+  /** The zones of one written group from its [[zoneAggs]] results
+    * (`agg` looks a result up by name). An empty or all-NULL column
+    * commits no zone for that column (the group stays a candidate
+    * for any range), never a bogus hull — the parquet-footer
+    * convention.
+    */
+  private def zonesOf(zcs: Seq[(String, String)], n: Long,
+      agg: String => Any): Seq[ColZone] =
+    zcs.flatMap { case (c, t) =>
+      val lo = agg(s"_zlo_$c")
+      if (n == 0 || lo == null) None
+      else Some(ColZone(c, t, lo.asInstanceOf[String],
+        agg(s"_zhi_$c").asInstanceOf[String]))
+    }
+
+  /** The `statsCol` marker a group of `df` records: the column's name
+    * when the group got an "l" zone on it and the column is integral.
+    * An empty or all-NULL group stays unmarked, and so does a column
+    * of any other type — a date's day-number zone is still written,
+    * but a caller's long key range could mean other units.
+    */
+  private def markerOf(df: DataFrame, statsCol: Option[String],
+      zones: Seq[ColZone]): Option[String] =
+    statsCol.filter(c =>
+      df.schema(c).dataType != org.apache.spark.sql.types.DateType &&
+        zones.exists(z => z.c == c && z.t == "l"))
 
   /** Columns the sketch Bloom filter supports (integral and string —
     * dates and floats have no put/mightContain form).
@@ -1284,6 +1349,11 @@ object VersionedStore {
           orderOf.getOrElse(f.name, Int.MaxValue)))
     }
 
+  /** Write `df` as file-group `fid` and return its commit entry —
+    * the count and the zone hulls (the `statsCol` hull among them)
+    * ride the write job as observed metrics, so `df` is evaluated
+    * exactly once.
+    */
   private def writeGroup(df: DataFrame, path: String, fid: Long,
       statsCol: Option[String],
       zoneCols: Seq[String] = Nil,
@@ -1307,11 +1377,12 @@ object VersionedStore {
     // pre-drop names) — a batch no longer carries them, so they are
     // filtered, never aggregated against a missing column
     val pStatsCol = statsCol.map(phys).filter(pdf.columns.contains)
-    val pZoneCols = zoneCols.map(phys).filter(pdf.columns.contains)
+    val pZoneCols = (zoneCols.map(phys) ++ pStatsCol)
+      .filter(pdf.columns.contains)
     val pBloomCols = bloomCols.map(phys)
     val zcs = pZoneCols.distinct
       .flatMap(c => zoneTypeOf(pdf, c).map(c -> _))
-    // count/stats/zone hulls ride the WRITE job itself as observed
+    // count/zone hulls ride the WRITE job itself as observed
     // metrics (CollectMetrics) instead of a second read-back job per
     // group: the metrics see exactly the rows the writer persists
     // (parquet round-trips every supported type losslessly, so the
@@ -1324,9 +1395,6 @@ object VersionedStore {
     // spark.speculation must pin it off for store write jobs (it is
     // off by default, and off in the driver's local[*] contract).
     val aggs = Seq(count(lit(1)).as("n")) ++
-      pStatsCol.toSeq.flatMap(c => Seq(
-        min(col(c)).cast("long").as("_lo"),
-        max(col(c)).cast("long").as("_hi"))) ++
       zcs.flatMap { case (c, _) => zoneAggs(pdf, c) }
     val obs = org.apache.spark.sql.Observation(
       s"vs-write-$fid-${java.util.UUID.randomUUID}")
@@ -1334,21 +1402,8 @@ object VersionedStore {
       .write.mode("overwrite").parquet(dataDir(path, fid).toString)
     val r = obs.get
     val n = r("n").asInstanceOf[Long]
-    val legacy = pStatsCol.flatMap { c =>
-      if (n == 0 || r("_lo") == null) None
-      else Some((c, r("_lo").asInstanceOf[Long],
-        r("_hi").asInstanceOf[Long]))
-    }
-    val zones = zcs.flatMap { case (c, t) =>
-      // an empty or all-NULL column commits no zone for that column
-      // (the group stays a candidate for any range), never a bogus
-      // hull — the parquet-footer convention
-      val lo = r(s"_zlo_$c")
-      if (n == 0 || lo == null) None
-      else Some(ColZone(c, t, lo.asInstanceOf[String],
-        r(s"_zhi_$c").asInstanceOf[String]))
-    }
-    GroupAdd(fid, n, legacy, sj, zones,
+    val zones = zonesOf(zcs, n, r)
+    GroupAdd(fid, n, markerOf(pdf, pStatsCol, zones), sj, zones,
       blooms = buildBlooms(spark, path, fid, n, pBloomCols))
   }
 
@@ -1412,32 +1467,20 @@ object VersionedStore {
     val statsCol = storeStatsCol(spark, path)
       .filter(written.columns.contains)
     val propag = storePropagation(spark, path)
-    val zoneCols = (propag._1 ++ clusterByOf(spark, path)
+    val zoneCols = (propag._1 ++ statsCol ++ clusterByOf(spark, path)
       .map(c => columnMapping(spark, path).getOrElse(c, c)))
       .distinct.filter(written.columns.contains)
     val bloomCols = propag._2
     val sj = Some(recordedSchema(spark, path, logical.schema).json)
-    val zcs = zoneCols.distinct
-      .flatMap(c => zoneTypeOf(written, c).map(c -> _))
+    val zcs = zoneCols.flatMap(c => zoneTypeOf(written, c).map(c -> _))
     val aggs = Seq(count(lit(1)).as("n")) ++
-      statsCol.toSeq.flatMap(c => Seq(
-        min(col(c)).cast("long").as("_lo"),
-        max(col(c)).cast("long").as("_hi"))) ++
       zcs.flatMap { case (c, _) => zoneAggs(written, c) }
     val r = written.agg(aggs.head, aggs.tail: _*).head
     val n = r.getLong(0)
-    val legacy = statsCol.flatMap { c =>
-      if (n == 0 || r.isNullAt(1)) None
-      else Some((c, r.getLong(1), r.getLong(2)))
-    }
-    val base = 1 + (if (statsCol.isDefined) 2 else 0)
-    val zones = zcs.zipWithIndex.flatMap { case ((c, t), i) =>
-      if (n == 0 || r.isNullAt(base + 2 * i)) None
-      else Some(ColZone(c, t, r.getString(base + 2 * i),
-        r.getString(base + 2 * i + 1)))
-    }
-    commitRetrying(spark, path, Seq(GroupAdd(fid, n, legacy, sj,
-      zones, blooms = buildBlooms(spark, path, fid, n, bloomCols))),
+    val zones = zonesOf(zcs, n, r.getAs[Any](_))
+    commitRetrying(spark, path, Seq(GroupAdd(fid, n,
+      markerOf(written, statsCol, zones), sj, zones,
+      blooms = buildBlooms(spark, path, fid, n, bloomCols))),
       Nil, txn, txnApp = appOpt)
   }
 
@@ -1757,20 +1800,7 @@ object VersionedStore {
       scanSchema: org.apache.spark.sql.types.StructType): DataFrame = {
     val dirs = groupDirs(spark, path, fids)
     val zones = groupZones(spark, path)
-    // the legacy single-numeric stat (statsCol) is a one-column "l"
-    // hull — fold it in so stat-armed-but-zone-less stores (the
-    // older discipline) prune identically. Zones win on a name
-    // collision (they are the newer, typed record).
-    val stats = groupStats(spark, path)
-    def hulls(fid: Long): Seq[ColZone] = {
-      val z = zones.getOrElse(fid, Nil)
-      stats.get(fid) match {
-        case Some((c, lo, hi))
-            if !z.exists(_.c.equalsIgnoreCase(c)) =>
-          z :+ ColZone(c, "l", lo.toString, hi.toString)
-        case _ => z
-      }
-    }
+    def hulls(fid: Long): Seq[ColZone] = zones.getOrElse(fid, Nil)
     if (fids.forall(fid => hulls(fid).isEmpty))
       return spark.read.schema(scanSchema).parquet(dirs: _*)
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1931,9 +1961,10 @@ object VersionedStore {
     * version. A crash before the final log rename leaves an orphan
     * data dir that no reader can see (vacuum reclaims it); the
     * overwrite mode reclaims a previous crash's orphan at this fid.
-    * `statsCol` commits the group with min/max zone stats on that
-    * numeric column — feed every append the same column to arm
-    * key-range pruning in [[merge]]/[[deleteWhere]].
+    * `statsCol` commits the group with an integral zone on that
+    * column and marks it as the store's clustering key — feed every
+    * append the same column to arm key-range pruning in
+    * [[merge]]/[[deleteWhere]].
     *
     * Schema evolution is additive and explicit: an append whose
     * schema adds columns to the table schema requires
@@ -2117,12 +2148,16 @@ object VersionedStore {
 
   /** Zone columns maintained by the store's LIVE groups (union of
     * commit-record zone column names) — mutators feed these back to
-    * [[writeGroup]] so the discipline self-propagates: one statted
+    * [[writeGroup]] so the discipline self-propagates: one zoned
     * append arms the column for every later rewrite/compaction.
-    * Unstatted groups never make pruning unsound (they are always
-    * candidates); propagation just keeps the pruning SHARP.
-    */
-  /** (zone cols, bloom cols) of the LIVE groups resolved in ONE log
+    * Unzoned groups never make pruning unsound (they are always
+    * candidates); propagation just keeps the pruning SHARP. A
+    * group's zone on its own `statsCol` marker column is left out:
+    * that hull propagates with the marker, through [[storeStatsCol]],
+    * only while every live group carries it — so a later append
+    * without `statsCol` stays unzoned on that column.
+    *
+    * (zone cols, bloom cols) of the LIVE groups resolved in ONE log
     * pass — the mutators' propagation lookup. Separate
     * `storeZoneCols` + `storeBloomCols` calls each re-list the log
     * dir; at object-store latency per-commit metadata RPCs add up,
@@ -2134,7 +2169,8 @@ object VersionedStore {
     val live = liveOf(
       recs.map(r => (r.v, r.action, r.fid, r.rows)), "add").toSet
     val liveAdds = recs.filter(r => r.action == "add" && live(r.fid))
-    (liveAdds.flatMap(_.zones.map(_.c)).distinct.sorted,
+    (liveAdds.flatMap(r => r.zones.map(_.c).filterNot(r.stats.contains))
+      .distinct.sorted,
       liveAdds.flatMap(_.blooms).distinct.sorted)
   }
 
@@ -2207,8 +2243,8 @@ object VersionedStore {
     readAt(spark, path, latestVersion(spark, path))
 
   /** Latest rows with `keyCol` in [lo, hi] — the serve-path
-    * complement of the mutation-path pruning: when the store
-    * maintains zone stats on `keyCol`, only the file-groups whose
+    * complement of the mutation-path pruning: when live groups carry
+    * an integral zone on `keyCol`, only the file-groups whose
     * zone overlaps the range are scanned at all (plus the residual
     * filter, which parquet min/max pushdown sharpens further inside
     * each group); otherwise a plain filtered read. On a
@@ -2219,9 +2255,7 @@ object VersionedStore {
       lo: Long, hi: Long): DataFrame = {
     val v = latestVersion(spark, path)
     val resid = col(keyCol).cast("long").between(lo, hi)
-    val armed = storeStatsCol(spark, path).contains(keyCol) ||
-      storeZoneCols(spark, path).contains(keyCol)
-    if (armed) {
+    if (zoneArmed(spark, path, v, keyCol)) {
       val fids = candidateFids(spark, path, v, keyCol, lo, hi)
       if (fids.isEmpty) readAt(spark, path, v).filter(lit(false))
       else visibleAt(spark, path, v, fids).filter(resid)
@@ -2240,7 +2274,7 @@ object VersionedStore {
       lo: String, hi: String): DataFrame = {
     val v = latestVersion(spark, path)
     val resid = col(keyCol) >= lo && col(keyCol) <= hi
-    if (storeZoneCols(spark, path).contains(keyCol)) {
+    if (zoneArmed(spark, path, v, keyCol)) {
       val fids = candidateFidsStr(spark, path, v, keyCol, lo, hi)
       if (fids.isEmpty) readAt(spark, path, v).filter(lit(false))
       else visibleAt(spark, path, v, fids).filter(resid)
@@ -2478,24 +2512,23 @@ object VersionedStore {
       if (mm.isEmpty) kept
       else kept.select(kept.columns.map(c =>
         col(c).as(phys(c))): _*)
-    val dataCols0 = kept2.columns.filter(_ != "_vs_fid")
+    val dataCols = kept2.columns.filter(_ != "_vs_fid")
     // same dropped-lineage guard as writeGroup: propagated metadata
     // columns absent from the rewritten frame are skipped
-    val statsColP = statsCol.map(phys).filter(dataCols0.contains)
-    val zoneColsP = zoneCols.map(phys)
+    val statsColP = statsCol.map(phys).filter(dataCols.contains)
     val bloomColsP = bloomCols.map(phys)
-    val dataCols = dataCols0
     val salt = pmod(xxhash64(struct(dataCols.map(col): _*)), lit(8))
     val spread = kept2.repartition(col("_vs_fid"), salt)
-    val zcs = zoneColsP.distinct.filter(dataCols.contains)
+    val zcs = (zoneCols.map(phys) ++ statsColP).distinct
+      .filter(dataCols.contains)
       .flatMap(c => zoneTypeOf(kept2, c).map(c -> _))
     try {
       spread.write.partitionBy("_vs_fid").parquet(tmp.toString)
-      // per-group counts/stats/zones come from a COLUMN-PRUNED read
-      // of the parquet just written (guide §1.4/§6): the write job is
-      // the only full computation of the kept rows — no
+      // per-group counts/zones come from a COLUMN-PRUNED read of the
+      // parquet just written (guide §1.4/§6): the write job is the
+      // only full computation of the kept rows — no
       // persist-everything pass, and the stats job reads only the
-      // statted columns of compact columnar files. Values equal the
+      // zoned columns of compact columnar files. Values equal the
       // old cached-frame aggregation's: parquet round-trips every
       // supported type losslessly. An all-empty rewrite writes no
       // files at all (partitionBy emits nothing), so the stats read
@@ -2504,12 +2537,6 @@ object VersionedStore {
         .exists(s => s.isDirectory &&
           s.getPath.getName.startsWith("_vs_fid="))
       val aggs = Seq(count(lit(1)).as("n")) ++
-        (statsColP match {
-          case Some(c) => Seq(min(col(c)).cast("long").as("lo"),
-            max(col(c)).cast("long").as("hi"))
-          case None => Seq(lit(null).cast("long").as("lo"),
-            lit(null).cast("long").as("hi"))
-        }) ++
         zcs.flatMap { case (c, _) => zoneAggs(kept2, c) }
       val statRows = (if (!wrote) Array.empty[org.apache.spark.sql.Row]
         else spark.read.parquet(tmp.toString)
@@ -2517,15 +2544,9 @@ object VersionedStore {
           .groupBy(col("_vs_fid"))
           .agg(aggs.head, aggs.tail: _*)
           .collect()).map { r =>
-          val legacy =
-            if (r.isNullAt(2)) None
-            else Some((statsColP.get, r.getLong(2), r.getLong(3)))
-          val zones = zcs.zipWithIndex.flatMap { case ((c, t), i) =>
-            if (r.isNullAt(4 + 2 * i)) None
-            else Some(ColZone(c, t, r.getString(4 + 2 * i),
-              r.getString(4 + 2 * i + 1)))
-          }
-          r.getLong(0) -> (r.getLong(1), legacy, zones)
+          val n = r.getLong(1)
+          val zones = zonesOf(zcs, n, r.getAs[Any](_))
+          r.getLong(0) -> (n, markerOf(kept2, statsColP, zones), zones)
         }.toMap
       val schemaJson = Some(logicalSchema.json)
       fidOf.map { case (oldFid, newFid) =>
@@ -2820,29 +2841,7 @@ object VersionedStore {
     val k = keys.select(keyCols.map(col): _*).distinct()
     // zone-prune the detection scan exactly like merge: a single
     // zone-armed key column bounds the scan to overlapping groups
-    val zoneCols = storeZoneCols(spark, path)
-    val statsCol = storeStatsCol(spark, path)
-    val scanFids = keyCols match {
-      // zone/stat/bloom metadata carries PHYSICAL names — compare
-      // the (logical) key through the mapping
-      case Seq(c) if statsCol.contains(physOf(spark, path, v, c)) ||
-          zoneCols.contains(physOf(spark, path, v, c)) =>
-        val isStr = k.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType
-        if (isStr) {
-          val r = k.agg(min(col(c)), max(col(c))).head
-          if (r.isNullAt(0)) Seq.empty
-          else candidateFidsStr(spark, path, v, c, r.getString(0),
-            r.getString(1))
-        } else {
-          val r = k.agg(min(col(c)).cast("long"),
-            max(col(c)).cast("long")).head
-          if (r.isNullAt(0)) Seq.empty
-          else candidateFids(spark, path, v, c, r.getLong(0),
-            r.getLong(1))
-        }
-      case _ => liveFids(spark, path, v)
-    }
+    val scanFids = keySpanFids(spark, path, v, keyCols, k)
     if (scanFids.isEmpty) return v
     val matched = applyDvs(spark, path, v,
       withFidOf(spark, path, scanFids))
@@ -2886,15 +2885,11 @@ object VersionedStore {
     // raw updates
     val keySpan = keyCols match {
       case Seq(c) =>
-        val isStr = updates.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType
-        val (mn, mx) =
-          if (isStr) (min(col(c)), max(col(c)))
-          else (min(col(c)).cast("long"), max(col(c)).cast("long"))
+        val aggs = keySpanAggs(updates, c) :+ max(col("_cnt"))
         val r = updates.groupBy(col(c))
           .agg(count(lit(1)).as("_cnt"))
-          .agg(max(col("_cnt")), mn, mx).head
-        if (!r.isNullAt(0) && r.getLong(0) > 1) sys.error(
+          .agg(aggs.head, aggs.tail: _*).head
+        if (!r.isNullAt(2) && r.getLong(2) > 1) sys.error(
           "VersionedStore.merge: updates carry duplicate keys — " +
             "the merge result would be order-dependent")
         Some(r)
@@ -2916,27 +2911,13 @@ object VersionedStore {
     val v = latestVersion(spark, path)
     val statsCol = storeStatsCol(spark, path)
     val (zoneCols, mergeBloomCols) = storePropagation(spark, path)
-    // when the store maintains zone stats ON the merge key (legacy
-    // single-numeric stat OR a multi-column zone, numeric or string),
-    // the update-key span (two scalars off the small side) prunes
-    // both the affected-group detection scan and the rewrites to the
-    // overlapping file-groups — O(touched groups), not O(table)
-    val scanFids = keyCols match {
-      // zone/stat/bloom metadata carries PHYSICAL names — compare
-      // the (logical) key through the mapping
-      case Seq(c) if statsCol.contains(physOf(spark, path, v, c)) ||
-          zoneCols.contains(physOf(spark, path, v, c)) =>
-        val isStr = updates.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType
-        val r = keySpan.get // single-key: span rode the dup-gate pass
-        if (r.isNullAt(1)) Seq.empty
-        else if (isStr)
-          candidateFidsStr(spark, path, v, c, r.getString(1),
-            r.getString(2))
-        else candidateFids(spark, path, v, c, r.getLong(1),
-          r.getLong(2))
-      case _ => liveFids(spark, path, v)
-    }
+    // when live groups carry a zone ON the merge key (numeric or
+    // string), the update-key span (two scalars off the small side,
+    // carried by the dup-gate pass) prunes both the affected-group
+    // detection scan and the rewrites to the overlapping file-groups
+    // — O(touched groups), not O(table)
+    val scanFids = keySpanFids(spark, path, v, keyCols, updates,
+      keySpan)
     val keys = broadcast(updates.select(keyCols.map(col): _*))
     val withFid =
       if (scanFids.isEmpty) None
@@ -3124,27 +3105,9 @@ object VersionedStore {
     }
     val statsCol = storeStatsCol(spark, path)
     val propag = storePropagation(spark, path)
-    // detection pruning, merge's rule: with zones/stats armed on a
+    // detection pruning, merge's rule: with a zone armed on a
     // single join key, the source key span bounds where matches live
-    val scanFids = keyCols match {
-      case Seq(c) if statsCol.contains(physOf(spark, path, v, c)) ||
-          propag._1.contains(physOf(spark, path, v, c)) =>
-        val isStr = source.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType
-        if (isStr) {
-          val r = source.agg(min(col(c)), max(col(c))).head
-          if (r.isNullAt(0)) Seq.empty
-          else candidateFidsStr(spark, path, v, c, r.getString(0),
-            r.getString(1))
-        } else {
-          val r = source.agg(min(col(c)).cast("long"),
-            max(col(c)).cast("long")).head
-          if (r.isNullAt(0)) Seq.empty
-          else candidateFids(spark, path, v, c, r.getLong(0),
-            r.getLong(1))
-        }
-      case _ => liveFids(spark, path, v)
-    }
+    val scanFids = keySpanFids(spark, path, v, keyCols, source)
     val srcPref = source.select(
       (keyCols.map(col) ++ srcCols.filterNot(keyCols.contains)
         .map(c => col(c).as(s"_src_$c"))
@@ -3781,13 +3744,10 @@ object VersionedStore {
     if (live.isEmpty) return None
     val pk = physOf(spark, path, latest, keyCol)
     val zones = groupZones(spark, path)
-    val stats = groupStats(spark, path)
     val hulls = live.map { fid =>
       zones.getOrElse(fid, Nil)
         .find(z => z.c == pk && z.t == "l")
         .map(z => (z.lo.toLong, z.hi.toLong))
-        .orElse(stats.get(fid).collect {
-          case (c, lo, hi) if c == pk => (lo, hi) })
     }
     if (hulls.exists(_.isEmpty)) None
     else Some((hulls.map(_.get._1).min, hulls.map(_.get._2).max))

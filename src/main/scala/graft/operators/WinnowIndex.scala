@@ -71,8 +71,11 @@ object WinnowIndex {
     * StoreCache contract documents the no-concurrent-reader
     * assumption).
     *
-    * Crash robustness: leftovers of a crashed prior compaction are
-    * removed BEFORE the rewrite (a stale `.compact-tmp`/`.compact-old`
+    * Crash robustness: a prior compaction that crashed between its
+    * two renames left the live path empty and the only complete copy
+    * at `.compact-old` — that copy is renamed back into place first.
+    * Only then are the leftovers of a crashed prior compaction
+    * removed, BEFORE the rewrite (a stale `.compact-tmp`/`.compact-old`
     * would otherwise make `rename` NEST the new directory inside the
     * stale one — Hadoop rename-into-existing-dir semantics — and
     * silently duplicate every row on the next read), and every
@@ -88,6 +91,9 @@ object WinnowIndex {
     val p = new org.apache.hadoop.fs.Path(path)
     val t = new org.apache.hadoop.fs.Path(path + ".compact-tmp")
     val old = new org.apache.hadoop.fs.Path(path + ".compact-old")
+    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
+      sys.error(s"compact: cannot restore $p from $old, left by a " +
+        "crashed prior compaction")
     Seq(t, old).foreach { stale =>
       if (fs.exists(stale) && !fs.delete(stale, true))
         sys.error(s"compact: cannot delete stale leftover $stale " +

@@ -53,4 +53,29 @@ class StoreManifestSpec extends AnyFunSuite with SparkFixture
     }
     e.getMessage should include("vacuumed")
   }
+
+  test("a manifest publish cut between its two renames keeps the " +
+      "previous pin set") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val a = tmp("man-ca")
+    val m = tmp("man-cm") + "/manifest"
+    VersionedStore.create(spark, a)
+    VersionedStore.append(batch(0 until 10), a)   // a@1
+    StoreManifest.pin(spark, Seq(a), m) shouldBe Map(a -> 1L)
+    VersionedStore.append(batch(10 until 20), a)  // a@2
+    val f = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    // state after the live manifest moved aside and before the new
+    // one moved in: the staged new pin set sits in the hidden tmp
+    val tmpDir = new Path(new Path(m).getParent, ".manifest.tmp")
+    f.mkdirs(tmpDir) shouldBe true
+    f.rename(new Path(m), new Path(new Path(m).getParent,
+      ".manifest.bak")) shouldBe true
+    StoreManifest.versions(spark, m) shouldBe Map(a -> 1L)
+    StoreManifest.readAll(spark, m)(a).count() shouldBe 10L
+    // the next pin replaces it and leaves no hidden siblings
+    StoreManifest.pin(spark, Seq(a), m) shouldBe Map(a -> 2L)
+    StoreManifest.versions(spark, m) shouldBe Map(a -> 2L)
+    f.listStatus(new Path(m).getParent).map(_.getPath.getName)
+      .filter(_.startsWith(".manifest")) shouldBe empty
+  }
 }

@@ -121,4 +121,27 @@ class WinnowIndexSpec extends AnyFunSuite with SparkFixture
     fs.exists(new Path(dir + ".compact-tmp")) shouldBe false
     fs.exists(new Path(dir + ".compact-old")) shouldBe false
   }
+
+  test("compact after a crash between its two renames restores the " +
+      "moved-aside index instead of deleting it") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-widx-r").toString + "/idx"
+    WinnowIndex.build(docs, dir)
+    val before = asSet(WinnowIndex.read(spark, dir))
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    import org.apache.hadoop.fs.Path
+    // the crashed compaction had written its rewrite to .compact-tmp
+    // and moved the live index aside to .compact-old; the live path
+    // is gone and .compact-old holds the only complete copy
+    WinnowIndex.write(WinnowIndex.read(spark, dir),
+      dir + ".compact-tmp")
+    fs.rename(new Path(dir), new Path(dir + ".compact-old")) shouldBe
+      true
+    fs.exists(new Path(dir)) shouldBe false
+    WinnowIndex.compact(spark, dir)
+    asSet(WinnowIndex.read(spark, dir)) shouldBe before
+    fs.exists(new Path(dir + ".compact-tmp")) shouldBe false
+    fs.exists(new Path(dir + ".compact-old")) shouldBe false
+  }
 }
