@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
   Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy,
   UnaryExecNode}
-import org.apache.spark.sql.graftinternal.GraftSqlBridge
+import org.apache.spark.sql.graft.StoreSqlShims
 
 /** Per-group top-k as a first-class physical operator — extension
   * ladder rung (c): a custom [[LogicalPlan]] planned by a custom
@@ -159,13 +159,13 @@ object GroupedTopK {
     ensureStrategy(spark)
     val child = df.queryExecution.analyzed
     val groupExprs: Seq[Expression] =
-      groupCols.map(c => GraftSqlBridge.expression(df.col(c)))
+      groupCols.map(c => StoreSqlShims.expression(df.col(c)))
     val sortOrders: Seq[SortOrder] =
-      orderBy.map(GraftSqlBridge.expression).map {
+      orderBy.map(StoreSqlShims.expression).map {
       case so: SortOrder => so
       case e => SortOrder(e, Ascending)
     }
-    GraftSqlBridge.ofRows(spark,
+    StoreSqlShims.ofRows(spark,
       GroupedTopK(groupExprs, sortOrders, k, child))
   }
 }

@@ -3,22 +3,28 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.ColumnNodeToExpressionConverter
+import org.apache.spark.sql.types.StructType
 
-/** The two `private[sql]` bridges the SQL DML surface needs, behind
-  * one tiny object in a `org.apache.spark.sql` subpackage — the same
-  * placement the public Delta Lake codebase uses for exactly these
-  * calls (its classes live under `org.apache.spark.sql.delta`).
-  * Nothing else in this repository reaches into Spark internals;
-  * keep it that way — every addition here widens the surface that
-  * can break on a Spark upgrade.
+/** The `private[sql]` bridges the engine needs, behind one tiny
+  * object in a `org.apache.spark.sql` subpackage — the same placement
+  * the public Delta Lake codebase uses for exactly these calls (its
+  * classes live under `org.apache.spark.sql.delta`). Nothing else in
+  * this repository reaches into Spark's package-private API; keep it
+  * that way — every addition here widens the surface that can break
+  * on a Spark upgrade.
   *
-  *  - [[ofRows]]: a parsed/unresolved [[LogicalPlan]] (the SOURCE
-  *    query a command carried from the parser) to an analyzed,
-  *    runnable [[DataFrame]] at command execution time.
+  *  - [[ofRows]]: a [[LogicalPlan]] — the SOURCE query a command
+  *    carried from the parser, or a hand-built operator or relation —
+  *    to an analyzed, runnable [[DataFrame]].
   *  - [[column]]: an unresolved parser [[Expression]] (a DML
   *    predicate / SET value) to a [[Column]] that resolves against
   *    whatever DataFrame it is applied to — the exact mechanism of
   *    the public `functions.expr`, minus the re-parse.
+  *  - [[expression]]: the reverse, for operators that embed a
+  *    caller's [[Column]] in a logical node.
+  *  - [[nullable]]: a schema with every field (nested ones too)
+  *    nullable, the shape a file scan reports.
   */
 object StoreSqlShims {
 
@@ -29,6 +35,16 @@ object StoreSqlShims {
 
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** Column → Catalyst expression, converted EAGERLY (Spark 4 keeps
+    * the ColumnNode converter `private[sql]`; the lazy
+    * `ExpressionUtils.expression` wrapper is not serializable and
+    * never resolved inside custom logical nodes).
+    */
+  def expression(c: Column): Expression =
+    ColumnNodeToExpressionConverter(c.node)
+
+  def nullable(s: StructType): StructType = s.asNullable
 
   /** Re-wrap a [[Column]]'s expression in an ANSI-eval-mode cast —
     * the runtime half of ANSI store assignment (an out-of-range or
