@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.graft.StoreSqlShims
+import graft.plans.PruneBounds
 
 /** Commit-log versioned parquet store — the minimal table format the
   * delta-maintenance family (q305 IVF add-batch, q310 winnow delta,
@@ -1021,27 +1022,18 @@ object VersionedStore {
         r.fid -> r.zones }
       .toMap
 
-  /** UTF8 binary string comparison — the order Spark's string
-    * min/max aggregates use, so the driver-side pruning decision can
-    * never disagree with the stored zones.
-    */
-  private def sCmp(a: String, b: String): Int =
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String
-        .fromString(b))
-
-  /** Live file-groups at `v` whose `keyCol` zone of type `t`
-    * satisfies `overlaps`; groups without such a zone are always
-    * candidates (sound: pruning only ever weakens).
+  /** Live file-groups at `v` whose `keyCol` zone overlaps `b` (the
+    * shared [[graft.plans.PruneBounds]] test); groups without a zone
+    * of `b`'s family on the column are always candidates (sound:
+    * pruning only ever weakens).
     */
   private def zoneCandidates(spark: SparkSession, path: String,
-      v: Long, keyCol: String, t: String)(
-      overlaps: ColZone => Boolean): Seq[Long] = {
+      v: Long, keyCol: String, b: PruneBounds.Bound): Seq[Long] = {
     val pk = physOf(spark, path, v, keyCol) // zones carry PHYSICAL names
     val zones = groupZones(spark, path)
     liveFids(spark, path, v).filter(fid =>
-      zones.getOrElse(fid, Nil).find(z => z.c == pk && z.t == t)
-        .forall(overlaps))
+      zones.getOrElse(fid, Nil).filter(_.c == pk)
+        .forall(PruneBounds.overlaps(b, _)))
   }
 
   /** Live file-groups whose integral `keyCol` zone [min,max]
@@ -1054,8 +1046,8 @@ object VersionedStore {
   private[graft] def candidateFids(spark: SparkSession,
       path: String, v: Long, keyCol: String, lo: Long,
       hi: Long): Seq[Long] =
-    zoneCandidates(spark, path, v, keyCol, "l")(z =>
-      z.hi.toLong >= lo && z.lo.toLong <= hi)
+    zoneCandidates(spark, path, v, keyCol,
+      PruneBounds.Bound("l", Some(lo), Some(hi)))
 
   /** String-key variant of [[candidateFids]]: live groups whose
     * `keyCol` STRING zone overlaps [lo,hi] in UTF8 binary order;
@@ -1065,8 +1057,8 @@ object VersionedStore {
   private[graft] def candidateFidsStr(spark: SparkSession,
       path: String, v: Long, keyCol: String, lo: String,
       hi: String): Seq[Long] =
-    zoneCandidates(spark, path, v, keyCol, "s")(z =>
-      sCmp(z.hi, lo) >= 0 && sCmp(z.lo, hi) <= 0)
+    zoneCandidates(spark, path, v, keyCol,
+      PruneBounds.Bound("s", Some(lo), Some(hi)))
 
   /** True when `keyCol`'s physical column carries a zone in some
     * group live at `v` (a `statsCol` hull included) — the test that
@@ -1117,20 +1109,9 @@ object VersionedStore {
       Seq(min(col(c)), max(col(c)))
     else Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))
 
-  /** Which zone type a column's declared dtype gets: integral (and
-    * date — days since epoch) → "l", string → "s", anything else →
-    * no zone (None). Zone bounds are engine-portable scalars, never
-    * parsed back from data.
-    */
-  private def zoneTypeOf(df: DataFrame, c: String): Option[String] = {
-    import org.apache.spark.sql.types._
-    df.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType | DateType =>
-        Some("l")
-      case StringType => Some("s")
-      case _ => None
-    }
-  }
+  /** The zone family of `df`'s column `c` ([[PruneBounds.zoneType]]). */
+  private def zoneTypeOf(df: DataFrame, c: String): Option[String] =
+    PruneBounds.zoneType(df.schema(c).dataType)
 
   /** min/max aggregate pair for one zone column — aggregated in the
     * column's OWN order (never on a stringified form, which would be
@@ -1175,18 +1156,6 @@ object VersionedStore {
       df.schema(c).dataType != org.apache.spark.sql.types.DateType &&
         zones.exists(z => z.c == c && z.t == "l"))
 
-  /** Columns the sketch Bloom filter supports (integral and string —
-    * dates and floats have no put/mightContain form).
-    */
-  private def bloomTypeOk(df: DataFrame, c: String): Boolean = {
-    import org.apache.spark.sql.types._
-    df.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType |
-        StringType => true
-      case _ => false
-    }
-  }
-
   /** Build file-group `fid`'s per-column Bloom SIDECARS
     * (`<path>/bloom/f<fid>-<col>`, tmp+rename) from its written
     * parquet and return the armed column names for the commit
@@ -1205,7 +1174,7 @@ object VersionedStore {
     if (cols.isEmpty || n == 0) return Nil
     val written = spark.read.parquet(dataDir(path, fid).toString)
     val armed = cols.distinct.filter(written.columns.contains)
-      .filter(bloomTypeOk(written, _))
+      .filter(c => PruneBounds.bloomable(written.schema(c).dataType))
     if (armed.isEmpty) return Nil
     import org.apache.spark.util.sketch.BloomFilter
     val expected = math.max(n, 1L)
@@ -2307,18 +2276,10 @@ object VersionedStore {
     // only (BloomFilter.mightContain THROWS on anything else) — an
     // unsupported probe type (Double, Timestamp, …) must degrade to
     // "unpruned candidate", never crash the read path
-    val probe: Option[Any] = value match {
-      case n @ (_: Byte | _: Short | _: Int | _: Long) =>
-        Some(n.asInstanceOf[Number].longValue)
-      case s: String => Some(s)
-      case _ => None
-    }
-    val zoneCand = probe match {
-      case Some(l: Long) => candidateFids(spark, path, v, keyCol, l, l)
-      case Some(s: String) =>
-        candidateFidsStr(spark, path, v, keyCol, s, s)
-      case _ => liveFids(spark, path, v)
-    }
+    val b = PruneBounds.point(value)
+    val probe = b.flatMap(_.lo)
+    val zoneCand = b.fold(liveFids(spark, path, v))(
+      zoneCandidates(spark, path, v, keyCol, _))
     val pk = physOf(spark, path, v, keyCol) // sidecars: PHYSICAL names
     val armed = logRecords(spark, path)
       .collect { case r if r.action == "add" &&

@@ -1,12 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.{col, explode, expr, lit}
-import org.apache.spark.sql.types.IntegerType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-file Bloom-filter skipping as an automatic optimizer rule —
   * the point-lookup complement to [[ZoneMapPruneRule]]. Zone maps
@@ -32,15 +29,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * Soundness (no false negatives, the only direction that loses
   * rows): the store holds the EXACT distinct bit positions of each
   * file's non-null values, so a present value always has all k bits
-  * set; collisions only ADD survivors. Only equality and IN
-  * conjuncts on registered columns prune (a NULL row can never
-  * satisfy them, so a file whose filter misses every literal truly
-  * has no matching row — including all-NULL files, which prune
-  * tighter than a zone would); every unrecognized conjunct is
-  * ignored; an OR conjunct prunes to the union of its disjuncts'
-  * survivors only when EVERY disjunct is recognized.
+  * set; collisions only ADD survivors. Only the conjuncts that pin
+  * a registered column to a value set prune: `=`, `<=>` against a
+  * non-NULL literal and `IN`/`InSet`, read by the shared extractor
+  * ([[PruneBounds]]), on INTEGRAL or STRING columns, bare or under
+  * an integral-widening cast. A NULL row can never satisfy them, so
+  * a file whose filter misses every value truly has no matching row —
+  * including all-NULL files, which prune tighter than a zone would.
+  * DATE and TIMESTAMP columns never prune: the filter holds their
+  * string cast, not the literal's internal day or microsecond number.
+  * Every unrecognized conjunct is ignored; an OR conjunct prunes to
+  * the union of its disjuncts' survivors only when EVERY disjunct is
+  * recognized. The injection is [[FileSkipRule]]'s.
   */
-object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
+object BloomSkipRule extends FileSkipRule {
 
   /** Per-file filters: fileId → (col → set bit positions). `files`
     * is every observed non-null fileId (a file absent from `bits`
@@ -52,9 +54,9 @@ object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
       cols: Seq[String], m: Int, k: Int, files: Seq[Long],
       bits: Map[Long, Map[String, scala.collection.immutable.BitSet]],
       hasNullFile: Boolean)
+      extends FileSkipRule.Registered
 
-  private val entries =
-    new java.util.concurrent.CopyOnWriteArrayList[Entry]()
+  type E = Entry
 
   /** Driver-side bit positions of a value — must match the Spark-SQL
     * build expression and the DuckDB oracle spelling exactly:
@@ -79,7 +81,12 @@ object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
     * ZoneMapPruneRule).
     */
   def register(table: DataFrame, fileCol: String, cols: Seq[String],
-      m: Int = 4096, k: Int = 3): Entry = {
+      m: Int = 4096, k: Int = 3): Entry =
+    put(build(table, fileCol, cols, m, k))
+
+  /** The entry [[register]] records, without recording it. */
+  private def build(table: DataFrame, fileCol: String,
+      cols: Seq[String], m: Int, k: Int): Entry = {
     val probes = explode(expr(s"sequence(0, ${k - 1})")).as("__i")
     val perCol = cols.map { c =>
       table
@@ -108,16 +115,9 @@ object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
             cr.map(_.getInt(2)): _*)
         }
       }
-    val analyzed = table.queryExecution.analyzed
-    val e = Entry(analyzed, fileCol, cols, m, k, files, bits,
-      hasNullFile)
-    entries.removeIf(
-      (prev: Entry) => prev.tablePlan.sameResult(analyzed))
-    entries.add(e)
-    e
+    Entry(table.queryExecution.analyzed, fileCol, cols, m, k, files,
+      bits, hasNullFile)
   }
-
-  def clear(): Unit = entries.clear()
 
   /** Incremental freshness: fold ONLY the appended rows' filter bits
     * into a previous registration — one O(delta)-row aggregate
@@ -130,8 +130,7 @@ object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
     */
   def addDelta(prev: Entry, newTable: DataFrame,
       delta: DataFrame): Entry = {
-    val d = register(delta, prev.fileCol, prev.cols, prev.m, prev.k)
-    entries.remove(d) // register() added the delta-only entry
+    val d = build(delta, prev.fileCol, prev.cols, prev.m, prev.k)
     val files = (prev.files ++ d.files).distinct.sorted
     val bits = files.map { f =>
       val p = prev.bits.getOrElse(f, Map.empty)
@@ -141,13 +140,9 @@ object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
           q.getOrElse(c, scala.collection.immutable.BitSet.empty))
       }.toMap
     }.filter(_._2.nonEmpty).toMap
-    val analyzed = newTable.queryExecution.analyzed
-    val e = Entry(analyzed, prev.fileCol, prev.cols, prev.m, prev.k,
-      files, bits, prev.hasNullFile || d.hasNullFile)
-    entries.removeIf(
-      (p: Entry) => p.tablePlan.sameResult(analyzed))
-    entries.add(e)
-    e
+    put(Entry(newTable.queryExecution.analyzed, prev.fileCol,
+      prev.cols, prev.m, prev.k, files, bits,
+      prev.hasNullFile || d.hasNullFile))
   }
 
   /** Persist a registration's filters as a parquet manifest — the
@@ -201,26 +196,8 @@ object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
             cr.map(_.getLong(3).toInt): _*)
         }
       }
-    val analyzed = table.queryExecution.analyzed
-    val e = Entry(analyzed, fileCol, cols, m, k, files, bits,
-      hasNullFile)
-    entries.removeIf(
-      (prev: Entry) => prev.tablePlan.sameResult(analyzed))
-    entries.add(e)
-    e
-  }
-
-  /** Literal → the string Spark's `cast(col as string)` produces for
-    * the same value; None for literal shapes we don't recognize
-    * (that conjunct is then ignored — sound).
-    */
-  private def litString(e: Expression): Option[String] = e match {
-    case Literal(v: Int, _) => Some(v.toString)
-    case Literal(v: Long, _) => Some(v.toString)
-    case Literal(v: Short, _) => Some(v.toString)
-    case Literal(v: Byte, _) => Some(v.toString)
-    case Literal(v: UTF8String, _) => Some(v.toString)
-    case _ => None
+    put(Entry(table.queryExecution.analyzed, fileCol, cols, m, k,
+      files, bits, hasNullFile))
   }
 
   /** Does file `f`'s filter for `c` claim the value might be
@@ -234,110 +211,22 @@ object BloomSkipRule extends Rule[LogicalPlan] with PredicateHelper {
     bitPositions(v, e.m, e.k).forall(set.contains)
   }
 
-  /** Survivor set of one conjunction: intersect, over every
-    * recognized equality/IN conjunct, the files whose filter hits
-    * SOME of the conjunct's literals. None when nothing is
-    * recognized.
+  protected def prunes(e: Entry)(a: Attribute): Boolean =
+    e.cols.contains(a.name) && PruneBounds.bloomable(a.dataType)
+
+  protected def fileCount(e: Entry): Int = e.files.length
+
+  /** Files whose filter, for every column pinned to a value set,
+    * hits SOME of its values; None when no column is pinned.
     */
-  private def conjunctionSurvivors(e: Entry,
-      cond: Expression): Option[Set[Long]] = {
-    val colSet = e.cols.toSet
-    def attr(x: Expression): Option[String] = x match {
-      case a: AttributeReference if colSet.contains(a.name) =>
-        Some(a.name)
-      case _ => None
+  protected def conjunctionSurvivors(e: Entry,
+      bounds: Map[String, PruneBounds.Bound]): Option[Set[Long]] = {
+    val pinned = bounds.toSeq.flatMap { case (c, b) =>
+      b.eq.map(vs => c -> vs.map(_.toString))
     }
-    var surv: Option[Set[Long]] = None
-    def add(c: String, lits: Seq[String]): Unit = {
-      val s = e.files
-        .filter(f => lits.exists(v => mightContain(e, f, c, v)))
-        .toSet
-      surv = Some(surv.fold(s)(_ intersect s))
-    }
-    splitConjunctivePredicates(cond).foreach {
-      case EqualTo(a, l) if attr(a).isDefined =>
-        for (c <- attr(a); v <- litString(l)) add(c, Seq(v))
-      case EqualTo(l, a) if litString(l).isDefined =>
-        for (c <- attr(a); v <- litString(l)) add(c, Seq(v))
-      case In(a, vs) if attr(a).isDefined && vs.nonEmpty =>
-        val ss = vs.map(litString)
-        if (ss.forall(_.isDefined))
-          attr(a).foreach(add(_, ss.flatten))
-      case _ => ()
-    }
-    surv
-  }
-
-  /** The full per-condition decision (same shape as
-    * ZoneMapPruneRule.survivorsForCond): the conjunction's combined
-    * survivors, intersected with the per-disjunct survivor UNION of
-    * every top-level OR whose disjuncts are all recognized.
-    */
-  def survivorsForCond(e: Entry,
-      cond: Expression): Option[Seq[Long]] = {
-    var surv = conjunctionSurvivors(e, cond)
-    splitConjunctivePredicates(cond).foreach {
-      case o: Or =>
-        val ds = splitDisjunctivePredicates(o)
-          .map(conjunctionSurvivors(e, _))
-        if (ds.forall(_.isDefined)) {
-          val u = ds.flatMap(_.get).toSet
-          surv = Some(surv.fold(u)(_ intersect u))
-        }
-      case _ => ()
-    }
-    surv.map(_.toSeq.sorted)
-  }
-
-  private def stripProjects(p: LogicalPlan): LogicalPlan = p match {
-    case Project(projList, child)
-        if projList.forall(_.isInstanceOf[AttributeReference]) =>
-      stripProjects(child)
-    case other => other
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // cheap rejects, because this rule now runs GLOBALLY (the
-    // extensions path) inside the main optimizer: no registrations
-    // means no work at all, and a registered table is an analyzed
-    // raw relation (a LEAF after project-stripping) — paying
-    // sameResult's full canonicalization of an arbitrary query
-    // subtree under every Filter measurably taxed the big
-    // vector/retrieval plans (q250 1.7x) for matches that could
-    // never succeed.
-    if (entries.isEmpty) return plan
-    plan.transformUp {
-    case f @ Filter(cond, child)
-        if stripProjects(child)
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical
-            .LeafNode] =>
-      val stripped = stripProjects(child)
-      val it = entries.iterator()
-      var done: Option[Filter] = None
-      while (done.isEmpty && it.hasNext) {
-        val e = it.next()
-        if (stripped.sameResult(e.tablePlan)) {
-          survivorsForCond(e, cond).foreach { surv =>
-            if (surv.length < e.files.length) {
-              stripped.output.find(_.name == e.fileCol).foreach { fa =>
-                val lits: Seq[Expression] = fa.dataType match {
-                  case IntegerType => surv.map(v => Literal(v.toInt))
-                  case _ => surv.map(v => Literal(v))
-                }
-                val keep: Expression =
-                  if (e.hasNullFile) Or(In(fa, lits), IsNull(fa))
-                  else In(fa, lits)
-                val pruned = Filter(keep, stripped)
-                val newChild = child.transformUp {
-                  case p if p eq stripped => pruned
-                }
-                done = Some(Filter(cond, newChild))
-              }
-            }
-          }
-        }
-      }
-      done.getOrElse(f)
-    }
+    if (pinned.isEmpty) None
+    else Some(e.files.filter(f => pinned.forall { case (c, vs) =>
+      vs.exists(mightContain(e, f, c, _))
+    }).toSet)
   }
 }

@@ -1,12 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.{col, max, min, unix_date}
-import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{DateType, StringType}
 
 /** Zone-map file pruning as an automatic optimizer rule — the
   * planner half of the Z-order story (q148 gates the curve
@@ -14,46 +12,39 @@ import org.apache.spark.unsafe.types.UTF8String
   * queries COLLECT it without hand-written pruning): a `Filter`
   * over a registered file-bucketed table whose condition bounds the
   * table's clustered columns gets an extra `fileCol IN (survivors)`
-  * filter injected directly above the scan, where survivors are the
-  * files whose registered per-file [min, max] zones intersect the
-  * predicate's ranges. `fileCol` is the layout's hive-partition
-  * column, so the injected IN becomes a partition filter at
-  * planning time and pruned files are never opened — at 100 TB on a
+  * filter injected directly above the scan ([[FileSkipRule]]), where
+  * survivors are the files whose registered per-file [min, max]
+  * zones intersect the predicate's ranges — at 100 TB on a
   * Z-ordered layout that is q268's measured 4-of-147-files scan,
-  * now applied by the planner to ANY query with a qualifying
-  * predicate.
+  * applied by the planner to ANY query with a qualifying predicate.
   *
   * Correctness constraints, enforced structurally:
-  *  - only conjuncts of the forms `col (=, <, <=, >, >=) literal`
-  *    (either operand order) and `col IN (...)` over INTEGRAL,
-  *    DATE (days-since-epoch zones), or STRING (binary-order
-  *    min/max zones; plus ASCII-prefix `LIKE 'p%'`) clustered
-  *    columns contribute bounds; an OR conjunct whose every
-  *    disjunct is recognized prunes to the union of disjunct
-  *    survivors. Every unrecognized conjunct is simply ignored — it
-  *    can only make the true row set SMALLER than the bounds imply,
-  *    so pruning by the recognized bounds alone never drops a
-  *    matching row. Strict bounds tighten by ±1 (integers/dates;
-  *    strings stay inclusive).
+  *  - bounds come from the shared extractor, [[PruneBounds]]: `=`,
+  *    `<=>`, `<`, `<=`, `>`, `>=` against a literal (either operand
+  *    order), `IN`/`InSet` hulls and ASCII-prefix `LIKE 'p%'`, on
+  *    INTEGRAL, DATE (days-since-epoch zones) or STRING (binary-order
+  *    zones) clustered columns, bare or under an integral-widening
+  *    cast; an OR conjunct whose every disjunct is recognized prunes
+  *    to the union of disjunct survivors. Every unrecognized conjunct
+  *    is ignored — it can only make the true row set SMALLER than the
+  *    bounds imply, so pruning by the recognized bounds alone never
+  *    drops a matching row. Strict bounds tighten by ±1
+  *    (integers/dates; strings stay inclusive).
   *  - a file survives unless SOME bounded column's zone is fully
   *    outside the predicate's range — the exact row-group rule a
   *    parquet reader applies to footer stats.
-  *  - no recognized bounds → no rewrite; the rule re-applied to its
-  *    own output is a no-op (the injected IN bounds only `fileCol`,
-  *    which is never a clustered column).
+  *  - no recognized bounds → no rewrite.
   *
   * The registered stats are collected ONCE at register time (one
   * O(files)-row aggregate — the manifest a table format keeps); the
   * caller owns their freshness, exactly like SummaryRewriteRule's
-  * summary contract. Table matching uses `sameResult` on the
-  * project-stripped child, so the rule still fires after column
-  * pruning inserts a Project over the scan.
+  * summary contract.
   *
   * Injection paths: cluster-wide via
   * `spark.sql.extensions=graft.functions.GraftExtensions`, or on a
   * live session via `spark.experimental.extraOptimizations`.
   */
-object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
+object ZoneMapPruneRule extends FileSkipRule {
 
   /** Per-file zones: fileId → (col → (lo, hi)). `hasNullFile` marks
     * rows whose file column is NULL — those rows belong to no zone
@@ -64,9 +55,9 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
       cols: Seq[String], stats: Seq[(Long, Map[String, (Long, Long)])],
       hasNullFile: Boolean = false,
       strStats: Map[Long, Map[String, (String, String)]] = Map.empty)
+      extends FileSkipRule.Registered
 
-  private val entries =
-    new java.util.concurrent.CopyOnWriteArrayList[Entry]()
+  type E = Entry
 
   /** Register `table` (its analyzed plan is the match key) as
     * file-bucketed by integral column `fileCol` and Z-clustered on
@@ -80,9 +71,13 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     * that column), matching the parquet-footer convention.
     */
   def register(table: DataFrame, fileCol: String,
+      cols: Seq[String]): Entry = put(build(table, fileCol, cols))
+
+  /** The entry [[register]] records, without recording it. */
+  private def build(table: DataFrame, fileCol: String,
       cols: Seq[String]): Entry = {
     // DATE zones ride as days-since-epoch longs (unix_date) — the
-    // same integral form extractBounds produces from a folded
+    // same integral form PruneBounds produces from a folded
     // DateType literal, so date predicates prune like integer ones.
     // STRING columns get min/max string zones (UTF8String binary
     // order on both the aggregate and the driver-side decision).
@@ -118,16 +113,9 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
             r.getString(sBase + 2 * j + 1)))
         }.toMap
       }.toMap
-    val analyzed = table.queryExecution.analyzed
-    val e = Entry(analyzed, fileCol, cols, stats, hasNullFile,
-      strStats)
-    entries.removeIf(
-      (prev: Entry) => prev.tablePlan.sameResult(analyzed))
-    entries.add(e)
-    e
+    Entry(table.queryExecution.analyzed, fileCol, cols, stats,
+      hasNullFile, strStats)
   }
-
-  def clear(): Unit = entries.clear()
 
   /** Incremental freshness: fold ONLY the appended rows' zones into
     * a previous registration — at 100 TB a full re-register re-scans
@@ -144,8 +132,7 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     */
   def addDelta(prev: Entry, newTable: DataFrame,
       delta: DataFrame): Entry = {
-    val d = register(delta, prev.fileCol, prev.cols)
-    entries.remove(d) // register() added the delta-only entry; drop it
+    val d = build(delta, prev.fileCol, prev.cols)
     val files = (prev.stats.map(_._1) ++ d.stats.map(_._1)).distinct
     val dNum = d.stats.toMap
     val pNum = prev.stats.toMap
@@ -169,21 +156,16 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
       f -> (p.keySet ++ q.keySet).map { c =>
         (p.get(c), q.get(c)) match {
           case (Some((alo, ahi)), Some((blo, bhi))) =>
-            c -> (if (sCmp(alo, blo) <= 0) alo else blo,
-              if (sCmp(ahi, bhi) >= 0) ahi else bhi)
+            c -> (if (PruneBounds.cmp(alo, blo) <= 0) alo else blo,
+              if (PruneBounds.cmp(ahi, bhi) >= 0) ahi else bhi)
           case (Some(z), None) => c -> z
           case (None, Some(z)) => c -> z
           case (None, None) => c -> ("", "")
         }
       }.toMap
     }.filter(_._2.nonEmpty).toMap
-    val analyzed = newTable.queryExecution.analyzed
-    val e = Entry(analyzed, prev.fileCol, prev.cols, stats,
-      prev.hasNullFile || d.hasNullFile, strStats)
-    entries.removeIf(
-      (p: Entry) => p.tablePlan.sameResult(analyzed))
-    entries.add(e)
-    e
+    put(Entry(newTable.queryExecution.analyzed, prev.fileCol,
+      prev.cols, stats, prev.hasNullFile || d.hasNullFile, strStats))
   }
 
   /** The decision function, shared with the q311 gate's files-read
@@ -193,14 +175,29 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     */
   def survivors(e: Entry,
       bounds: Map[String, (Option[Long], Option[Long])]): Seq[Long] =
-    e.stats.collect {
-      case (f, zones)
-          if bounds.forall { case (c, (lo, hi)) =>
-            zones.get(c).forall { case (zlo, zhi) =>
-              lo.forall(zhi >= _) && hi.forall(zlo <= _)
-            }
-          } => f
-    }.toSeq.sorted
+    conjunctionSurvivors(e, bounds.map { case (c, (lo, hi)) =>
+      c -> PruneBounds.Bound("l", lo, hi)
+    }).toSeq.flatten.sorted
+
+  protected def prunes(e: Entry)(a: Attribute): Boolean =
+    e.cols.contains(a.name)
+
+  protected def fileCount(e: Entry): Int = e.stats.length
+
+  /** Files whose every bounded column's zone, integral or string,
+    * overlaps its bound.
+    */
+  protected def conjunctionSurvivors(e: Entry,
+      bounds: Map[String, PruneBounds.Bound]): Option[Set[Long]] =
+    Some(e.stats.collect {
+      case (f, zones) if bounds.forall { case (c, b) =>
+        val strs = e.strStats.getOrElse(f, Map.empty)
+        zones.get(c).forall { case (lo, hi) =>
+          PruneBounds.overlaps(b, "l", lo, hi) } &&
+          strs.get(c).forall { case (lo, hi) =>
+            PruneBounds.overlaps(b, "s", lo, hi) }
+      } => f
+    }.toSet)
 
   /** Persist a registration's zone stats as a parquet manifest —
     * the durable half of the table-format contract: a NEW session
@@ -265,290 +262,18 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
         f -> rs.map(r =>
           r.getString(2) -> (r.getString(5), r.getString(6))).toMap
       }
-    val analyzed = table.queryExecution.analyzed
-    val e = Entry(analyzed, fileCol, cols, stats, hasNullFile,
-      strStats)
-    entries.removeIf(
-      (prev: Entry) => prev.tablePlan.sameResult(analyzed))
-    entries.add(e)
-    e
+    put(Entry(table.queryExecution.analyzed, fileCol, cols, stats,
+      hasNullFile, strStats))
   }
 
-  /** UTF8String binary comparison — the order Spark's string min/max
-    * aggregates and DuckDB's default collation both use, so the
-    * driver-side decision can never disagree with the stored zones.
-    */
-  private def sCmp(a: String, b: String): Int =
-    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-
-  /** Exclusive-ish successor of an ASCII prefix: the smallest string
-    * (binary order) above every string starting with `p`, by
-    * incrementing the last char. Restricted to pure-ASCII prefixes —
-    * byte order and char order coincide there; any other prefix is
-    * unrecognized (sound: the LIKE conjunct just contributes only
-    * its lower bound).
-    */
-  private def asciiNextPrefix(p: String): Option[String] =
-    if (p.isEmpty || !p.forall(_ < 0x80.toChar)) None
-    else Some(p.init + (p.last + 1).toChar)
-
-  /** String-zone check: survives unless some bounded column's string
-    * zone is fully outside [lo, hi] (binary order, inclusive — a
-    * strict string bound is treated as inclusive, over-including
-    * only).
-    */
-  private def strOk(zones: Map[String, (String, String)],
-      bounds: Map[String, (Option[String], Option[String])]): Boolean =
-    bounds.forall { case (c, (lo, hi)) =>
-      zones.get(c).forall { case (zlo, zhi) =>
-        lo.forall(l => sCmp(zhi, l) >= 0) &&
-          hi.forall(h => sCmp(zlo, h) <= 0)
-      }
-    }
-
-  /** Extract per-column string [lo, hi] bounds: equality, IN hulls,
-    * range comparisons (strict treated as inclusive — strings have
-    * no ±1), and ASCII-prefix `LIKE 'p%'` (StartsWith) as
-    * [p, asciiNextPrefix(p)].
-    */
-  def extractStrBounds(cond: Expression, cols: Seq[String])
-      : Map[String, (Option[String], Option[String])] = {
-    val colSet = cols.toSet
-    def strAttr(e: Expression): Option[String] = e match {
-      case a: AttributeReference
-          if colSet.contains(a.name) && a.dataType == StringType =>
-        Some(a.name)
-      case _ => None
-    }
-    def litStr(e: Expression): Option[String] = e match {
-      case Literal(v: UTF8String, StringType) => Some(v.toString)
-      case _ => None
-    }
-    var b = Map.empty[String, (Option[String], Option[String])]
-      .withDefaultValue((None, None))
-    def addLo(c: String, v: String): Unit = {
-      val (lo, hi) = b(c)
-      b += c -> (Some(lo.fold(v)(l => if (sCmp(l, v) >= 0) l else v)),
-        hi)
-    }
-    def addHi(c: String, v: String): Unit = {
-      val (lo, hi) = b(c)
-      b += c -> (lo,
-        Some(hi.fold(v)(h => if (sCmp(h, v) <= 0) h else v)))
-    }
-    splitConjunctivePredicates(cond).foreach {
-      case EqualTo(a, l) if strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) { addLo(c, v); addHi(c, v) }
-      case EqualTo(l, a) if litStr(l).isDefined && strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) { addLo(c, v); addHi(c, v) }
-      case GreaterThanOrEqual(a, l) if strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addLo(c, v)
-      case GreaterThan(a, l) if strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addLo(c, v)
-      case LessThanOrEqual(a, l) if strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addHi(c, v)
-      case LessThan(a, l) if strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addHi(c, v)
-      // literal-on-the-left spellings
-      case GreaterThanOrEqual(l, a)
-          if litStr(l).isDefined && strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addHi(c, v)
-      case GreaterThan(l, a)
-          if litStr(l).isDefined && strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addHi(c, v)
-      case LessThanOrEqual(l, a)
-          if litStr(l).isDefined && strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addLo(c, v)
-      case LessThan(l, a)
-          if litStr(l).isDefined && strAttr(a).isDefined =>
-        for (c <- strAttr(a); v <- litStr(l)) addLo(c, v)
-      case In(a, vs) if strAttr(a).isDefined && vs.nonEmpty =>
-        val ss = vs.map(litStr)
-        if (ss.forall(_.isDefined)) {
-          val l = ss.flatten
-          for (c <- strAttr(a)) {
-            addLo(c, l.reduce((x, y) => if (sCmp(x, y) <= 0) x else y))
-            addHi(c, l.reduce((x, y) => if (sCmp(x, y) >= 0) x else y))
-          }
-        }
-      case StartsWith(a, l) if strAttr(a).isDefined =>
-        for (c <- strAttr(a); p <- litStr(l)) {
-          addLo(c, p)
-          asciiNextPrefix(p).foreach(addHi(c, _))
-        }
-      case _ => ()
-    }
-    b.filter { case (_, (lo, hi)) => lo.isDefined || hi.isDefined }
-  }
-
-  /** Survivors under BOTH bound classes — numeric and string zones
-    * must each intersect for a file to survive.
-    */
-  private def survivorsBoth(e: Entry,
-      nb: Map[String, (Option[Long], Option[Long])],
-      sb: Map[String, (Option[String], Option[String])]): Seq[Long] =
-    survivors(e, nb).filter(f =>
-      strOk(e.strStats.getOrElse(f, Map.empty), sb))
-
-  /** The FULL per-condition decision: the conjunction's combined
-    * plain bounds (numeric + string), intersected with — for every
-    * top-level OR conjunct whose EVERY disjunct yields recognized
-    * bounds — the union of the disjuncts' survivor sets. A row
-    * satisfying the OR satisfies some disjunct, whose recognized
-    * bounds it therefore meets, so its file is in that disjunct's
-    * survivor set and in the union — pruning by the intersection
-    * never drops a matching row. An OR with ANY unrecognized
-    * disjunct is ignored entirely (that disjunct could match rows
-    * anywhere). Returns None when nothing is recognized.
-    */
-  def survivorsForCond(e: Entry,
-      cond: Expression): Option[Seq[Long]] = {
-    def one(c: Expression): Option[Set[Long]] = {
-      val nb = extractBounds(c, e.cols)
-      val sb = extractStrBounds(c, e.cols)
-      if (nb.isEmpty && sb.isEmpty) None
-      else Some(survivorsBoth(e, nb, sb).toSet)
-    }
-    var surv: Option[Set[Long]] = one(cond)
-    splitConjunctivePredicates(cond).foreach {
-      case o: Or =>
-        val ds = splitDisjunctivePredicates(o).map(one)
-        if (ds.forall(_.isDefined)) {
-          val u = ds.flatMap(_.get).toSet
-          surv = Some(surv.fold(u)(_ intersect u))
-        }
-      case _ => ()
-    }
-    surv.map(_.toSeq.sorted)
-  }
-
-  private def stripProjects(p: LogicalPlan): LogicalPlan = p match {
-    case Project(projList, child)
-        if projList.forall(_.isInstanceOf[AttributeReference]) =>
-      stripProjects(child)
-    case other => other
-  }
-
-  private def litLong(e: Expression): Option[Long] = e match {
-    // DateType literals carry days-since-epoch as Int — the first
-    // case already covers them; listed cases are the integral widths
-    case Literal(v: Int, _) => Some(v.toLong)
-    case Literal(v: Long, _) => Some(v)
-    case Literal(v: Short, _) => Some(v.toLong)
-    case Literal(v: Byte, _) => Some(v.toLong)
-    case _ => None
-  }
-
-  /** Extract per-column [lo, hi] bounds from the condition's
-    * recognized conjuncts over the entry's clustered columns.
+  /** Per-column integral [lo, hi] bounds of the condition's
+    * recognized conjuncts over the clustered columns `cols` — the
+    * integral/date projection of [[PruneBounds.conjunction]].
     */
   def extractBounds(cond: Expression,
-      cols: Seq[String]): Map[String, (Option[Long], Option[Long])] = {
-    val colSet = cols.toSet
-    def intAttr(e: Expression): Option[String] = e match {
-      case a: AttributeReference
-          if colSet.contains(a.name) &&
-            (a.dataType == LongType || a.dataType == IntegerType ||
-              a.dataType == DateType) =>
-        Some(a.name)
-      case _ => None
+      cols: Seq[String]): Map[String, (Option[Long], Option[Long])] =
+    PruneBounds.conjunction(cond, a => cols.contains(a.name)).collect {
+      case (c, PruneBounds.Bound("l", lo, hi, _)) =>
+        c -> (lo.map(_.asInstanceOf[Long]), hi.map(_.asInstanceOf[Long]))
     }
-    var b = Map.empty[String, (Option[Long], Option[Long])]
-      .withDefaultValue((None, None))
-    def addLo(c: String, v: Long): Unit = {
-      val (lo, hi) = b(c); b += c -> (Some(lo.fold(v)(_ max v)), hi)
-    }
-    def addHi(c: String, v: Long): Unit = {
-      val (lo, hi) = b(c); b += c -> (lo, Some(hi.fold(v)(_ min v)))
-    }
-    // strict bounds tighten by ±1 — guarded: at Long.MaxValue/MinValue
-    // the ±1 would wrap and INVERT the bound (`col > Long.MaxValue`
-    // becoming `col >= Long.MinValue`), so an overflowing strict
-    // conjunct is treated as unrecognized and simply dropped — always
-    // sound (pruning only weakens)
-    def inc(v: Long): Option[Long] =
-      if (v == Long.MaxValue) None else Some(v + 1)
-    def dec(v: Long): Option[Long] =
-      if (v == Long.MinValue) None else Some(v - 1)
-    splitConjunctivePredicates(cond).foreach {
-      case GreaterThanOrEqual(a, l) =>
-        for (c <- intAttr(a); v <- litLong(l)) addLo(c, v)
-      case GreaterThan(a, l) =>
-        for (c <- intAttr(a); v <- litLong(l); w <- inc(v)) addLo(c, w)
-      case LessThanOrEqual(a, l) =>
-        for (c <- intAttr(a); v <- litLong(l)) addHi(c, v)
-      case LessThan(a, l) =>
-        for (c <- intAttr(a); v <- litLong(l); w <- dec(v)) addHi(c, w)
-      case EqualTo(a, l) if intAttr(a).isDefined =>
-        for (c <- intAttr(a); v <- litLong(l)) { addLo(c, v); addHi(c, v) }
-      // literal-on-the-left spellings
-      case GreaterThanOrEqual(l, a) if litLong(l).isDefined =>
-        for (c <- intAttr(a); v <- litLong(l)) addHi(c, v)
-      case GreaterThan(l, a) if litLong(l).isDefined =>
-        for (c <- intAttr(a); v <- litLong(l); w <- dec(v)) addHi(c, w)
-      case LessThanOrEqual(l, a) if litLong(l).isDefined =>
-        for (c <- intAttr(a); v <- litLong(l)) addLo(c, v)
-      case LessThan(l, a) if litLong(l).isDefined =>
-        for (c <- intAttr(a); v <- litLong(l); w <- inc(v)) addLo(c, w)
-      case EqualTo(l, a) if litLong(l).isDefined =>
-        for (c <- intAttr(a); v <- litLong(l)) { addLo(c, v); addHi(c, v) }
-      // IN-list: bound by the list's min/max (zones are intervals, so
-      // the hull is the tightest sound bound without per-value zones)
-      case In(a, vs) if intAttr(a).isDefined && vs.nonEmpty =>
-        val longs = vs.map(litLong)
-        if (longs.forall(_.isDefined)) {
-          val ls = longs.flatten
-          for (c <- intAttr(a)) { addLo(c, ls.min); addHi(c, ls.max) }
-        }
-      case _ => ()
-    }
-    b.filter { case (_, (lo, hi)) => lo.isDefined || hi.isDefined }
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    // cheap rejects, because this rule now runs GLOBALLY (the
-    // extensions path) inside the main optimizer: no registrations
-    // means no work at all, and a registered table is an analyzed
-    // raw relation (a LEAF after project-stripping) — paying
-    // sameResult's full canonicalization of an arbitrary query
-    // subtree under every Filter measurably taxed the big
-    // vector/retrieval plans (q250 1.7x) for matches that could
-    // never succeed.
-    if (entries.isEmpty) return plan
-    plan.transformUp {
-    case f @ Filter(cond, child)
-        if stripProjects(child)
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical
-            .LeafNode] =>
-      val stripped = stripProjects(child)
-      val it = entries.iterator()
-      var done: Option[Filter] = None
-      while (done.isEmpty && it.hasNext) {
-        val e = it.next()
-        if (stripped.sameResult(e.tablePlan)) {
-          survivorsForCond(e, cond).foreach { surv =>
-            if (surv.length < e.stats.length) {
-              stripped.output.find(_.name == e.fileCol).foreach { fa =>
-                val lits: Seq[Expression] = fa.dataType match {
-                  case IntegerType => surv.map(v => Literal(v.toInt))
-                  case _ => surv.map(v => Literal(v))
-                }
-                // rows with a NULL file column belong to no zone and
-                // must survive (IN alone yields NULL on them)
-                val keep: Expression =
-                  if (e.hasNullFile) Or(In(fa, lits), IsNull(fa))
-                  else In(fa, lits)
-                val pruned = Filter(keep, stripped)
-                val newChild = child.transformUp {
-                  case p if p eq stripped => pruned
-                }
-                done = Some(Filter(cond, newChild))
-              }
-            }
-          }
-        }
-      }
-      done.getOrElse(f)
-    }
-  }
 }

@@ -1,16 +1,13 @@
 package graft.sources
 
 import graft.operators.VersionedStore.ColZone
+import graft.plans.PruneBounds
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast,
-  EqualNullSafe, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   PartitionDirectory}
-import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
-  LongType, ShortType, StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 /** PLAN-TIME file-group pruning for store reads — the lakehouse
   * file-skipping design (the public Delta `TahoeFileIndex` idea): a
@@ -24,12 +21,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * what makes it free at plan time on a 100 TB table (the log is
   * already cached on the driver; no listing storm, no repair).
   *
-  * Soundness: pruning only ever WEAKENS — a group without a zone on
-  * a filtered column, a filter shape the bounds extractor does not
-  * recognize (OR, UDF, IS NULL), or a literal of a non-comparable
-  * type all keep the group a candidate. Strict bounds are relaxed to
-  * inclusive ones (boundary groups survive; parquet row-group stats
-  * finish the job inside the scan).
+  * Soundness: the bounds and the OR rule are the shared ones
+  * ([[PruneBounds]]), so a store scan prunes exactly as the zone-map
+  * rule does — strict integral bounds tighten by one, an OR whose
+  * every disjunct is recognized prunes to the union of its
+  * disjuncts' survivors, long IN lists (`InSet`) prune by their hull.
+  * Pruning only ever WEAKENS past that: a group without a zone on a
+  * filtered column, an unrecognized filter (UDF, IS NULL, an OR with
+  * such a disjunct), or a literal of another type family (a TIMESTAMP
+  * against an integral hull) all keep the group a candidate.
   */
 final class GroupZoneFileIndex(
     groups: Seq[GroupZoneFileIndex.GroupFiles])
@@ -91,133 +91,21 @@ object GroupZoneFileIndex {
         .LogicalRelation(rel))
   }
 
-  /** The groups whose zones can satisfy every recognized conjunct of
-    * `filters` — pure and driver-cheap (O(groups × bounds), no IO).
+  /** The groups whose zones can satisfy `filters` — pure and
+    * driver-cheap (O(groups × bounds), no IO). A zone matches a
+    * bounded column by name, ignoring case; a group without one stays
+    * a candidate.
     */
   def survivors(groups: Seq[GroupFiles],
       filters: Seq[Expression]): Seq[GroupFiles] = {
-    val bounds = filters.flatMap(boundsOf)
-    if (bounds.isEmpty) groups
-    else groups.filter(g => bounds.forall { case (c, lo, hi) =>
-      g.zones.find(_.c.equalsIgnoreCase(c)) match {
-        case Some(z) => overlaps(z, lo, hi)
-        case None => true // no hull on this column: stay a candidate
+    def keeps(g: GroupFiles, bounds: Map[String, PruneBounds.Bound]) =
+      bounds.forall { case (c, b) =>
+        g.zones.filter(_.c.equalsIgnoreCase(c))
+          .forall(PruneBounds.overlaps(b, _))
       }
-    })
-  }
-
-  /** Column behind a comparison side: a bare attribute, or an
-    * integral-widening cast of one (`int_col = 5L` plans as
-    * `CAST(int_col AS BIGINT) = 5`), whose zone hull order the cast
-    * preserves.
-    */
-  private def attrOf(e: Expression): Option[String] = e match {
-    case a: Attribute => Some(a.name)
-    case c: Cast => (c.child, c.dataType) match {
-      case (a: Attribute, LongType | IntegerType | ShortType) =>
-        a.dataType match {
-          case ByteType | ShortType | IntegerType | LongType |
-            DateType => Some(a.name)
-          case _ => None
-        }
-      case _ => None
-    }
-    case _ => None
-  }
-
-  /** A literal comparison value rendered into zone space: Long for
-    * the integral/date ("l") hulls, String for the UTF8 ("s") hulls;
-    * None for NULL or any other type (no pruning).
-    */
-  private def valOf(e: Expression): Option[Any] = e match {
-    case Literal(null, _) => None
-    case Literal(v: java.lang.Integer, IntegerType | DateType) =>
-      Some(v.longValue)
-    case Literal(v: java.lang.Long, _) => Some(v.longValue)
-    case Literal(v: java.lang.Short, _) => Some(v.longValue)
-    case Literal(v: java.lang.Byte, _) => Some(v.longValue)
-    case Literal(v: UTF8String, StringType) => Some(v.toString)
-    case _ => None
-  }
-
-  /** (column, lo, hi) bounds of one RECOGNIZED conjunct; Nil keeps
-    * every group (sound). Strict inequalities widen to inclusive.
-    */
-  private def boundsOf(
-      e: Expression): Seq[(String, Option[Any], Option[Any])] =
-    e match {
-      case EqualTo(l, r) => eqBound(l, r)
-      case EqualNullSafe(l, r) => eqBound(l, r)
-      case GreaterThan(l, r) => geLe(l, r)
-      case GreaterThanOrEqual(l, r) => geLe(l, r)
-      case LessThan(l, r) => leGe(l, r)
-      case LessThanOrEqual(l, r) => leGe(l, r)
-      case In(a, vs) if attrOf(a).isDefined && vs.nonEmpty =>
-        val c = attrOf(a).get
-        val lits = vs.map(valOf)
-        if (lits.exists(_.isEmpty)) Nil
-        else {
-          val longs = lits.flatten.collect { case l: Long => l }
-          val strs = lits.flatten.collect { case s: String => s }
-          if (longs.size == lits.size)
-            Seq((c, Some(longs.min), Some(longs.max)))
-          else if (strs.size == lits.size)
-            Seq((c, Some(strs.min(Ordering.comparatorToOrdering(
-              utf8Cmp))), Some(strs.max(Ordering
-              .comparatorToOrdering(utf8Cmp)))))
-          else Nil
-        }
-      case _ => Nil
-    }
-
-  private def eqBound(l: Expression,
-      r: Expression): Seq[(String, Option[Any], Option[Any])] =
-    (attrOf(l), valOf(r), attrOf(r), valOf(l)) match {
-      case (Some(c), Some(v), _, _) => Seq((c, Some(v), Some(v)))
-      case (_, _, Some(c), Some(v)) => Seq((c, Some(v), Some(v)))
-      case _ => Nil
-    }
-
-  /** `l > r` / `l >= r`: attribute-left gives a LOWER bound,
-    * attribute-right an UPPER one.
-    */
-  private def geLe(l: Expression,
-      r: Expression): Seq[(String, Option[Any], Option[Any])] =
-    (attrOf(l), valOf(r), attrOf(r), valOf(l)) match {
-      case (Some(c), Some(v), _, _) => Seq((c, Some(v), None))
-      case (_, _, Some(c), Some(v)) => Seq((c, None, Some(v)))
-      case _ => Nil
-    }
-
-  private def leGe(l: Expression,
-      r: Expression): Seq[(String, Option[Any], Option[Any])] =
-    (attrOf(l), valOf(r), attrOf(r), valOf(l)) match {
-      case (Some(c), Some(v), _, _) => Seq((c, None, Some(v)))
-      case (_, _, Some(c), Some(v)) => Seq((c, Some(v), None))
-      case _ => Nil
-    }
-
-  private val utf8Cmp = new java.util.Comparator[String] {
-    override def compare(a: String, b: String): Int =
-      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-  }
-
-  /** Hull-vs-bounds overlap in the zone's own order — type
-    * mismatches (a string bound against an integral hull) never
-    * prune.
-    */
-  private def overlaps(z: ColZone, lo: Option[Any],
-      hi: Option[Any]): Boolean = z.t match {
-    case "l" =>
-      val zl = z.lo.toLong
-      val zh = z.hi.toLong
-      lo.forall { case l: Long => zh >= l; case _ => true } &&
-        hi.forall { case h: Long => zl <= h; case _ => true }
-    case "s" =>
-      lo.forall { case l: String =>
-        utf8Cmp.compare(z.hi, l) >= 0; case _ => true } &&
-        hi.forall { case h: String =>
-          utf8Cmp.compare(z.lo, h) <= 0; case _ => true }
-    case _ => true
+    val keep = filters.reduceOption(And).flatMap(
+      PruneBounds.survivors(_, _ => true)(bounds =>
+        Some(groups.indices.filter(i => keeps(groups(i), bounds)).toSet)))
+    keep.fold(groups)(k => groups.indices.filter(k).map(groups))
   }
 }

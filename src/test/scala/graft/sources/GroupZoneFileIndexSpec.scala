@@ -40,11 +40,11 @@ class GroupZoneFileIndexSpec extends AnyFunSuite with Matchers {
     dirs(EqualTo(dayL, Literal(15L))) shouldBe Seq("g1", "gz")
     dirs(EqualTo(Literal(15L), dayL)) shouldBe Seq("g1", "gz")
     dirs(GreaterThan(dayL, Literal(19L))) shouldBe
-      Seq("g1", "g2", "gz") // inclusive relaxation keeps g1
+      Seq("g2", "gz") // strict bound tightens by one: day >= 20
     dirs(GreaterThanOrEqual(dayL, Literal(20L))) shouldBe
       Seq("g2", "gz")
     dirs(LessThan(dayL, Literal(10L))) shouldBe
-      Seq("g0", "g1", "gz")
+      Seq("g0", "gz")
     dirs(In(dayL, Seq(Literal(3L), Literal(25L)))) shouldBe
       Seq("g0", "g1", "g2", "gz") // In = [min,max] envelope
     dirs(In(dayL, Seq(Literal(12L), Literal(17L)))) shouldBe
@@ -85,7 +85,8 @@ class GroupZoneFileIndexSpec extends AnyFunSuite with Matchers {
     val all = groups.map(_.dir)
     dirs(IsNull(dayL)) shouldBe all
     dirs(Or(EqualTo(dayL, Literal(5L)),
-      EqualTo(dayL, Literal(25L)))) shouldBe all
+      EqualTo(dayL, Literal(25L)))) shouldBe
+      Seq("g0", "g2", "gz") // a recognized OR prunes to its union
     dirs(EqualTo(dayL, dayL)) shouldBe all
     dirs(EqualTo(dayL, Literal(null, LongType))) shouldBe all
     dirs(EqualTo(AttributeReference("x", DoubleType)(),
