@@ -329,8 +329,9 @@ object VersionedStore {
     * the race spec reproduce a stale first attempt deterministically.
     *
     * `guard` extends the rebase rule to DETECTION-BASED
-    * copy-on-write commands (updateWhere / deleteWhere / merge /
-    * mergeInto / deleteKeys), whose correctness depends on what
+    * copy-on-write commands (the mutation core [[rewriteMatching]]
+    * behind deleteWhere / updateWhere / replaceWhere / deleteKeys /
+    * merge / mergeInto builds it), whose correctness depends on what
     * their detection scan SAW, not just on which groups they
     * rewrite: `guard = Some((baseV, safe))` re-validates the
     * detection snapshot against every commit that landed after
@@ -1074,26 +1075,24 @@ object VersionedStore {
 
   /** Live file-groups a single-key mutation's detection scan must
     * read. When the key is zone-armed, the span of `keys`' key
-    * values prunes to the groups whose zone overlaps it — string
-    * zones for a string key, integral zones otherwise; a span with
+    * values prunes to the groups whose zone overlaps it; a span with
     * no non-NULL key matches nothing. `span` is that (min, max) row
-    * when the caller already computed it (its first two fields);
-    * otherwise one aggregate over `keys` computes it. Any other key
-    * shape reads every live group.
+    * when the caller already computed it ([[keyGate]]); otherwise one
+    * aggregate over `keys` computes it. Any other key shape reads
+    * every live group.
     */
   private def keySpanFids(spark: SparkSession, path: String, v: Long,
       keyCols: Seq[String], keys: DataFrame,
       span: Option[org.apache.spark.sql.Row] = None): Seq[Long] =
     keyCols match {
-      case Seq(c) if zoneArmed(spark, path, v, c) =>
-        val isStr = keys.schema(c).dataType ==
-          org.apache.spark.sql.types.StringType
+      case Seq(c) if zoneArmed(spark, path, v, c) &&
+          zoneTypeOf(keys, c).isDefined =>
         val r = span.getOrElse {
           val aggs = keySpanAggs(keys, c)
           keys.agg(aggs.head, aggs.tail: _*).head
         }
         if (r.isNullAt(0)) Seq.empty
-        else if (isStr)
+        else if (zoneTypeOf(keys, c).contains("s"))
           candidateFidsStr(spark, path, v, c, r.getString(0),
             r.getString(1))
         else candidateFids(spark, path, v, c, r.getLong(0),
@@ -1101,17 +1100,50 @@ object VersionedStore {
       case _ => liveFids(spark, path, v)
     }
 
-  /** (min, max) of key column `c` in the form its zones compare:
-    * raw strings for a string key, longs otherwise.
+  /** (min, max) of key column `c` in zone space ([[zoneValue]]); none
+    * when the column has no zone family.
     */
   private def keySpanAggs(keys: DataFrame, c: String): Seq[Column] =
-    if (keys.schema(c).dataType == org.apache.spark.sql.types.StringType)
-      Seq(min(col(c)), max(col(c)))
-    else Seq(min(col(c)).cast("long"), max(col(c)).cast("long"))
+    if (zoneTypeOf(keys, c).isEmpty) Nil
+    else Seq(min(zoneValue(keys, c)), max(zoneValue(keys, c)))
+
+  /** The one duplicate-key gate of the keyed writes ([[merge]],
+    * [[mergeInto]], a keyed model's first run): true when `df`
+    * carries some key tuple twice. For a single key the same one-job
+    * pass also returns the key span ([[keySpanAggs]], fields 0 and
+    * 1, absent for a key with no zone family) that [[keySpanFids]]
+    * prunes by — the span of the distinct keys equals the span of
+    * the raw rows.
+    */
+  private[graft] def keyGate(df: DataFrame,
+      keyCols: Seq[String]): (Boolean, Option[org.apache.spark.sql.Row]) =
+    keyCols match {
+      case Seq(c) =>
+        val aggs = keySpanAggs(df, c) :+ max(col("_cnt"))
+        val r = df.groupBy(col(c)).agg(count(lit(1)).as("_cnt"))
+          .agg(aggs.head, aggs.tail: _*).head
+        val m = r.length - 1
+        (!r.isNullAt(m) && r.getLong(m) > 1, Some(r))
+      case _ =>
+        (df.groupBy(keyCols.map(col): _*).count()
+          .filter(col("count") > 1).limit(1).count() > 0, None)
+    }
 
   /** The zone family of `df`'s column `c` ([[PruneBounds.zoneType]]). */
   private def zoneTypeOf(df: DataFrame, c: String): Option[String] =
     PruneBounds.zoneType(df.schema(c).dataType)
+
+  /** `df`'s column `c` in zone space — a date's day number, a string
+    * as is, any other zoned type as a long: the one encoding zones are
+    * written in and key spans compared in.
+    */
+  private def zoneValue(df: DataFrame, c: String): Column =
+    df.schema(c).dataType match {
+      case org.apache.spark.sql.types.DateType =>
+        unix_date(col(c)).cast("long")
+      case org.apache.spark.sql.types.StringType => col(c)
+      case _ => col(c).cast("long")
+    }
 
   /** min/max aggregate pair for one zone column — aggregated in the
     * column's OWN order (never on a stringified form, which would be
@@ -1119,12 +1151,7 @@ object VersionedStore {
     * string encoding.
     */
   private def zoneAggs(df: DataFrame, c: String): Seq[Column] = {
-    val v = df.schema(c).dataType match {
-      case org.apache.spark.sql.types.DateType =>
-        unix_date(col(c)).cast("long")
-      case org.apache.spark.sql.types.StringType => col(c)
-      case _ => col(c).cast("long")
-    }
+    val v = zoneValue(df, c)
     Seq(min(v).cast("string").as(s"_zlo_$c"),
       max(v).cast("string").as(s"_zhi_$c"))
   }
@@ -2662,6 +2689,84 @@ object VersionedStore {
     commit(spark, path, Nil, retire, guard = Some((v, _ => true)))
   }
 
+  /** The copy-on-write mutation core behind [[deleteWhere]],
+    * [[updateWhere]], [[replaceWhere]], [[deleteKeys]], [[merge]] and
+    * [[mergeInto]] — each passes its scan fids, its hit test and its
+    * rewrite, and the protocol runs here once:
+    *  1. detection: `hit` over the DV-applied content of `scanFids`
+    *     (each row carrying its `_vs_fid`) names the affected
+    *     groups. Rows a DV already masks neither trigger a rewrite
+    *     nor survive into one;
+    *  2. `rewrite` turns the affected groups' DV-applied rows into
+    *     the kept rows, which pass the constraint gate when
+    *     `checkRewrite` and land as fresh groups in ONE
+    *     [[rewriteGroups]] pass under the store's stats column,
+    *     zones and Blooms. A group rewritten to zero rows still
+    *     commits (an empty parquet dir reads fine inside a
+    *     multi-path union);
+    *  3. `insert` writes its groups after the rewrites, so they carry
+    *     the commit's highest fids;
+    *  4. ONE commit retires the affected groups, carrying `txn` and
+    *     the detection guard ([[commitRetrying]]'s `guard`): a
+    *     concurrent append holding a row `guardHit` (default `hit`)
+    *     matches aborts the commit.
+    * With no affected group and nothing inserted there is no commit,
+    * and `v` is returned. Untouched groups are carried by reference.
+    */
+  private def rewriteMatching(spark: SparkSession, path: String,
+      v: Long, scanFids: Seq[Long], hit: DataFrame => DataFrame,
+      rewrite: DataFrame => DataFrame,
+      guardHit: Option[DataFrame => DataFrame] = None,
+      checkRewrite: Boolean = false,
+      insert: () => Seq[GroupAdd] = () => Nil,
+      txn: Long = -1L): Long = {
+    def content(fids: Seq[Long]) =
+      applyDvs(spark, path, v, withFidOf(spark, path, fids))
+    val affected =
+      if (scanFids.isEmpty) Seq.empty[Long]
+      else hit(content(scanFids)).select("_vs_fid").distinct()
+        .collect().map(_.getLong(0)).sorted.toSeq
+    val rewrites =
+      if (affected.isEmpty) Seq.empty[GroupAdd]
+      else {
+        val kept = rewrite(content(affected))
+        if (checkRewrite) validate(kept.drop("_vs_fid"), path)
+        val (zoneCols, bloomCols) = storePropagation(spark, path)
+        rewriteGroups(spark, path, kept,
+          affected.zip(claimFids(spark, path, affected.length)),
+          storeStatsCol(spark, path), zoneCols, bloomCols)
+      }
+    val inserts = insert()
+    if (rewrites.isEmpty && inserts.isEmpty) return v
+    val test = guardHit.getOrElse(hit)
+    commitRetrying(spark, path, rewrites ++ inserts, affected, txn,
+      guard = Some((v, winFids =>
+        test(withFidOf(spark, path, winFids)).isEmpty)))
+  }
+
+  /** Write `df` as one fresh file-group under the store's stats
+    * column, zones and Blooms — the insert group of the mutators.
+    */
+  private def writeFresh(df: DataFrame, path: String): GroupAdd = {
+    val spark = df.sparkSession
+    val (zoneCols, bloomCols) = storePropagation(spark, path)
+    val Seq(fid) = claimFids(spark, path, 1)
+    writeGroup(df, path, fid, storeStatsCol(spark, path), zoneCols,
+      bloomCols)
+  }
+
+  /** The live groups a predicate mutation's detection reads: with a
+    * caller-asserted `keyRange` on a store that maintains a stats
+    * column, the groups whose zone overlaps it; otherwise all.
+    */
+  private def rangeFids(spark: SparkSession, path: String, v: Long,
+      keyRange: Option[(Long, Long)]): Seq[Long] =
+    (keyRange, storeStatsCol(spark, path)) match {
+      case (Some((lo, hi)), Some(c)) =>
+        candidateFids(spark, path, v, c, lo, hi)
+      case _ => liveFids(spark, path, v)
+    }
+
   /** Remove the rows matching `pred`, rewriting ONLY the file-groups
     * that contain matches (one scan finds them via the file path of
     * each matching row); untouched groups are carried over by
@@ -2676,34 +2781,8 @@ object VersionedStore {
       snapshotV: Long = -1L): Long = {
     val v = if (snapshotV >= 0) snapshotV
       else latestVersion(spark, path)
-    val scanFids = (keyRange, storeStatsCol(spark, path)) match {
-      case (Some((lo, hi)), Some(c)) =>
-        candidateFids(spark, path, v, c, lo, hi)
-      case _ => liveFids(spark, path, v)
-    }
-    if (scanFids.isEmpty) return v
-    // DV-applied view: rows already deferred-deleted neither trigger
-    // a rewrite nor survive into one (rewritten groups come out
-    // purged of their DV'd rows)
-    val withFid = applyDvs(spark, path, v,
-      withFidOf(spark, path, scanFids))
-    val affected = withFid.filter(pred).select("_vs_fid")
-      .distinct().collect().map(_.getLong(0)).sorted
-    if (affected.isEmpty) return v
-    val statsCol = storeStatsCol(spark, path)
-    val propag = storePropagation(spark, path)
-    val fidOf = affected.toSeq.zip(
-      claimFids(spark, path, affected.length))
-    // groups rewritten to zero rows still commit (an empty parquet
-    // dir reads fine inside a multi-path union)
-    val kept = withFid
-      .filter(col("_vs_fid").isin(affected.map(Long.box): _*))
-      .filter(!coalesce(pred, lit(false)))
-    val adds = rewriteGroups(spark, path, kept, fidOf, statsCol,
-      propag._1, propag._2)
-    commit(spark, path, adds, affected.toSeq,
-      guard = Some((v, winFids =>
-        withFidOf(spark, path, winFids).filter(pred).isEmpty)))
+    rewriteMatching(spark, path, v, rangeFids(spark, path, v, keyRange),
+      _.filter(pred), _.filter(!coalesce(pred, lit(false))))
   }
 
   /** Atomic REPLACE WHERE — the partition-overwrite semantic (the
@@ -2737,36 +2816,12 @@ object VersionedStore {
         "land inside the region they replace (row sample: " +
         s"${stray.head.toString.take(200)})")
     val v = latestVersion(spark, path)
-    val scanFids = liveFids(spark, path, v)
-    val statsCol = storeStatsCol(spark, path)
-    val propag = storePropagation(spark, path)
-    val affected: Seq[Long] =
-      if (scanFids.isEmpty) Nil
-      else applyDvs(spark, path, v, withFidOf(spark, path, scanFids))
-        .filter(pred).select("_vs_fid")
-        .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    val rewriteAdds =
-      if (affected.isEmpty) Seq.empty[GroupAdd]
-      else {
-        val fidOf = affected.zip(
-          claimFids(spark, path, affected.length))
-        val kept = applyDvs(spark, path, v,
-          withFidOf(spark, path, affected))
-          .filter(!coalesce(pred, lit(false)))
-        rewriteGroups(spark, path, kept, fidOf, statsCol,
-          propag._1, propag._2)
-      }
-    val newAdds =
-      if (clusterBy.nonEmpty)
-        clusteredAdds(df, path, clusterBy, 64, statsCol)
-      else {
-        val Seq(fid) = claimFids(spark, path, 1)
-        Seq(writeGroup(df, path, fid, statsCol, propag._1,
-          propag._2))
-      }
-    commit(spark, path, rewriteAdds ++ newAdds, affected,
-      guard = Some((v, winFids =>
-        withFidOf(spark, path, winFids).filter(pred).isEmpty)))
+    rewriteMatching(spark, path, v, liveFids(spark, path, v),
+      _.filter(pred), _.filter(!coalesce(pred, lit(false))),
+      insert = () =>
+        if (clusterBy.isEmpty) Seq(writeFresh(df, path))
+        else clusteredAdds(df, path, clusterBy, 64,
+          storeStatsCol(spark, path)))
   }
 
   /** Copy-on-write UPDATE — the predicate form of DML the keyed
@@ -2804,46 +2859,24 @@ object VersionedStore {
           s"(schema: ${cur.map(_.fieldNames.mkString(", "))
             .getOrElse("untracked")})")
     }
-    val scanFids = (keyRange, storeStatsCol(spark, path)) match {
-      case (Some((lo, hi)), Some(c)) =>
-        candidateFids(spark, path, v, c, lo, hi)
-      case _ => liveFids(spark, path, v)
-    }
-    if (scanFids.isEmpty) return v
-    val withFid = applyDvs(spark, path, v,
-      withFidOf(spark, path, scanFids))
-    val affected = withFid.filter(pred).select("_vs_fid")
-      .distinct().collect().map(_.getLong(0)).sorted
-    if (affected.isEmpty) return v
-    val statsCol = storeStatsCol(spark, path)
-    val propag = storePropagation(spark, path)
-    val fidOf = affected.toSeq.zip(
-      claimFids(spark, path, affected.length))
     val hit = coalesce(pred, lit(false))
     val setOf = sets.toMap
-    val touched = withFid
-      .filter(col("_vs_fid").isin(affected.map(Long.box): _*))
     // ONE projection against the original attributes: every SET and
-    // the predicate see the pre-update row
-    val kept = touched.select(touched.columns.map { c =>
-      setOf.get(c) match {
-        case Some(e) =>
-          val dt = touched.schema(c).dataType
-          when(hit, e.cast(dt)).otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }: _*)
-    // the same write discipline every other mutator enforces: the
-    // post-update rows must satisfy the table constraints, else
-    // `UPDATE t SET g = -5` would commit rows an append/merge of the
-    // identical values rejects. Scoped to the rewritten groups —
-    // untouched groups already passed at their own write.
-    validate(kept.drop("_vs_fid"), path)
-    val adds = rewriteGroups(spark, path, kept, fidOf, statsCol,
-      propag._1, propag._2)
-    commit(spark, path, adds, affected.toSeq,
-      guard = Some((v, winFids =>
-        withFidOf(spark, path, winFids).filter(pred).isEmpty)))
+    // the predicate see the pre-update row. The post-update rows pass
+    // the table constraints like every other write (`UPDATE t SET
+    // g = -5` must not commit rows an append of the same values
+    // rejects); untouched groups already passed at their own write.
+    rewriteMatching(spark, path, v, rangeFids(spark, path, v, keyRange),
+      _.filter(pred),
+      touched => touched.select(touched.columns.map { c =>
+        setOf.get(c) match {
+          case Some(e) =>
+            val dt = touched.schema(c).dataType
+            when(hit, e.cast(dt)).otherwise(col(c)).as(c)
+          case None => col(c)
+        }
+      }: _*),
+      checkRewrite = true)
   }
 
   /** Remove every row whose key tuple appears in `keys` — the form a
@@ -2851,32 +2884,18 @@ object VersionedStore {
     * not a predicate you could spell inline ([[deleteWhere]]'s
     * `isin` would need the whole list collected to the driver).
     * Detection and rewrite both join against the key frame (AQE
-    * broadcasts it when small, shuffles when not); only file-groups
-    * containing matches rewrite, in one partitioned pass.
+    * broadcasts it when small, shuffles when not); the detection
+    * reads only the groups the keys' span overlaps
+    * ([[keySpanFids]]), and only file-groups containing matches
+    * rewrite, in one partitioned pass.
     */
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCols: Seq[String]): Long = {
     val v = latestVersion(spark, path)
-    val fids = liveFids(spark, path, v)
-    if (fids.isEmpty) return v
     val k = keys.select(keyCols.map(col): _*).distinct()
-    val withFid = applyDvs(spark, path, v,
-      withFidOf(spark, path, fids))
-    val affected = withFid.join(k, keyCols, "left_semi")
-      .select("_vs_fid").distinct().collect().map(_.getLong(0)).sorted
-    if (affected.isEmpty) return v
-    val statsCol = storeStatsCol(spark, path)
-    val propag = storePropagation(spark, path)
-    val fidOf = affected.toSeq.zip(
-      claimFids(spark, path, affected.length))
-    val kept = withFid
-      .filter(col("_vs_fid").isin(affected.map(Long.box): _*))
-      .join(k, keyCols, "left_anti")
-    val adds = rewriteGroups(spark, path, kept, fidOf, statsCol,
-      propag._1, propag._2)
-    commit(spark, path, adds, affected.toSeq,
-      guard = Some((v, winFids => withFidOf(spark, path, winFids)
-        .join(k, keyCols, "left_semi").isEmpty)))
+    rewriteMatching(spark, path, v,
+      keySpanFids(spark, path, v, keyCols, k),
+      _.join(k, keyCols, "left_semi"), _.join(k, keyCols, "left_anti"))
   }
 
   /** Deletion-vector (merge-on-read) point delete: commit a small
@@ -2942,29 +2961,12 @@ object VersionedStore {
       case Some(v) => return v // replayed merge: already committed
       case None => ()
     }
-    // fused pre-pass (ONE job where it used to be two): per-key
-    // counts give the duplicate gate, and for single-key merges the
-    // same pass carries the key SPAN the zone-pruned detection scan
-    // needs — the span of the distinct keys equals the span of the
-    // raw updates
-    val keySpan = keyCols match {
-      case Seq(c) =>
-        val aggs = keySpanAggs(updates, c) :+ max(col("_cnt"))
-        val r = updates.groupBy(col(c))
-          .agg(count(lit(1)).as("_cnt"))
-          .agg(aggs.head, aggs.tail: _*).head
-        if (!r.isNullAt(2) && r.getLong(2) > 1) sys.error(
-          "VersionedStore.merge: updates carry duplicate keys — " +
-            "the merge result would be order-dependent")
-        Some(r)
-      case _ =>
-        val dupKeys = updates.groupBy(keyCols.map(col): _*)
-          .count().filter(col("count") > 1).limit(1).count()
-        if (dupKeys > 0) sys.error(
-          "VersionedStore.merge: updates carry duplicate keys — " +
-            "the merge result would be order-dependent")
-        None
-    }
+    // one pre-pass: the duplicate gate, carrying the key span the
+    // zone-pruned detection scan needs
+    val (dup, keySpan) = keyGate(updates, keyCols)
+    if (dup) sys.error(
+      "VersionedStore.merge: updates carry duplicate keys — " +
+        "the merge result would be order-dependent")
     // same write-boundary schema gate as append: a retyping update
     // batch would otherwise become the table schema (its insert
     // group carries the commit's highest fid) and corrupt every
@@ -2973,33 +2975,7 @@ object VersionedStore {
     checkSchema(updates, path, "merge", canEvolve = false)
     validate(updates, path)
     val v = latestVersion(spark, path)
-    val statsCol = storeStatsCol(spark, path)
-    val (zoneCols, mergeBloomCols) = storePropagation(spark, path)
-    // when live groups carry a zone ON the merge key (numeric or
-    // string), the update-key span (two scalars off the small side,
-    // carried by the dup-gate pass) prunes both the affected-group
-    // detection scan and the rewrites to the overlapping file-groups
-    // — O(touched groups), not O(table)
-    val scanFids = keySpanFids(spark, path, v, keyCols, updates,
-      keySpan)
     val keys = broadcast(updates.select(keyCols.map(col): _*))
-    val withFid =
-      if (scanFids.isEmpty) None
-      else Some(applyDvs(spark, path, v,
-        withFidOf(spark, path, scanFids)))
-    val affected = withFid.map { w =>
-      w.join(keys, keyCols, "left_semi").select("_vs_fid")
-        .distinct().collect().map(_.getLong(0)).sorted
-    }.getOrElse(Array.empty[Long])
-    val newFids = claimFids(spark, path, affected.length + 1)
-    val fidOf = affected.toSeq.zip(newFids)
-    val rewrites =
-      if (affected.isEmpty) Seq.empty
-      else rewriteGroups(spark, path,
-        withFid.get
-          .filter(col("_vs_fid").isin(affected.map(Long.box): _*))
-          .join(keys, keyCols, "left_anti"),
-        fidOf, statsCol, zoneCols, mergeBloomCols)
     // note on deletion vectors: a matched row that an older DV
     // already masks is invisible to the detection scan, so its group
     // is not rewritten — harmless, because the masked physical row
@@ -3007,18 +2983,17 @@ object VersionedStore {
     // fid) while the update lands in the fresh insert group, whose
     // higher fid no existing DV can mask. Re-inserting a
     // DV-deleted key therefore just works.
-    val insFid = newFids.last
-    val live = liveFids(spark, path, v)
-    val cols =
-      if (live.isEmpty) updates.columns
-      else readAt(spark, path, v).columns
-    val ins = updates.select(cols.map(col): _*)
-    commitRetrying(spark, path,
-      rewrites :+ writeGroup(ins, path, insFid, statsCol, zoneCols,
-        mergeBloomCols),
-      affected.toSeq, txn,
-      guard = Some((v, winFids => withFidOf(spark, path, winFids)
-        .join(keys, keyCols, "left_semi").isEmpty)))
+    rewriteMatching(spark, path, v,
+      keySpanFids(spark, path, v, keyCols, updates, keySpan),
+      _.join(keys, keyCols, "left_semi"),
+      _.join(keys, keyCols, "left_anti"),
+      insert = () => {
+        val cols =
+          if (liveFids(spark, path, v).isEmpty) updates.columns
+          else readAt(spark, path, v).columns
+        Seq(writeFresh(updates.select(cols.map(col): _*), path))
+      },
+      txn = txn)
   }
 
   /** One action of [[mergeInto]]'s WHEN MATCHED list. `cond` (over
@@ -3096,12 +3071,13 @@ object VersionedStore {
     * insert group. The rewritten and inserted rows run the same
     * constraint gate as every other mutator.
     *
-    * Scale shape: detection scans prune through zone/stat metadata
-    * on a single join key exactly like [[merge]]'s (the source key
-    * span bounds where matches can live); the anti-join for inserts
-    * is a column-pruned key scan; rewrites touch only affected
-    * groups. Duplicate source keys are rejected when any matched
-    * action exists — the result would be order-dependent.
+    * Scale shape: the detection scan and the inserts' anti-join (a
+    * column-pruned key scan) prune through zone/stat metadata on a
+    * single join key exactly like [[merge]]'s (the source key span
+    * bounds where matches can live); rewrites touch only affected
+    * groups, and the insert group is written once. Duplicate source
+    * keys are rejected when any matched action exists — the result
+    * would be order-dependent.
     *
     * Concurrency: the commit carries a detection guard
     * ([[commitRetrying]]'s `guard`) — key-disjoint concurrent
@@ -3160,18 +3136,16 @@ object VersionedStore {
       require(tgtSchema.fieldNames.contains(c),
         s"VersionedStore.mergeInto: INSERT names unknown column " +
           s"`$c`") })
-    if (matched.nonEmpty) {
-      val dup = source.groupBy(keyCols.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).count()
-      if (dup > 0) sys.error(
-        "VersionedStore.mergeInto: source carries duplicate keys — " +
-          "matched-action results would be order-dependent")
-    }
-    val statsCol = storeStatsCol(spark, path)
-    val propag = storePropagation(spark, path)
-    // detection pruning, merge's rule: with a zone armed on a
-    // single join key, the source key span bounds where matches live
-    val scanFids = keySpanFids(spark, path, v, keyCols, source)
+    val (dup, keySpan) =
+      if (matched.isEmpty) (false, None) else keyGate(source, keyCols)
+    if (dup) sys.error(
+      "VersionedStore.mergeInto: source carries duplicate keys — " +
+        "matched-action results would be order-dependent")
+    // merge's pruning rule: with a zone armed on a single join key,
+    // the source key span bounds where matches live — and where the
+    // inserts' anti-join must look, as a group outside the span
+    // cannot hold a source key
+    val spanFids = keySpanFids(spark, path, v, keyCols, source, keySpan)
     val srcPref = source.select(
       (keyCols.map(col) ++ srcCols.filterNot(keyCols.contains)
         .map(c => col(c).as(s"_src_$c"))
@@ -3188,117 +3162,85 @@ object VersionedStore {
           coalesce(a.cond.getOrElse(lit(true)), lit(false)),
           lit(i)).otherwise(acc)
     }
-    val joined =
-      if (matched.isEmpty || scanFids.isEmpty) None
-      else Some(applyDvs(spark, path, v,
-        withFidOf(spark, path, scanFids))
-        // no broadcast hint: AQE broadcasts a small source and
-        // shuffles a large one — a forced broadcast would OOM on a
-        // table-sized source
-        .join(srcPref, keyCols, "left")
-        .withColumn("_fired", fired))
-    val affected = joined.map {
-      _.filter(col("_fired") >= 0).select("_vs_fid")
-        .distinct().collect().map(_.getLong(0)).sorted.toSeq
-    }.getOrElse(Seq.empty)
-    // unmatched source rows → first applicable insert action
+    // no broadcast hint: AQE broadcasts a small source and shuffles a
+    // large one — a forced broadcast would OOM on a table-sized source
+    def joined(w: DataFrame) =
+      w.join(srcPref, keyCols, "left").withColumn("_fired", fired)
+    val deleteIdxs = matched.zipWithIndex.collect {
+      case (MergeDelete(_), i) => i }
+    val updateActs = matched.zipWithIndex.collect {
+      case (u: MergeUpdate, i) => (u, i) }
+    def rewrite(w: DataFrame): DataFrame = {
+      val touched = joined(w)
+      val surviving =
+        if (deleteIdxs.isEmpty) touched
+        else touched.filter(
+          !col("_fired").isin(deleteIdxs.map(Int.box): _*))
+      // ONE projection over the pre-merge attributes: every SET
+      // and condition sees the original row (+ its source match)
+      surviving.select((tgtSchema.fields.map { f =>
+        updateActs.foldRight(col(f.name)) { case ((u, i), acc) =>
+          val value =
+            if (u.sets.isEmpty)
+              if (keyCols.contains(f.name)) None // key equal anyway
+              else Some(col(s"_src_${f.name}"))
+            else u.sets.toMap.get(f.name)
+          value match {
+            case Some(e) => when(col("_fired") === i,
+              ansiAssign(surviving, e, f,
+                "a WHEN MATCHED UPDATE SET value")).otherwise(acc)
+            case None => acc
+          }
+        }.as(f.name)
+      } :+ col("_vs_fid")).toIndexedSeq: _*)
+    }
+    // unmatched source rows → first applicable insert action, written
+    // once; an insert group that comes out empty is left out
     val insFired = notMatched.zipWithIndex.foldRight(lit(-1)) {
       case ((a, i), acc) =>
         when(coalesce(a.cond.getOrElse(lit(true)), lit(false)),
           lit(i)).otherwise(acc)
     }
-    val allLive = liveFids(spark, path, v)
-    val insRows =
-      if (notMatched.isEmpty) None
-      else {
-        val unmatched =
-          if (allLive.isEmpty) source
-          else source.join(
-            applyDvs(spark, path, v, withFidOf(spark, path, allLive))
-              .select(keyCols.map(col): _*),
-            keyCols, "left_anti")
-        val picked = unmatched.withColumn("_fired", insFired)
-          .filter(col("_fired") >= 0)
-        val projected = picked.select(tgtSchema.fields.map { f =>
-          notMatched.zipWithIndex.foldRight(
-            lit(null).cast(f.dataType)) { case ((a, i), acc) =>
-            val value =
-              if (a.values.isEmpty)
-                if (srcCols.contains(f.name)) Some(col(f.name))
-                else None
-              else a.values.toMap.get(f.name)
-            value match {
-              case Some(e) => when(col("_fired") === i,
-                ansiAssign(picked, e, f,
-                  "a WHEN NOT MATCHED INSERT value")).otherwise(acc)
-              case None => acc
-            }
-          }.as(f.name)
-        }.toIndexedSeq: _*)
-        if (projected.isEmpty) None else Some(projected)
-      }
-    if (affected.isEmpty && insRows.isEmpty) return v
-    val deleteIdxs = matched.zipWithIndex.collect {
-      case (MergeDelete(_), i) => i }
-    val updateActs = matched.zipWithIndex.collect {
-      case (u: MergeUpdate, i) => (u, i) }
-    val newFids = claimFids(spark, path,
-      affected.length + (if (insRows.isDefined) 1 else 0))
-    val fidOf = affected.zip(newFids)
-    val rewrites =
-      if (affected.isEmpty) Seq.empty
-      else {
-        val touched = joined.get
-          .filter(col("_vs_fid").isin(affected.map(Long.box): _*))
-        val surviving =
-          if (deleteIdxs.isEmpty) touched
-          else touched.filter(
-            !col("_fired").isin(deleteIdxs.map(Int.box): _*))
-        // ONE projection over the pre-merge attributes: every SET
-        // and condition sees the original row (+ its source match)
-        val kept = surviving.select((tgtSchema.fields.map { f =>
-          updateActs.foldRight(col(f.name)) { case ((u, i), acc) =>
-            val value =
-              if (u.sets.isEmpty)
-                if (keyCols.contains(f.name)) None // key equal anyway
-                else Some(col(s"_src_${f.name}"))
-              else u.sets.toMap.get(f.name)
-            value match {
-              case Some(e) => when(col("_fired") === i,
-                ansiAssign(surviving, e, f,
-                  "a WHEN MATCHED UPDATE SET value")).otherwise(acc)
-              case None => acc
-            }
-          }.as(f.name)
-        } :+ col("_vs_fid")).toIndexedSeq: _*)
-        validate(kept.drop("_vs_fid"), path)
-        rewriteGroups(spark, path, kept, fidOf, statsCol,
-          propag._1, propag._2)
-      }
-    val insAdds = insRows.map { r =>
-      validate(r, path)
-      writeGroup(r, path, newFids.last, statsCol,
-        propag._1, propag._2)
-    }.toSeq
+    def inserted(): Seq[GroupAdd] = {
+      val unmatched =
+        if (spanFids.isEmpty) source
+        else source.join(
+          applyDvs(spark, path, v, withFidOf(spark, path, spanFids))
+            .select(keyCols.map(col): _*),
+          keyCols, "left_anti")
+      val picked = unmatched.withColumn("_fired", insFired)
+        .filter(col("_fired") >= 0)
+      val projected = picked.select(tgtSchema.fields.map { f =>
+        notMatched.zipWithIndex.foldRight(
+          lit(null).cast(f.dataType)) { case ((a, i), acc) =>
+          val value =
+            if (a.values.isEmpty)
+              if (srcCols.contains(f.name)) Some(col(f.name))
+              else None
+            else a.values.toMap.get(f.name)
+          value match {
+            case Some(e) => when(col("_fired") === i,
+              ansiAssign(picked, e, f,
+                "a WHEN NOT MATCHED INSERT value")).otherwise(acc)
+            case None => acc
+          }
+        }.as(f.name)
+      }.toIndexedSeq: _*)
+      validate(projected, path)
+      Seq(writeFresh(projected, path)).filter(_.n > 0)
+    }
     // OCC guard: a concurrent append whose rows carry any SOURCE
     // key would change this merge's matched/unmatched classification
     // (a missed update, or a duplicate key from an insert action) —
     // conflict; key-disjoint appends rebase freely
-    val srcKeys = source.select(keyCols.map(col): _*).distinct()
-    commit(spark, path, rewrites ++ insAdds, affected,
-      guard = Some((v, winFids => withFidOf(spark, path, winFids)
-        .join(broadcast(srcKeys), keyCols, "left_semi").isEmpty)))
+    val srcKeys = broadcast(source.select(keyCols.map(col): _*).distinct())
+    rewriteMatching(spark, path, v, if (matched.isEmpty) Nil else spanFids,
+      w => joined(w).filter(col("_fired") >= 0), rewrite,
+      guardHit = Some(_.join(srcKeys, keyCols, "left_semi")),
+      checkRewrite = true,
+      insert = () => if (notMatched.isEmpty) Nil else inserted())
   }
 
-  /** Zero-copy plan for a PURE-APPEND change window — the common
-    * streaming case: when every log record in `(from, to]` is a
-    * plain add under the current schema with no live column
-    * mapping, the window's feed is exactly the added groups' files
-    * tagged `insert`, and a streaming source can read them in place
-    * (no derivation job, no staging copy). Any rewrite, delete, DV,
-    * restore, or schema/mapping change in the window → None, and
-    * the caller derives the netted feed via [[changes]].
-    */
   /** The LIVE content of version `v` as bare in-place group files —
     * the row stream's vacuum-safe INITIAL SNAPSHOT plan
     * (`readStream.table` starts from the CURRENT state, never from
@@ -3314,6 +3256,15 @@ object VersionedStore {
       liveDvFids(spark, path, v).nonEmpty) None
     else Some(groupDirs(spark, path, liveFids(spark, path, v)))
 
+  /** Zero-copy plan for a PURE-APPEND change window — the common
+    * streaming case: when every log record in `(from, to]` is a
+    * plain add under the current schema with no live column
+    * mapping, the window's feed is exactly the added groups' files
+    * tagged `insert`, and a streaming source can read them in place
+    * (no derivation job, no staging copy). Any rewrite, delete, DV,
+    * restore, or schema/mapping change in the window → None, and
+    * the caller derives the netted feed via [[changes]].
+    */
   private[graft] def appendOnlyWindow(spark: SparkSession,
       path: String, from: Long, to: Long): Option[Seq[String]] = {
     val recs = logRecords(spark, path)

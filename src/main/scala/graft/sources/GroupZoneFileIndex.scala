@@ -70,7 +70,9 @@ object GroupZoneFileIndex {
     * [[org.apache.spark.sql.execution.datasources.HadoopFsRelation]]
     * whose file index is a [[GroupZoneFileIndex]], i.e. exactly what
     * `spark.read.schema(…).parquet(dirs)` builds, with file skipping
-    * wired in.
+    * wired in. Like that read, it scans under the nullable form of
+    * `scanSchema`: a group written before a non-nullable column was
+    * added reads NULL there.
     */
   def scan(spark: org.apache.spark.sql.SparkSession,
       groups: Seq[GroupFiles],
@@ -81,7 +83,8 @@ object GroupZoneFileIndex {
       .HadoopFsRelation(
         location = new GroupZoneFileIndex(groups),
         partitionSchema = StructType(Nil),
-        dataSchema = scanSchema,
+        dataSchema = org.apache.spark.sql.graft.StoreSqlShims
+          .nullable(scanSchema),
         bucketSpec = None,
         fileFormat = new org.apache.spark.sql.execution.datasources
           .parquet.ParquetFileFormat,

@@ -222,15 +222,10 @@ class ModelRegistry(spark: SparkSession) {
         // duplicate keys would poison the store, and the next
         // run's merge would silently collapse each duplicated key
         // (later runs get the check inside merge itself)
-        if (m.uniqueKey.nonEmpty && thisOpt.isEmpty) {
-          val dup = candidates.groupBy(m.uniqueKey.map(
-            org.apache.spark.sql.functions.col): _*)
-            .count().filter(org.apache.spark.sql.functions
-              .col("count") > 1).limit(1).count()
-          require(dup == 0,
+        if (m.uniqueKey.nonEmpty && thisOpt.isEmpty)
+          require(!VersionedStore.keyGate(candidates, m.uniqueKey)._1,
             s"incremental model ${m.name}: candidates carry " +
               s"duplicate ${m.uniqueKey.mkString(",")} keys")
-        }
         (thisOpt, m.uniqueKey) match {
           case (None, _) | (_, Seq()) =>
             VersionedStore.append(candidates, m.storePath, m.statsCol)
