@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with total + per-query
   * seconds. AQE is on (runtime shuffle coalescing / skew splitting).
@@ -36,16 +34,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark =
+      LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // warm-up: compile/JIT every query's generated code at the target

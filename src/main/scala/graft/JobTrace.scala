@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (guide §1): per-JOB trace of declared queries —
   * `runMain graft.JobTrace q342_join_view_ivm`. Round 0 warms
@@ -14,14 +13,8 @@ import org.apache.spark.sql.SparkSession
 object JobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark =
+      LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class J(id: Int, start: Long, site: String, tasks: Int)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: Verify restricted to named queries (`runMain
   * graft.VerifySome <outDir> <sfDir> q67_ivf_assign …`) — writes the
   * same parquet + oracle_sql.json layout scripts/compare.py consumes,
@@ -11,11 +9,7 @@ object VerifySome {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sfDir = args(1)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val names = args.drop(2).toSet
     val qs = SparkEntry.allQueries.filter(q => names(q.name))

@@ -103,225 +103,3 @@ object HdfsLogStore extends LogStore {
         if (f.exists(p)) false else throw e
     }
 }
-
-/** The one-winner-per-key primitive an object-store deployment
-  * supplies from OUTSIDE the filesystem — the semantic of an S3
-  * conditional PUT (`If-None-Match: *`) or a DynamoDB
-  * `attribute_not_exists` conditional write (the arbitration layer
-  * of the public S3 + coordinator-table LogStore design). The claim
-  * carries a WRITE-AHEAD INTENT value (the staged tmp location), so
-  * any process that finds a claimed-but-unmaterialized destination
-  * can COMPLETE the crashed winner's publication from its durable
-  * staging — the recovery rule that makes claim-then-copy safe on a
-  * backend whose copy is not atomic.
-  */
-trait CommitArbiter {
-  /** Atomically claim `key`, recording `intent`. `None` = this
-    * caller won the key; `Some(existingIntent)` = already claimed
-    * (the stored intent of the winner, for recovery). MUST be
-    * atomic across every process sharing the store.
-    */
-  def claim(key: String, intent: String): Option[String]
-
-  /** Reclaim claims whose key the predicate marks COLLECTIBLE —
-    * the expiry contract that keeps a production coordinator from
-    * growing O(commits + claims) forever (every version publish and
-    * fid claim otherwise leaves a key behind permanently). Returns
-    * the number of claims removed.
-    *
-    * SAFETY RULE — a key is collectible only when no process can
-    * ever contend for it again: commit destinations and fid-claim
-    * markers AT OR BELOW the newest CHECKPOINTED version qualify
-    * (cold readers resolve the log checkpoint-forward, and writers
-    * only ever target versions above latest, so an expired key can
-    * never be re-claimed by a live protocol participant). Expiring
-    * a key above the checkpoint re-opens its arbitration and is
-    * exactly the raw-S3 double-winner corruption. Real backends map
-    * this contract to a DynamoDB TTL on completed entries or an S3
-    * lifecycle rule on the marker prefix — same rule, enforced by
-    * the deployment's maintenance cadence instead of a call site.
-    */
-  def expire(collectible: String => Boolean): Long
-}
-
-/** In-process CAS arbiter — the test/simulation stand-in for a
-  * conditional PUT. Per-JVM only: a multi-process deployment must
-  * supply an arbiter backed by a genuinely shared primitive (the
-  * refusal story for forgetting to do so does not exist at this
-  * layer — the arbiter IS the exclusivity, so a per-JVM arbiter in
-  * a multi-JVM deployment is exactly the raw-S3 corruption; deploy
-  * accordingly).
-  */
-final class InMemoryCommitArbiter extends CommitArbiter {
-  private val m =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def claim(key: String, intent: String): Option[String] =
-    Option(m.putIfAbsent(key, intent))
-  def expire(collectible: String => Boolean): Long = {
-    var n = 0L
-    m.keySet.forEach { k =>
-      if (collectible(k) && m.remove(k) != null) n += 1
-    }
-    n
-  }
-}
-
-/** Cross-process [[CommitArbiter]]: one marker file per claimed key
-  * in a shared directory, atomic via the HARD-LINK primitive —
-  * `Files.createLink(marker, tmp)` is O_EXCL at the kernel level
-  * (atomic one-winner across processes on a shared POSIX
-  * filesystem), and the intent is durably written to the private
-  * tmp BEFORE the link makes it visible, so a loser can never read
-  * a half-written intent. Contrast Hadoop's local
-  * `create(overwrite=false)`, which is check-then-act across
-  * processes — the trap this class exists to avoid.
-  *
-  * This is the same one-winner-per-key semantic an S3 deployment
-  * gets from a conditional PUT (`If-None-Match: *`) and a DynamoDB
-  * deployment from `attribute_not_exists(key)` — the marker
-  * directory IS the coordinator table, so the store's whole commit
-  * protocol runs unchanged across separate JVMs sharing only the
-  * directory. Marker content is `key\nintent` (the key is kept
-  * inside the file because long keys hash into the marker NAME);
-  * [[expire]] honors the trait's collectibility contract by
-  * matching the embedded key, never the file name.
-  */
-final class FileMarkerCommitArbiter(dir: String)
-    extends CommitArbiter {
-  import java.nio.file.{Files, Paths, FileAlreadyExistsException}
-  private val root = Paths.get(dir)
-  Files.createDirectories(root)
-
-  private def markerOf(key: String): java.nio.file.Path = {
-    val enc = java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString(key.getBytes("UTF-8"))
-    // filesystem name limit: long keys keep a readable tail plus a
-    // collision-free digest of the whole key
-    val name =
-      if (enc.length <= 180) enc
-      else {
-        val h = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(key.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        enc.takeRight(120) + "-" + h
-      }
-    root.resolve(name)
-  }
-
-  private def read(m: java.nio.file.Path): (String, String) = {
-    val s = new String(Files.readAllBytes(m), "UTF-8")
-    val i = s.indexOf('\n')
-    (s.substring(0, i), s.substring(i + 1))
-  }
-
-  def claim(key: String, intent: String): Option[String] = {
-    require(!key.contains('\n') && !intent.contains('\n'),
-      "FileMarkerCommitArbiter: keys/intents are single-line")
-    val marker = markerOf(key)
-    val tmp = Files.createTempFile(root, ".intent-", ".tmp")
-    try {
-      Files.write(tmp, s"$key\n$intent".getBytes("UTF-8"))
-      try { Files.createLink(marker, tmp); None }
-      catch {
-        case _: FileAlreadyExistsException => Some(read(marker)._2)
-      }
-    } finally { Files.deleteIfExists(tmp); () }
-  }
-
-  def expire(collectible: String => Boolean): Long = {
-    val stream = Files.list(root)
-    try {
-      val it = stream.iterator()
-      var n = 0L
-      while (it.hasNext) {
-        val p = it.next()
-        if (!p.getFileName.toString.startsWith(".intent-")) {
-          // a concurrent expirer may delete between list and read —
-          // that claim is simply no longer ours to count
-          val key =
-            try Some(read(p)._1)
-            catch { case _: java.io.IOException => None }
-          if (key.exists(collectible) && Files.deleteIfExists(p))
-            n += 1
-        }
-      }
-      n
-    } finally stream.close()
-  }
-}
-
-/** [[LogStore]] for object storage (raw S3 semantics: no atomic
-  * rename, no exclusive create) — winner election happens in the
-  * [[CommitArbiter]], and only then does data move:
-  *
-  *  1. the caller stages the full record under `tmp` (durable);
-  *  2. `claim(dest, tmp)` elects AT MOST ONE winner per destination
-  *     and write-ahead-logs the winner's staging location;
-  *  3. the winner materializes `tmp` → `dest` — non-atomic is fine
-  *     HERE because the claim already serialized the destination:
-  *     no concurrent writer targets `dest`, and crash-in-the-middle
-  *     is recoverable from the logged intent;
-  *  4. a LOSER that observes a claimed-but-missing destination
-  *     completes the crashed winner's copy from that winner's
-  *     intent before reporting its own loss — a version is never
-  *     left half-published (the recovery rule of the public
-  *     S3 + DynamoDB LogStore).
-  *
-  * The protocol above this class (OCC rebase, fid claims,
-  * checkpoint publication) is unchanged — LogStoreSpec runs the
-  * same 4-writer race through this implementation and through
-  * [[HdfsLogStore]].
-  */
-final class ObjectStoreLogStore(arbiter: CommitArbiter)
-    extends LogStore {
-  def exclusive: Boolean = true
-
-  def publish(f: FileSystem, tmp: Path, dest: Path): Boolean =
-    arbiter.claim(dest.toString, tmp.toString) match {
-      case None =>
-        // we own dest. A loser may ALREADY have completed our copy
-        // (it saw our claim while we were paused): dest present
-        // means our content landed — publication succeeded.
-        if (f.exists(dest)) true
-        else if (f.rename(tmp, dest)) {
-          // rename-into-existing-directory guard (same trap as
-          // HdfsLogStore): if a loser materialized dest from OUR
-          // intent between our check and our rename, tmp nests
-          // inside dest — remove the duplicate; dest still carries
-          // exactly our content, so we won either way
-          val nested = new Path(dest, tmp.getName)
-          if (f.exists(nested)) f.delete(nested, true)
-          true
-        }
-        else if (f.exists(dest)) true // loser recovery moved our tmp
-        else sys.error(s"ObjectStoreLogStore: claimed $dest but " +
-          "could not materialize it and no recovery completed it — " +
-          "filesystem fault, not a version race")
-      case Some(intent) =>
-        // lost the claim. Complete a crashed winner's publication
-        // from its write-ahead intent if its destination is still
-        // missing; harmless if the winner is merely mid-flight (its
-        // own rename finding dest present self-resolves via the
-        // nested-dir guard above).
-        if (!f.exists(dest)) {
-          val w = new Path(intent)
-          if (f.exists(w) && f.rename(w, dest)) {
-            val nested = new Path(dest, w.getName)
-            if (f.exists(nested)) f.delete(nested, true)
-          }
-        }
-        false
-    }
-
-  def createExclusive(f: FileSystem, p: Path): Boolean =
-    arbiter.claim(p.toString, "marker") match {
-      case None =>
-        // we own p; overwrite-create is safe and makes the marker
-        // visible to filesystem-side observers (describe/debug) —
-        // exclusivity itself lives in the arbiter, so a crash
-        // BEFORE this create merely burns the claim (the claimer
-        // protocol slides to the next candidate on false)
-        f.create(p, true).close(); true
-      case Some(_) => false
-    }
-}

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.graft.StoreSqlShims
 import graft.plans.PruneBounds
@@ -1197,12 +1198,16 @@ object VersionedStore {
     * stores pay nothing.
     */
   private def buildBlooms(spark: SparkSession, path: String,
-      fid: Long, n: Long, cols: Seq[String]): Seq[String] = {
+      fid: Long, n: Long, cols: Seq[String],
+      schema: StructType): Seq[String] = {
     if (cols.isEmpty || n == 0) return Nil
-    val written = spark.read.parquet(dataDir(path, fid).toString)
-    val armed = cols.distinct.filter(written.columns.contains)
-      .filter(c => PruneBounds.bloomable(written.schema(c).dataType))
+    val armed = cols.distinct.filter(schema.fieldNames.contains)
+      .filter(c => PruneBounds.bloomable(schema(c).dataType))
     if (armed.isEmpty) return Nil
+    // read under the schema the group was written with: no job to
+    // infer it from the footers
+    val written = spark.read.schema(StructType(armed.map(schema(_))))
+      .parquet(dataDir(path, fid).toString)
     import org.apache.spark.util.sketch.BloomFilter
     val expected = math.max(n, 1L)
     val zero = armed.map(_ =>
@@ -1401,7 +1406,7 @@ object VersionedStore {
     val n = r("n").asInstanceOf[Long]
     val zones = zonesOf(zcs, n, r)
     GroupAdd(fid, n, markerOf(pdf, pStatsCol, zones), sj, zones,
-      blooms = buildBlooms(spark, path, fid, n, pBloomCols))
+      blooms = buildBlooms(spark, path, fid, n, pBloomCols, pdf.schema))
   }
 
   /** The live logical→physical column mapping of the store at
@@ -1477,7 +1482,8 @@ object VersionedStore {
     val zones = zonesOf(zcs, n, r.getAs[Any](_))
     commitRetrying(spark, path, Seq(GroupAdd(fid, n,
       markerOf(written, statsCol, zones), sj, zones,
-      blooms = buildBlooms(spark, path, fid, n, bloomCols))),
+      blooms = buildBlooms(spark, path, fid, n, bloomCols,
+        written.schema))),
       Nil, txn, txnApp = appOpt)
   }
 
@@ -2603,7 +2609,9 @@ object VersionedStore {
       if (mm.isEmpty) kept
       else kept.select(kept.columns.map(c =>
         col(c).as(phys(c))): _*)
-    val dataCols = kept2.columns.filter(_ != "_vs_fid")
+    val dataSchema =
+      StructType(kept2.schema.filterNot(_.name == "_vs_fid"))
+    val dataCols = dataSchema.fieldNames
     // same dropped-lineage guard as writeGroup: propagated metadata
     // columns absent from the rewritten frame are skipped
     val statsColP = statsCol.map(phys).filter(dataCols.contains)
@@ -2629,9 +2637,10 @@ object VersionedStore {
           s.getPath.getName.startsWith("_vs_fid="))
       val aggs = Seq(count(lit(1)).as("n")) ++
         zcs.flatMap { case (c, _) => zoneAggs(kept2, c) }
+      // read back under the schema just written: no job to infer it
+      val writtenSchema = dataSchema.add("_vs_fid", LongType)
       val statRows = (if (!wrote) Array.empty[org.apache.spark.sql.Row]
-        else spark.read.parquet(tmp.toString)
-          .withColumn("_vs_fid", col("_vs_fid").cast("long"))
+        else spark.read.schema(writtenSchema).parquet(tmp.toString)
           .groupBy(col("_vs_fid"))
           .agg(aggs.head, aggs.tail: _*)
           .collect()).map { r =>
@@ -2657,13 +2666,13 @@ object VersionedStore {
           // the Spark row-metadata footer key)
           if (!f.mkdirs(dst)) sys.error(
             s"VersionedStore.rewriteGroups: cannot create $dst")
-          MetaParquet.writeEmpty(spark, dst,
-            kept2.drop("_vs_fid").schema)
+          MetaParquet.writeEmpty(spark, dst, dataSchema)
         }
         val (n, st, zs) =
           statRows.getOrElse(oldFid, (0L, None, Nil))
         GroupAdd(newFid, n, st, schemaJson, zs,
-          blooms = buildBlooms(spark, path, newFid, n, bloomColsP))
+          blooms = buildBlooms(spark, path, newFid, n, bloomColsP,
+            dataSchema))
       }
     } finally {
       f.delete(tmp, true)

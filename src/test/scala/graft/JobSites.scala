@@ -21,10 +21,24 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 object JobSites {
   private val Tag = "graft.test.jobsites"
 
-  def during(spark: SparkSession)(body: => Unit): Seq[String] = {
+  def during(spark: SparkSession)(body: => Unit): Seq[String] =
+    jobs(spark)(body).map(_._2)
+
+  /** The call sites of the jobs `body` submits outside any SQL
+    * execution: RDD actions, and the jobs Spark runs while planning
+    * a read, such as parquet schema inference.
+    */
+  def outsideSql(spark: SparkSession)(body: => Unit): Seq[String] =
+    jobs(spark)(body).collect { case (false, site) => site }
+
+  /** Each job `body` submits: whether it ran in a SQL execution, and
+    * its call site.
+    */
+  private def jobs(spark: SparkSession)(
+      body: => Unit): Seq[(Boolean, String)] = {
     val sc = spark.sparkContext
     val tag = UUID.randomUUID.toString
-    val sites = new ConcurrentLinkedQueue[String]()
+    val sites = new ConcurrentLinkedQueue[(Boolean, String)]()
     val execSite = new ConcurrentHashMap[Long, String]()
     val flushed = new CountDownLatch(1)
     val listener = new SparkListener {
@@ -38,7 +52,8 @@ object JobSites {
           Option(e.properties).flatMap(p => Option(p.getProperty(k)))
         prop(Tag) match {
           case Some(t) if t == tag =>
-            sites.add(prop("spark.sql.execution.id")
+            val exec = prop("spark.sql.execution.id")
+            sites.add(exec.isDefined -> exec
               .flatMap(id => Option(execSite.get(id.toLong)))
               .getOrElse(e.stageInfos.map(_.name).mkString("; ")))
           case Some(t) if t == s"$tag-end" => flushed.countDown()

@@ -188,69 +188,4 @@ class LogStoreSpec extends AnyFunSuite with SparkFixture
     HdfsLogStore.createExclusive(f, m) shouldBe true
     HdfsLogStore.createExclusive(f, m) shouldBe false
   }
-
-  test("ObjectStoreLogStore: the full 4-writer concurrent-append " +
-      "race runs unchanged on object-store semantics — one winner " +
-      "per version, no refusal, nothing lost") {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val ls = new ObjectStoreLogStore(new InMemoryCommitArbiter)
-    VersionedStore.setLogStore(ls)
-    try {
-      val p = freshPath()
-      VersionedStore.create(spark, p)
-      val writers = (0 until 4).map { w =>
-        Future {
-          VersionedStore.append(batch(w * 100 until w * 100 + 10), p)
-        }
-      }
-      Await.result(Future.sequence(writers), 120.seconds)
-      VersionedStore.latestVersion(spark, p) shouldBe 4L
-      ids(p) shouldBe (0 until 4)
-        .flatMap(w => w * 100L until w * 100L + 10L).sorted
-      // and the claimed keys really did arbitrate: re-claiming any
-      // committed version loses
-      val f = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      ls.publish(f, new Path(p, "log/.tmp-bogus"),
-        new Path(p, "log/v000000001")) shouldBe false
-    } finally VersionedStore.setLogStore(HdfsLogStore)
-  }
-
-  test("ObjectStoreLogStore: a crashed winner's publication is " +
-      "COMPLETED by the next committer from the write-ahead intent " +
-      "— the version is never half-published, and the loser's own " +
-      "content never lands") {
-    val arbiter = new InMemoryCommitArbiter
-    val ls = new ObjectStoreLogStore(arbiter)
-    val f = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val base = new Path(freshPath()); f.mkdirs(base)
-    def stage(n: String, body: String): Path = {
-      val d = new Path(base, n)
-      f.mkdirs(d)
-      val out = f.create(new Path(d, "record"), true)
-      out.write(body.getBytes("UTF-8")); out.close(); d
-    }
-    val dest = new Path(base, "v1")
-    // winner claims v1 (write-ahead intent = its staged tmp) and
-    // CRASHES before materializing
-    val winnerTmp = stage("tmp-winner", "winner-content")
-    arbiter.claim(dest.toString, winnerTmp.toString) shouldBe None
-    f.exists(dest) shouldBe false // half-committed state on disk
-    // a second committer arrives with its own staged record: it
-    // must lose AND complete the winner's publication
-    val loserTmp = stage("tmp-loser", "loser-content")
-    ls.publish(f, loserTmp, dest) shouldBe false
-    f.exists(dest) shouldBe true
-    val in = f.open(new Path(dest, "record"))
-    val got = try scala.io.Source.fromInputStream(in).mkString
-      finally in.close()
-    got shouldBe "winner-content"
-    // idempotent: a third publication attempt still loses cleanly
-    ls.publish(f, stage("tmp-third", "third"), dest) shouldBe false
-    // createExclusive arbitrates through claims, not the filesystem
-    val m = new Path(base, "claim-f9")
-    ls.createExclusive(f, m) shouldBe true
-    ls.createExclusive(f, m) shouldBe false
-  }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.SparkFixture
+import graft.{JobSites, SparkFixture}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -206,5 +206,20 @@ class MutationCoreSpec extends AnyFunSuite with SparkFixture
     val out = VersionedStore.read(spark, p)
     out.count() shouldBe (4 * per - 50).toLong
     out.join(keys, Seq("id"), "left_semi").count() shouldBe 0L
+  }
+
+  test("deleteWhere and compact read back the groups they rewrite " +
+      "with no schema-inference job") {
+    val p = idStore(1000)
+    JobSites.outsideSql(spark) {
+      VersionedStore.deleteWhere(spark, p, col("id") === 1500L)
+    } shouldBe empty
+    JobSites.outsideSql(spark) {
+      VersionedStore.compact(spark, p, clusterBy = Seq("id"),
+        numGroups = 2)
+    } shouldBe empty
+    val out = VersionedStore.read(spark, p)
+    out.count() shouldBe 3999L
+    out.filter(col("id") === 1500L).count() shouldBe 0L
   }
 }

@@ -107,19 +107,4 @@ class OperatorsSpec extends AnyFunSuite with SparkFixture with Matchers {
     val salted = SkewJoin.saltedJoin(li, part, "l_partkey", 8).count()
     salted shouldBe plain
   }
-
-  test("Bucketing: bucketed join plans without Exchange on either side") {
-    val s = spark
-    val o = Tables.orders(s, "/root/testdata/sf0.001")
-      .select("o_orderkey", "o_totalprice")
-    val li = Tables.lineitem(s, "/root/testdata/sf0.001")
-      .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-    Bucketing.writeBucketed(o, "b_orders", "o_orderkey", 4)
-    Bucketing.writeBucketed(li, "b_lineitem", "o_orderkey", 4)
-    val joined = Bucketing.bucketedJoin(s, "b_orders", "b_lineitem",
-      "o_orderkey")
-    val plan = joined.queryExecution.executedPlan.toString
-    plan should not include "Exchange hashpartitioning"
-    joined.count() shouldBe li.count()
-  }
 }
