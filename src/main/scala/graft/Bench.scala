@@ -78,8 +78,10 @@ object Bench {
     // min of two warm rounds is the steady-state number; a genuine
     // regression slows BOTH rounds and still shows.
     // Per-query JVM context probes (driver == executors at local[*]):
-    // GC time, JIT compilation time, and code-cache occupancy deltas
-    // name the in-run-context effects isolated timing can never see
+    // GC time, JIT compilation time, code-cache occupancy and the
+    // number of generated classes compiled (Janino; the per-JVM
+    // generated-class cache missed) name the in-run-context effects
+    // isolated timing can never see
     // (a row that is flat like-for-like but inflates only inside the
     // full suite — the q274 adjudication). BENCH_FULL.json only.
     import java.lang.management.ManagementFactory
@@ -91,11 +93,13 @@ object Bench {
     def codeCacheUsed(): Long = ManagementFactory.getMemoryPoolMXBeans
       .asScala.filter(_.getName.startsWith("CodeHeap"))
       .map(_.getUsage.getUsed).sum
+    def compiles(): Long = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
 
     final case class Timing(name: String, sec: Double, ok: Boolean,
-      gcMs: Long, jitMs: Long, ccUsed: Long)
+      gcMs: Long, jitMs: Long, ccUsed: Long, compiles: Long)
     def timedPass(): Seq[Timing] = ordered.map { q =>
-      val (g0, j0) = (gcMs(), jitMs())
+      val (g0, j0, c0) = (gcMs(), jitMs(), compiles())
       val t0 = System.nanoTime()
       val ok =
         try {
@@ -103,7 +107,7 @@ object Bench {
           true
         } catch { case scala.util.control.NonFatal(_) => false }
       Timing(q.name, (System.nanoTime() - t0) / 1e9, ok,
-        gcMs() - g0, jitMs() - j0, codeCacheUsed())
+        gcMs() - g0, jitMs() - j0, codeCacheUsed(), compiles() - c0)
     }
     // A full-GC settle between passes keeps round-2 from paying
     // round-1's accumulated garbage (the per-query min only helps
@@ -121,7 +125,7 @@ object Bench {
     // context probes of the round whose time the min kept (ties → r1)
     val probes = r1.zip(r2).map { case (a, b) =>
       val w = if (a.sec <= b.sec) a else b
-      (w.name, w.gcMs, w.jitMs, w.ccUsed)
+      (w.name, w.gcMs, w.jitMs, w.ccUsed, w.compiles)
     }
     // The harness that captures this output keeps only a bounded tail
     // (~2000 chars) of stdout, and the full per-query map for ~90
@@ -152,11 +156,13 @@ object Bench {
         if graft.queries.Lanes.laneOf(k) == lane => v
     }.sum
     val lanes = s""""lane_totals":{"serve":${f(laneTotal("serve"))},"build":${f(laneTotal("build"))}}"""
-    val gcJson = probes.map { case (k, g, j, c) =>
-      "\"" + k + s"\":[$g,$j,$c]"
+    val gcJson = probes.map { case (k, g, j, c, n) =>
+      "\"" + k + s"\":[$g,$j,$c,$n]"
     }.mkString("{", ",", "}")
+    val passCompiles =
+      Seq(r1, r2).map(_.map(_.compiles).sum).mkString("[", ",", "]")
     val fullLine =
-      s"""{"queries":$qs,"errors":$errs,"sf":"$sfDir","n_queries":${results.size},"timed_rounds":2,$lanes,"context_probes":$gcJson,"metric":"total","unit":"sec","value":${f(total)}}"""
+      s"""{"queries":$qs,"errors":$errs,"sf":"$sfDir","n_queries":${results.size},"timed_rounds":2,$lanes,"context_probes":$gcJson,"compiles_per_pass":$passCompiles,"metric":"total","unit":"sec","value":${f(total)}}"""
     val fullOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(fullOut), fullLine + "\n")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression,
   ExpressionInfo, Literal, Lower, Md5, RegExpReplace, StringTrim}
+import org.apache.spark.sql.graft.StoreSqlShims
 import org.apache.spark.sql.types.BinaryType
 
 /** Session-extension entry point: activate the engine's custom
@@ -20,10 +21,33 @@ import org.apache.spark.sql.types.BinaryType
   * for ad-hoc use. Catalyst sees a first-class Expression either way —
   * codegen, null-propagation and type checks all participate in
   * optimization, unlike an opaque UDF.
+  *
+  * Session defaults: the extension also sets two Spark confs, each
+  * only where the user has not set it, so that each generated class
+  * compiles once per JVM.
+  *  - `spark.sql.codegen.cache.maxEntries = 1000` (Spark: 100). The
+  *    generated-class cache evicts the least recently used class; the
+  *    serving mix cycles through 176 distinct classes, so at 100 each
+  *    was evicted before its next use and Janino recompiled it
+  *    (~20 ms a class) on every cycle.
+  *  - `spark.sql.codegen.useIdInClassName = false`. Adaptive
+  *    execution numbers codegen stages in the order it materializes
+  *    them, which varies between runs, and the number is part of the
+  *    class name, so identical code missed the cache.
+  * The cache size is a static conf that `CodeGenerator` reads once
+  * per JVM, on first use, so it is written into the `SparkContext`'s
+  * conf here, before the session's shared state exists. A JVM whose
+  * first codegen ran in a session built without this extension keeps
+  * Spark's 100. An explicit `.config(key, value)` on
+  * `SparkSession.builder()` (or `--conf`) wins over either default.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    StoreSqlShims.contextDefault("spark.sql.codegen.cache.maxEntries",
+      "1000")
+    StoreSqlShims.contextDefault("spark.sql.codegen.useIdInClassName",
+      "false")
     ext.injectFunction(GraftExtensions.cosineFastDescriptor)
     ext.injectFunction(GraftExtensions.dotExactDescriptor)
     ext.injectFunction(GraftExtensions.dotDoubleDescriptor)

@@ -930,8 +930,11 @@ object VersionedStore {
     // translate before matching
     lazy val inv = mappingAt(spark, path, v).map(_.swap)
     liveDvFids(spark, path, v).foldLeft(df) { (acc, dvFid) =>
-      val raw = spark.read.parquet(
-        groupDir(spark, path, dvFid).toString)
+      // DV groups are committed without a schema: read it from the
+      // footer here, not through a schema-inference job
+      val dir = groupDir(spark, path, dvFid)
+      val raw = spark.read.schema(footerSchema(spark, dir))
+        .parquet(dir.toString)
       val keys =
         if (inv.isEmpty) raw
         else raw.select(raw.columns.map(c =>
@@ -1824,6 +1827,25 @@ object VersionedStore {
       : Seq[org.apache.hadoop.fs.FileStatus] =
     dir.getFileSystem(conf).listStatus(dir).toSeq.filter(st =>
       st.isFile && st.getPath.getName.endsWith(".parquet"))
+
+  /** The Spark schema a group was written with, from one part's
+    * footer, read on the driver (a `spark.read.parquet` without a
+    * schema runs a Spark job to infer it).
+    */
+  private def footerSchema(spark: SparkSession, dir: Path): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val state = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.newHadoopConf()
+    val file = parquetFiles(dir, conf).head.getPath
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
 
   /** The schema gate every mutating batch passes before anything is
     * written: dropping or retyping a table column is always rejected

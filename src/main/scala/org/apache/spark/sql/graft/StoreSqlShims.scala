@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ColumnNodeToExpressionConverter
 import org.apache.spark.sql.types.StructType
 
-/** The `private[sql]` bridges the engine needs, behind one tiny
+/** The `private[sql]` (and one `private[spark]`) bridges the engine
+  * needs, behind one tiny
   * object in a `org.apache.spark.sql` subpackage — the same placement
   * the public Delta Lake codebase uses for exactly these calls (its
   * classes live under `org.apache.spark.sql.delta`). Nothing else in
@@ -25,6 +26,8 @@ import org.apache.spark.sql.types.StructType
   *    caller's [[Column]] in a logical node.
   *  - [[nullable]]: a schema with every field (nested ones too)
   *    nullable, the shape a file scan reports.
+  *  - [[contextDefault]]: a default written into the running
+  *    `SparkContext`'s own conf, where static SQL confs are read.
   */
 object StoreSqlShims {
 
@@ -59,4 +62,15 @@ object StoreSqlShims {
       org.apache.spark.sql.classic.ExpressionUtils.expression(c),
       dt, None, org.apache.spark.sql.catalyst.expressions
         .EvalMode.ANSI))
+
+  /** `key = value` in the active `SparkContext`'s own conf unless it
+    * already holds `key` (an explicit setting wins); a no-op with no
+    * active context. `SparkContext.conf` and `getActive` are
+    * `private[spark]`, and `getConf` returns a copy. A session's
+    * shared state copies this conf when it is first built, so a
+    * value written before then reaches static SQL confs too.
+    */
+  def contextDefault(key: String, value: String): Unit =
+    org.apache.spark.SparkContext.getActive
+      .foreach(_.conf.setIfMissing(key, value))
 }

@@ -222,4 +222,17 @@ class MutationCoreSpec extends AnyFunSuite with SparkFixture
     out.count() shouldBe 3999L
     out.filter(col("id") === 1500L).count() shouldBe 0L
   }
+
+  test("a read of a store with a live deletion vector runs no " +
+      "schema-inference job for it") {
+    val s = spark
+    import s.implicits._
+    val p = idStore(1000)
+    VersionedStore.deleteKeysDeferred(spark, p,
+      Seq(5L, 1500L).toDF("id"), Seq("id"))
+    val sites = JobSites.outsideSql(spark) {
+      VersionedStore.read(spark, p).count() shouldBe 3998L
+    }
+    sites.filter(_.startsWith("parquet at VersionedStore")) shouldBe empty
+  }
 }
