@@ -30,7 +30,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (every visible part is read; an update replaces them all).
   *
   * Each write is published crash-safely through
-  * [[graft.operators.MetaParquet.publish]] (hidden tmp sibling, live
+  * [[graft.operators.MetaParquet.publish]], i.e.
+  * [[graft.operators.InPlace.replace]] (hidden tmp sibling, live
   * directory renamed aside to a backup, tmp renamed in, backup
   * dropped); the next access finishes or rolls back a publish a crash
   * interrupted. Read-modify-write cycles on one path are serialized

@@ -105,42 +105,23 @@ object MetaParquet {
     } finally w.close()
   }
 
-  /** Replace directory `dir` with a one-part directory holding `rows`,
-    * crash-safely: the part is written to a hidden sibling
-    * `.<name>.tmp`, the live directory is renamed aside to
-    * `.<name>.bak`, the tmp is renamed into place and the backup
-    * dropped. At every instant either `dir` or the backup holds a
-    * complete table, and [[recover]] (run first here, and by readers)
-    * finishes or rolls back a publish a crash interrupted. Callers
-    * serialize publishes to one `dir` themselves.
+  /** Replace directory `dir` with a one-part directory holding `rows`
+    * through [[InPlace.replace]], staged in the hidden sibling
+    * `.<name>.tmp` with the live directory moved aside to
+    * `.<name>.bak`. Callers serialize publishes to one `dir`
+    * themselves.
     */
   def publish(fs: FileSystem, conf: Configuration, dir: Path,
       schema: MessageType, cols: Seq[Col],
-      rows: Seq[Map[String, Any]]): Unit = {
-    val tmp = sibling(dir, "tmp")
-    recover(fs, dir)
-    if (fs.exists(tmp) && !fs.delete(tmp, true))
-      sys.error(s"MetaParquet: cannot clear $tmp")
-    write(conf, tmp, schema, cols, rows)
-    if (fs.exists(dir) && !fs.rename(dir, sibling(dir, "bak")))
-      sys.error(s"MetaParquet: cannot move $dir aside")
-    if (!fs.rename(tmp, dir))
-      sys.error(s"MetaParquet: cannot publish $dir")
-    fs.delete(sibling(dir, "bak"), true)
-  }
+      rows: Seq[Map[String, Any]]): Unit =
+    InPlace.replace(fs, dir, sibling(dir, "tmp"), sibling(dir, "bak"))(
+      write(conf, _, schema, cols, rows))
 
-  /** Finish or roll back a [[publish]] that a crash interrupted: a
-    * backup beside a live directory is a finished publish's leftover;
-    * a backup alone is the last complete table.
+  /** [[InPlace.recover]] for a directory [[publish]] writes: readers
+    * run it first, so a cut publish never leaves them without a table.
     */
-  def recover(fs: FileSystem, dir: Path): Unit = {
-    val bak = sibling(dir, "bak")
-    if (fs.exists(bak)) {
-      if (fs.exists(dir)) fs.delete(bak, true)
-      else if (!fs.rename(bak, dir))
-        sys.error(s"MetaParquet: cannot restore $dir from $bak")
-    }
-  }
+  def recover(fs: FileSystem, dir: Path): Unit =
+    InPlace.recover(fs, dir, sibling(dir, "bak"))
 
   private def sibling(dir: Path, tag: String): Path =
     new Path(dir.getParent, s".${dir.getName}.$tag")

@@ -9,8 +9,9 @@ import org.apache.hadoop.fs.Path
   * answerable if the EXACT version of every input is recorded at
   * launch, atomically, in one place. A manifest is a KB-scale parquet
   * of (store_path, version) rows published through
-  * [[MetaParquet.publish]]: readers see the whole previous pin set or
-  * the whole new one, never a partial or missing manifest.
+  * [[MetaParquet.publish]] ([[InPlace.replace]]): readers see the
+  * whole previous pin set or the whole new one, never a partial or
+  * missing manifest.
   *
   * Reading THROUGH the manifest ([[readAll]]) serves each store at
   * its pinned version regardless of any appends, merges, deletes, or
@@ -29,18 +30,20 @@ object StoreManifest {
 
   /** Pin each store's CURRENT latest version into a manifest at
     * `manifestPath`. Returns the pinned (store → version) map. The
-    * manifest is published through [[MetaParquet.publish]]: a crash
-    * mid-publish leaves the previous pin set recoverable, never none.
+    * manifest is published through [[MetaParquet.publish]]
+    * ([[InPlace.replace]]): a crash mid-publish leaves the previous
+    * pin set recoverable, never none.
     */
   def pin(spark: SparkSession, stores: Seq[String],
       manifestPath: String): Map[String, Long] = {
     val pinned = stores.map(p =>
       p -> VersionedStore.latestVersion(spark, p))
     val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(manifestPath)
     // KB-scale metadata: driver-side parquet write (same layout the
     // previous coalesce(1) Spark write produced), no Spark job
-    MetaParquet.publish(org.apache.hadoop.fs.FileSystem.get(conf), conf,
-      new Path(manifestPath), schema, cols, pinned.map { case (p, v) =>
+    MetaParquet.publish(dir.getFileSystem(conf), conf, dir, schema, cols,
+      pinned.map { case (p, v) =>
         Map[String, Any]("store_path" -> p, "version" -> v) })
     pinned.toMap
   }
@@ -51,8 +54,8 @@ object StoreManifest {
   def versions(spark: SparkSession,
       manifestPath: String): Map[String, Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val f = org.apache.hadoop.fs.FileSystem.get(conf)
     val dir = new Path(manifestPath)
+    val f = dir.getFileSystem(conf)
     MetaParquet.recover(f, dir)
     MetaParquet.read(f, conf, dir)
       .map(m => m("store_path").asInstanceOf[String] ->

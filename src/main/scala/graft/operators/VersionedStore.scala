@@ -69,8 +69,14 @@ import graft.plans.PruneBounds
   */
 object VersionedStore {
 
-  private def fs(spark: SparkSession): FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  /** The filesystem of `p`'s own scheme (the default FS serves only
+    * unqualified paths).
+    */
+  private def fs(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def fs(spark: SparkSession, path: String): FileSystem =
+    fs(spark, new Path(path))
 
   private def logDir(path: String) = new Path(s"$path/log")
   private def dataDir(path: String, fid: Long) =
@@ -79,7 +85,7 @@ object VersionedStore {
 
   /** Start an empty store at `path`, clearing any prior content. */
   def create(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark)
+    val f = fs(spark, path)
     val p = new Path(path)
     if (f.exists(p) && !f.delete(p, true))
       sys.error(s"VersionedStore.create: cannot clear $path")
@@ -224,7 +230,7 @@ object VersionedStore {
     */
   private def logListing(spark: SparkSession,
       path: String): (Seq[Long], Seq[Long]) = {
-    val f = fs(spark)
+    val f = fs(spark, path)
     val ld = logDir(path)
     if (!f.exists(ld)) sys.error(
       s"VersionedStore: no store at $path (missing log dir)")
@@ -531,7 +537,7 @@ object VersionedStore {
       txnApp: Option[String] = None,
       neutral: Boolean = false): Long = {
     requireExclusive("commit")
-    val f = fs(spark)
+    val f = fs(spark, path)
     // the tmp name is unique PER ATTEMPT: two writers racing for the
     // same version must stage into disjoint dirs (a shared
     // `.tmp-v…` name let one writer delete or rename the other's
@@ -748,7 +754,7 @@ object VersionedStore {
     // through a Spark job paid scheduling + codegen per commit; the
     // direct read costs file I/O only (same bytes, same tolerance for
     // records written before a column existed)
-    val f = fs(spark)
+    val f = fs(spark, path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fromCkpt = ckpt match {
       case Some(cv) =>
@@ -814,7 +820,7 @@ object VersionedStore {
     * that triggered it), reconstructible, and ignored when absent.
     */
   def checkpoint(spark: SparkSession, path: String, v: Long): Unit = {
-    val f = fs(spark)
+    val f = fs(spark, path)
     val recs = logRecords(spark, path).filter(_.v <= v)
     if (recs.isEmpty) return
     // unique per attempt, like commitAt's tmp: concurrent
@@ -976,6 +982,12 @@ object VersionedStore {
       .find(r => r.fid == fid && r.loc.isDefined)
       .map(r => new Path(r.loc.get))
       .getOrElse(dataDir(path, fid))
+
+  private def groupExists(spark: SparkSession, path: String,
+      fid: Long): Boolean = {
+    val d = groupDir(spark, path, fid)
+    fs(spark, d).exists(d)
+  }
 
   /** Data dirs of `fids` in order, loc-aware ([[groupDir]]), resolved
     * with ONE pass over the cached log.
@@ -1230,17 +1242,16 @@ object VersionedStore {
           while (i < a.length) { a(i).mergeInPlace(b(i)); i += 1 }
           a
         })
-    val f = fs(spark)
+    val f = fs(spark, path)
     armed.zip(merged).map { case (c, bf) =>
+      // both hidden names match vacuum's sidecar pattern, so a
+      // crash's leftovers go with their group
       val tmp = new Path(s"$path/bloom/.tmp-f$fid-$c")
-      if (f.exists(tmp)) f.delete(tmp, true)
-      val out = f.create(tmp, true)
-      try bf.writeTo(out) finally out.close()
-      val dst = new Path(s"$path/bloom/f$fid-$c")
-      if (f.exists(dst) && !f.delete(dst, true)) sys.error(
-        s"VersionedStore: cannot replace bloom sidecar $dst")
-      if (!f.rename(tmp, dst)) sys.error(
-        s"VersionedStore: cannot publish bloom sidecar $dst")
+      InPlace.replace(f, new Path(s"$path/bloom/f$fid-$c"), tmp,
+          tmp.suffix(".bak")) { t =>
+        val out = f.create(t, true)
+        try bf.writeTo(out) finally out.close()
+      }
       c
     }
   }
@@ -1286,7 +1297,7 @@ object VersionedStore {
     bloomCache.synchronized {
       val bp = bloomPathOf(spark, path, fid, c)
       Option(bloomCache.get(bp.toString)).orElse {
-        val f = fs(spark)
+        val f = fs(spark, bp)
         if (!f.exists(bp)) None
         else {
           val in = f.open(bp)
@@ -1447,7 +1458,7 @@ object VersionedStore {
       case None => ()
     }
     if (staged.isEmpty) return latestVersion(spark, path)
-    val f = fs(spark)
+    val f = fs(spark, path)
     val Seq(fid) = claimFids(spark, path, 1)
     val dst = dataDir(path, fid)
     if (f.exists(dst) && !f.delete(dst, true)) sys.error(
@@ -1962,7 +1973,7 @@ object VersionedStore {
       count: Int): Seq[Long] = claimLock.synchronized {
     if (count == 0) return Seq.empty
     requireExclusive("claimFids")
-    val f = fs(spark)
+    val f = fs(spark, path)
     val dir = new Path(s"$path/data/.fidclaims")
     val logMax =
       (0L +: actions(spark, path, Long.MaxValue).map(_._3)).max
@@ -2257,9 +2268,8 @@ object VersionedStore {
         fids ++ liveDvFids(spark, path, v)
       else (fids ++ liveDvFids(spark, path, v)).filter(foreign)
     if (sweep.nonEmpty) {
-      val f = fs(spark)
       sweep.foreach { fid =>
-        if (!f.exists(groupDir(spark, path, fid))) sys.error(
+        if (!groupExists(spark, path, fid)) sys.error(
           s"VersionedStore.readAt: file-group f$fid of version $v " +
             s"was vacuumed — raise the vacuum retention horizon" +
             (if (foreign(fid)) " on the clone SOURCE" else ""))
@@ -2461,9 +2471,9 @@ object VersionedStore {
   /** Fold the live file-groups — remove-all + add-new in a single
     * commit record, so readers see the old file set or the new one,
     * never a mixture and never an empty gap (contrast the
-    * rename-swap compaction, which has to restore the live dir by
-    * hand if its second rename fails). Pre-compaction versions stay
-    * readable until vacuum.
+    * rename-swap compaction of [[WinnowIndex.compact]], whose readers
+    * must restore a moved-aside index after a cut swap).
+    * Pre-compaction versions stay readable until vacuum.
     *
     * `numGroups > 1` with a `clusterBy` key is the OPTIMIZE-with-
     * clustering of the SQL lakehouses: instead of one folded group,
@@ -2614,7 +2624,7 @@ object VersionedStore {
       statsCol: Option[String],
       zoneCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Seq[GroupAdd] = {
-    val f = fs(spark)
+    val f = fs(spark, path)
     val tmp = new Path(s"$path/data/.rewrite-tmp")
     if (f.exists(tmp) && !f.delete(tmp, true))
       sys.error(s"VersionedStore.rewriteGroups: cannot clear $tmp")
@@ -3356,9 +3366,8 @@ object VersionedStore {
     val gained = (after -- before).toSeq.sorted
     val lost = (before -- after).toSeq.sorted
     val newDvs = dvAfter.filterNot(dvBefore.contains)
-    val f = fs(spark)
     (gained ++ lost ++ dvBefore ++ dvAfter).distinct.foreach { fid =>
-      if (!f.exists(groupDir(spark, path, fid))) sys.error(
+      if (!groupExists(spark, path, fid)) sys.error(
         s"VersionedStore.changes: file-group f$fid was vacuumed — " +
           "raise the vacuum retention horizon")
     }
@@ -3576,7 +3585,7 @@ object VersionedStore {
 
   /** True when a store exists at `path` (its log dir is present). */
   def exists(spark: SparkSession, path: String): Boolean =
-    fs(spark).exists(logDir(path))
+    fs(spark, path).exists(logDir(path))
 
   /** Persist table constraints (the Delta CHECK-constraint idea,
     * expressed in the Check algebra): every subsequent [[append]] /
@@ -3586,7 +3595,8 @@ object VersionedStore {
     * data/. Enforcement at the write boundary is what keeps a 100 TB
     * table clean: validating after the fact means a full-table scan
     * and a mess to unwind. A write is published crash-safely through
-    * [[MetaParquet.publish]].
+    * [[MetaParquet.publish]] ([[InPlace.replace]]), and readers run
+    * its recovery first.
     */
   private val constraintCols = Seq(
     MetaParquet.Col("kind", "string"),
@@ -3597,7 +3607,8 @@ object VersionedStore {
 
   def setConstraints(spark: SparkSession, path: String,
       checks: Seq[graft.check.Check]): Unit = {
-    MetaParquet.publish(fs(spark), spark.sparkContext.hadoopConfiguration,
+    MetaParquet.publish(fs(spark, path),
+      spark.sparkContext.hadoopConfiguration,
       new Path(s"$path/constraints"), constraintSchema, constraintCols,
       checks.map(graft.check.CheckCodec.encode).map {
         case (kind, column, args) => Map[String, Any](
@@ -3609,7 +3620,7 @@ object VersionedStore {
   def constraintsOf(spark: SparkSession,
       path: String): Seq[graft.check.Check] = {
     val dest = new Path(s"$path/constraints")
-    val f = fs(spark)
+    val f = fs(spark, path)
     MetaParquet.recover(f, dest)
     if (!f.exists(dest)) Seq.empty
     else MetaParquet.read(f,
@@ -3627,8 +3638,8 @@ object VersionedStore {
     * public designs) beside the log — retention policies, owners,
     * maintenance hints live WITH the table instead of in whichever
     * job happens to run maintenance. Published like constraints
-    * ([[MetaParquet.publish]]); a full map replace, read-modify-write
-    * for updates.
+    * ([[MetaParquet.publish]], [[InPlace.replace]]); a full map
+    * replace, read-modify-write for updates.
     */
   private val propCols = Seq(
     MetaParquet.Col("key", "string"),
@@ -3638,7 +3649,8 @@ object VersionedStore {
 
   def setProperties(spark: SparkSession, path: String,
       props: Map[String, String]): Unit = {
-    MetaParquet.publish(fs(spark), spark.sparkContext.hadoopConfiguration,
+    MetaParquet.publish(fs(spark, path),
+      spark.sparkContext.hadoopConfiguration,
       new Path(s"$path/properties"), propSchema, propCols,
       props.toSeq.map { case (k, v) =>
         Map[String, Any]("key" -> k, "value" -> v) })
@@ -3648,7 +3660,7 @@ object VersionedStore {
   def propertiesOf(spark: SparkSession,
       path: String): Map[String, String] = {
     val dest = new Path(s"$path/properties")
-    val f = fs(spark)
+    val f = fs(spark, path)
     MetaParquet.recover(f, dest)
     if (!f.exists(dest)) Map.empty
     else MetaParquet.read(f,
@@ -3952,9 +3964,8 @@ object VersionedStore {
         "(or vacuumed past)")
     val have = (liveFids(spark, path, latest) ++
       liveDvFids(spark, path, latest)).toSet
-    val f = fs(spark)
     (wantData ++ wantDv).filterNot(have).foreach { fid =>
-      if (!f.exists(groupDir(spark, path, fid))) sys.error(
+      if (!groupExists(spark, path, fid)) sys.error(
         s"VersionedStore.restore: file-group f$fid of version $v " +
           "was vacuumed — cannot restore (raise the retention " +
           "horizon before the next incident)")
@@ -4022,9 +4033,8 @@ object VersionedStore {
     if (data.isEmpty) sys.error(
       s"VersionedStore.cloneTo: version $v of $srcPath is empty " +
         "(or vacuumed past)")
-    val f = fs(spark)
     (data ++ dvs).foreach { fid =>
-      if (!f.exists(groupDir(spark, srcPath, fid))) sys.error(
+      if (!groupExists(spark, srcPath, fid)) sys.error(
         s"VersionedStore.cloneTo: file-group f$fid of version $v " +
           "was vacuumed — cannot clone")
     }
@@ -4065,6 +4075,7 @@ object VersionedStore {
     (data.map(asForeign) ++ dvs.map(asForeign)).foreach { ga =>
       val locDir = new Path(ga.loc.get)
       val markerDir = new Path(locDir.getParent, ".borrows")
+      val f = fs(spark, markerDir)
       f.mkdirs(markerDir)
       val h = java.security.MessageDigest.getInstance("SHA-256")
         .digest(dstPath.getBytes("UTF-8"))
@@ -4087,7 +4098,7 @@ object VersionedStore {
     */
   def vacuum(spark: SparkSession, path: String,
       retainFrom: Long): Seq[Long] = {
-    val f = fs(spark)
+    val f = fs(spark, path)
     val vs = versions(spark, path)
     // deletion-vector key groups are part of a version's visibility
     // state — reclaiming one would RESURRECT its masked rows
@@ -4127,7 +4138,7 @@ object VersionedStore {
           } finally in.close()
         }
         val live = borrower.nonEmpty &&
-          f.exists(logDir(borrower)) &&
+          exists(spark, borrower) &&
           foreignRefs(spark, borrower)
             .contains(dataDir(path, fid).toString)
         if (!live) { f.delete(m, false); () } // stale: GC the marker

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,54 +66,35 @@ object WinnowIndex {
     * one-file-per-bucket invariant and the full (fbucket, fph) sort
     * (delta appends are sorted per FILE; after many appends a value
     * probe opens every file in a bucket — compaction makes row-group
-    * pruning whole again). Runs as read → re-spread → atomic-ish
-    * swap via a sibling temp dir + two renames; readers in THIS
-    * JVM's sequential execution model never observe the gap (the
-    * StoreCache contract documents the no-concurrent-reader
-    * assumption).
-    *
-    * Crash robustness: a prior compaction that crashed between its
-    * two renames left the live path empty and the only complete copy
-    * at `.compact-old` — that copy is renamed back into place first.
-    * Only then are the leftovers of a crashed prior compaction
-    * removed, BEFORE the rewrite (a stale `.compact-tmp`/`.compact-old`
-    * would otherwise make `rename` NEST the new directory inside the
-    * stale one — Hadoop rename-into-existing-dir semantics — and
-    * silently duplicate every row on the next read), and every
-    * `rename`/`delete` boolean is checked: a false return aborts
-    * loudly, with the live store restored if the swap's second
-    * rename is the step that failed. The store is therefore always
-    * either the old content or the compacted content, never a union.
+    * pruning whole again). The rewrite is written to
+    * `<path>.compact-tmp` and swapped in through [[InPlace.replace]]
+    * with `<path>.compact-old` as the backup, so the index is always
+    * the old content or the compacted content, never a union or
+    * missing; [[read]] and [[probe]] restore a backup a cut
+    * compaction left alone. Readers in THIS JVM's sequential
+    * execution model never observe the swap (the StoreCache contract
+    * documents the no-concurrent-reader assumption).
     */
   def compact(spark: SparkSession, path: String,
       buckets: Int = 64): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val t = new org.apache.hadoop.fs.Path(path + ".compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(path + ".compact-old")
-    if (!fs.exists(p) && fs.exists(old) && !fs.rename(old, p))
-      sys.error(s"compact: cannot restore $p from $old, left by a " +
-        "crashed prior compaction")
-    Seq(t, old).foreach { stale =>
-      if (fs.exists(stale) && !fs.delete(stale, true))
-        sys.error(s"compact: cannot delete stale leftover $stale " +
-          "from a crashed prior compaction")
-    }
-    writeAs(read(spark, path), t.toString, buckets, "overwrite")
-    if (!fs.rename(p, old))
-      sys.error(s"compact: cannot move live store $p aside to $old")
-    if (!fs.rename(t, p)) {
-      // roll the live store back so a failed swap never leaves the
-      // path empty; only then report
-      val restored = fs.rename(old, p)
-      sys.error(s"compact: cannot swap $t into $p" +
-        (if (restored) " (live store restored)"
-         else s" AND rollback of $old failed — store left at $old"))
-    }
-    if (!fs.delete(old, true))
-      sys.error(s"compact: compacted store is live but cannot " +
-        s"delete previous content at $old")
+    val p = new Path(path)
+    InPlace.replace(fsOf(spark, p), p, new Path(path + ".compact-tmp"),
+      backupOf(path))(t =>
+      writeAs(read(spark, path), t.toString, buckets, "overwrite"))
+  }
+
+  private def fsOf(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def backupOf(path: String) = new Path(path + ".compact-old")
+
+  /** The index at `path` after [[InPlace.recover]]: a compaction cut
+    * between its renames leaves the old index only in its backup.
+    */
+  private def recovered(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    InPlace.recover(fsOf(spark, p), p, backupOf(path))
+    graft.StoreCache.readParquet(spark, path)
   }
 
   private def writeAs(fps: DataFrame, path: String, buckets: Int,
@@ -133,7 +115,7 @@ object WinnowIndex {
     * [[Winnowing.fingerprints]] output (the parity the spec pins).
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    graft.StoreCache.readParquet(spark, path)
+    recovered(spark, path)
       .select(col("doc_id").cast("long"), col("pos").cast("long"),
         col("fph").cast("long"))
 
@@ -154,7 +136,7 @@ object WinnowIndex {
       .select(pmod(col("fph"), lit(buckets.toLong)).cast("int")
         .as("fbucket"))
       .distinct().collect().map(_.getInt(0))
-    val pruned = graft.StoreCache.readParquet(spark, path)
+    val pruned = recovered(spark, path)
       .filter(col("fbucket").isin(probeBuckets.toSeq: _*))
       .select(col("doc_id").cast("long"), col("pos").cast("long"),
         col("fph").cast("long"))

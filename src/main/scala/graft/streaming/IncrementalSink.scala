@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.operators.InPlace
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -11,7 +13,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the version column — and `Trigger.AvailableNow` gives
   * catch-up-then-stop semantics (incremental batch refresh).
   *
-  * Scale stance: the swap-directory pattern here is the local-FS
+  * Scale stance: the in-place directory replace here is the local-FS
   * stand-in for a transactional table format's commit — on a real
   * deployment the `foreachBatch` body becomes `MERGE INTO` against a
   * format with atomic commits and the per-batch cost is one
@@ -29,52 +31,40 @@ object IncrementalSink {
   /** Upsert `batch` into the parquet snapshot at `targetDir`: rows
     * replace existing rows with the same `key` when their
     * `versionCol` is newer; ties break toward the incoming batch.
+    *
+    * Parquet cannot overwrite a directory it is reading, so the next
+    * snapshot is written to `<target>__next` and swapped in through
+    * [[graft.operators.InPlace.replace]] with `<target>__old` as the
+    * backup: at every crash point the target or its backup holds a
+    * complete snapshot, and the next upsert restores a backup a cut
+    * swap left alone before it reads (the checkpointed stream
+    * re-delivers the batch that died; upserts are idempotent).
     */
   def upsertParquet(spark: SparkSession, batch: DataFrame,
       targetDir: String, key: String, versionCol: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(targetDir)
-    // bind the FS from the TARGET's scheme (s3a://, hdfs://, file://)
-    // — FileSystem.get(conf) would silently return the default FS and
-    // operate on the wrong store for a qualified target path
+    val target = new Path(targetDir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backup = new org.apache.hadoop.fs.Path(targetDir + "__old")
-    // crash recovery: a previous run may have died between demoting
-    // the snapshot to __old and promoting __next — restore the backup
-    // so a readable snapshot always exists (the checkpointed stream
-    // re-delivers the batch that died; upserts are idempotent)
-    if (!fs.exists(target) && fs.exists(backup)) fs.rename(backup, target)
-    // __is_new breaks version ties toward the incoming batch (a
-    // re-delivered row must not lose to the copy already in the
-    // snapshot, or retries would not be idempotent under equal
-    // versions).
-    val incoming = batch.withColumn("__is_new", lit(1))
-    val merged =
-      if (fs.exists(target)) {
-        val existing = spark.read.parquet(targetDir)
-          .withColumn("__is_new", lit(0))
-        existing.unionByName(incoming)
-      } else incoming
-    val w = Window.partitionBy(key)
-      .orderBy(col(versionCol).desc, col("__is_new").desc)
-    val next = merged
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__is_new")
-    // Write-then-swap: parquet can't overwrite a directory it is
-    // reading, so materialize the next snapshot beside the current one
-    // and rename into place (the local-FS analog of a table-format
-    // commit). Demote-then-promote instead of delete-then-rename: at
-    // every crash point either the target or its __old backup holds a
-    // complete snapshot — a plain delete would open a window where the
-    // data is simply GONE (rename of a fully-written directory is
-    // cheap-or-atomic on file:// and hdfs://; loss, unlike staleness,
-    // is unrecoverable for an AvailableNow restart).
-    val tmp = new org.apache.hadoop.fs.Path(targetDir + "__next")
-    next.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (fs.exists(target)) fs.rename(target, backup)
-    fs.rename(tmp, target)
-    fs.delete(backup, true) // best-effort; next run re-clears it
+    InPlace.replace(fs, target, new Path(targetDir + "__next"),
+        new Path(targetDir + "__old")) { tmp =>
+      // __is_new breaks version ties toward the incoming batch (a
+      // re-delivered row must not lose to the copy already in the
+      // snapshot, or retries would not be idempotent under equal
+      // versions).
+      val incoming = batch.withColumn("__is_new", lit(1))
+      val merged =
+        if (fs.exists(target)) {
+          val existing = spark.read.parquet(targetDir)
+            .withColumn("__is_new", lit(0))
+          existing.unionByName(incoming)
+        } else incoming
+      val w = Window.partitionBy(key)
+        .orderBy(col(versionCol).desc, col("__is_new").desc)
+      merged
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__rn", "__is_new")
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
   }
 
   /** Wire a streaming source into the upsert sink and process all

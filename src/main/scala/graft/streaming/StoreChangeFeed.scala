@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.VersionedStore
+import graft.operators.{InPlace, VersionedStore}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -41,8 +41,8 @@ import org.apache.spark.sql.functions._
   */
 object StoreChangeFeed {
 
-  private def fs(spark: SparkSession): FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Last source version fully applied (0 = nothing yet). The
     * cursor is a DIRECTORY of version-named marker files and the
@@ -55,8 +55,8 @@ object StoreChangeFeed {
     * Older markers are GC'd best-effort AFTER the new one exists.
     */
   def cursorOf(spark: SparkSession, cursorPath: String): Long = {
-    val f = fs(spark)
     val d = new Path(cursorPath)
+    val f = fs(spark, d)
     if (!f.exists(d)) 0L
     else f.listStatus(d).toSeq.map(_.getPath.getName)
       .filter(_.matches("v\\d+")).map(_.drop(1).toLong)
@@ -65,8 +65,8 @@ object StoreChangeFeed {
 
   private def setCursor(spark: SparkSession, cursorPath: String,
       v: Long): Unit = {
-    val f = fs(spark)
     val d = new Path(cursorPath)
+    val f = fs(spark, d)
     if (!f.exists(d)) f.mkdirs(d)
     val out = f.create(new Path(d, s"v$v"), true)
     out.close()
@@ -85,12 +85,16 @@ object StoreChangeFeed {
     * crash after the insert half landed followed by new SOURCE
     * commits would widen the replayed window — its insert set would
     * re-carry rows the crashed attempt already landed (under a new
-    * txn, so idempotence can't catch them) and duplicate them.
+    * txn, so idempotence can't catch them) and duplicate them. A
+    * stale intent is replaced through [[InPlace.replace]], backed up
+    * at `<cursor>.intent.bak` until the new one is in place.
     */
   private def intendedTo(spark: SparkSession, cursorPath: String,
       from: Long, latest: Long): Long = {
-    val f = fs(spark)
     val p = new Path(cursorPath + ".intent")
+    val f = fs(spark, p)
+    val bak = new Path(cursorPath + ".intent.bak")
+    InPlace.recover(f, p, bak)
     val resumed =
       if (!f.exists(p)) None
       else {
@@ -103,14 +107,11 @@ object StoreChangeFeed {
       }
     resumed.getOrElse {
       val tmp = new Path(cursorPath + ".intent.tmp")
-      if (f.exists(tmp)) f.delete(tmp, true)
-      val out = f.create(tmp, true)
-      try out.write(s"$from:$latest".getBytes("UTF-8"))
-      finally out.close()
-      if (f.exists(p) && !f.delete(p, true)) sys.error(
-        s"StoreChangeFeed: cannot replace intent $p")
-      if (!f.rename(tmp, p)) sys.error(
-        s"StoreChangeFeed: cannot publish intent $p")
+      InPlace.replace(f, p, tmp, bak) { t =>
+        val out = f.create(t, true)
+        try out.write(s"$from:$latest".getBytes("UTF-8"))
+        finally out.close()
+      }
       latest
     }
   }
