@@ -1833,7 +1833,7 @@ object VersionedStore {
   }
 
   /** The parquet data files of one existing group dir. */
-  private def parquetFiles(dir: Path,
+  private[graft] def parquetFiles(dir: Path,
       conf: org.apache.hadoop.conf.Configuration)
       : Seq[org.apache.hadoop.fs.FileStatus] =
     dir.getFileSystem(conf).listStatus(dir).toSeq.filter(st =>
@@ -2423,9 +2423,7 @@ object VersionedStore {
     val schema = schemaAt(spark, path, v)
     if (schema.isEmpty || liveDvFids(spark, path, v).nonEmpty)
       return None
-    val classic =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val conf = classic.sessionState.newHadoopConf()
+    val conf = spark.sparkContext.hadoopConfiguration
     val dirs = groupDirs(spark, path, fids).map(new Path(_))
     if (!dirs.forall(d => d.getFileSystem(conf).exists(d))) return None
     val files = dirs.flatMap(parquetFiles(_, conf))
@@ -2441,23 +2439,14 @@ object VersionedStore {
         .BindReferences.bindReference(cond, attrs))
     keep.initialize(0)
     val m = mappingAt(spark, path, v)
-    val phys = StoreSqlShims.nullable(
-      org.apache.spark.sql.types.StructType(schema.get.fields
-        .map(f => f.copy(name = m.getOrElse(f.name, f.name)))))
+    val phys = org.apache.spark.sql.types.StructType(schema.get.fields
+      .map(f => f.copy(name = m.getOrElse(f.name, f.name))))
     val pk = org.apache.spark.sql.catalyst.util.QuotingUtils
       .quoteIfNeeded(m.getOrElse(keyCol, keyCol))
-    val read = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat().buildReaderWithPartitionValues(spark, phys,
-        org.apache.spark.sql.types.StructType(Nil), phys,
-        Seq(org.apache.spark.sql.sources.EqualTo(pk, value)),
-        Map(org.apache.spark.sql.execution.datasources.FileFormat
-          .OPTION_RETURNING_BATCH -> "false"), conf)
+    val read = parquetReader(spark, phys,
+      Seq(org.apache.spark.sql.sources.EqualTo(pk, value)))
     val rows = files.flatMap { st =>
-      val it = read(org.apache.spark.sql.execution.datasources
-        .PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPath(st.getPath), 0L,
-          st.getLen, Array.empty[String], st.getModificationTime,
-          st.getLen))
+      val it = read(wholeFile(st))
       // the reader closes itself once drained; close it on a failure
       try it.filter(keep.eval).map(_.copy()).toVector
       finally it match {
@@ -2467,6 +2456,36 @@ object VersionedStore {
     }
     Some(StoreSqlShims.ofRows(spark, LocalRelation(attrs, rows)))
   }
+
+  /** Spark's own parquet reader over `schema`, returning rows, with
+    * the session's parquet settings; `filters` skip row groups. It is
+    * built on the driver, and the function it returns is
+    * serializable, so executors run it too. A file missing a column
+    * of `schema` reads NULL there, and narrower stored types widen
+    * as in a batch read.
+    */
+  private[graft] def parquetReader(spark: SparkSession,
+      schema: StructType,
+      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil)
+      : org.apache.spark.sql.execution.datasources.PartitionedFile =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    val nullable = StoreSqlShims.nullable(schema)
+    new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().buildReaderWithPartitionValues(spark,
+        nullable, StructType(Nil), nullable, filters,
+        Map(org.apache.spark.sql.execution.datasources.FileFormat
+          .OPTION_RETURNING_BATCH -> "false"),
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          .sessionState.newHadoopConf())
+  }
+
+  /** One whole parquet file as a [[parquetReader]] split. */
+  private[graft] def wholeFile(st: org.apache.hadoop.fs.FileStatus)
+      : org.apache.spark.sql.execution.datasources.PartitionedFile =
+    org.apache.spark.sql.execution.datasources.PartitionedFile(
+      org.apache.spark.sql.catalyst.InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPath(st.getPath), 0L,
+      st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
 
   /** Fold the live file-groups — remove-all + add-new in a single
     * commit record, so readers see the old file set or the new one,

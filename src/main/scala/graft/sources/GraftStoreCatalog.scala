@@ -723,9 +723,7 @@ final case class GraftStoreTable(path: String,
           require(!replace,
             "GraftStoreTable: streaming writes append only")
           new graft.streaming.StoreStreamingWrite(path,
-            info.schema(), info.queryId(),
-            new org.apache.spark.util.SerializableConfiguration(
-              SparkSession.active.sparkContext.hadoopConfiguration))
+            info.schema(), info.queryId())
         }
       }
     }

@@ -157,51 +157,6 @@ object StoreChangeFeed {
     (from, to)
   }
 
-  /** The change feed as a STRUCTURED STREAMING input: a micro-batch
-    * query whose every trigger tick runs one [[replicate]] window
-    * through the cursor + write-ahead-intent protocol. Returns the
-    * running [[org.apache.spark.sql.streaming.StreamingQuery]];
-    * `stop()` it like any stream — exactly-once across stop/kill/
-    * restart at ANY point is carried by the store-side protocol
-    * (cursor, intent, txn-tagged inserts), NOT by the streaming
-    * checkpoint, so killing the query mid-window and restarting with
-    * a fresh checkpoint still lands every window exactly once (the
-    * property [[StoreChangeFeedSpec]] pins per crash point, and the
-    * streaming spec pins end-to-end).
-    *
-    * Mechanics: the driver is the [[StoreChangesSource]] DSv2 source
-    * in its `feed = versions` shape — offsets are STORE VERSIONS, so
-    * `StreamingQueryProgress.sources` reports exactly which version
-    * window each tick covered and an idle source schedules NO batch
-    * at all (a trigger with no new commits is two driver-side
-    * metadata reads and zero Spark jobs — cheap enough for
-    * sub-second polling against a 100 TB store). Structured
-    * Streaming owns the scheduling/metrics surface while the feed
-    * owns correctness; consumers who want the change ROWS as a
-    * stream read `format("graft-store-changes")` directly.
-    */
-  def stream(spark: SparkSession, srcPath: String, dstPath: String,
-      cursorPath: String, keyCols: Seq[String],
-      checkpointDir: String,
-      intervalMs: Long = 1000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("graft-store-changes")
-      .option("path", srcPath)
-      .option("feed", "versions")
-      .option("startingVersion",
-        cursorOf(spark, cursorPath).toString)
-      .load()
-      .writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(intervalMs))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch {
-        (_: org.apache.spark.sql.DataFrame, _: Long) =>
-          replicate(spark, srcPath, dstPath, cursorPath, keyCols)
-          ()
-      }
-      .start()
-
   /** [[replicate]] until the replica is caught up (a source that
     * commits while we drain gets its new windows too); returns the
     * final cursor.

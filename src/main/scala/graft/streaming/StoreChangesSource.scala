@@ -1,13 +1,10 @@
 package graft.streaming
 
 import graft.operators.VersionedStore
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData,
-  GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -15,11 +12,11 @@ import org.apache.spark.sql.connector.read.{InputPartition,
   PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream,
   Offset}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** The [[VersionedStore]] change feed as a REAL Data Source V2
   * streaming source — `spark.readStream.format("graft-store-changes")
@@ -48,27 +45,18 @@ import org.apache.spark.util.SerializableConfiguration
   *    paid here at read time only for the windows that need it, and
   *    reclaimed at commit.
   *
-  *  `option("feed", "versions")` swaps the row feed for a
-  *  one-row-per-version metadata tick `(version LONG)` — the
-  *  scheduling-only shape [[StoreChangeFeed.stream]] drives its
-  *  replicate-protocol wrapper with (real offsets in progress, no
-  *  data planned or read).
-  *
   * Exactly-once: standard DSv2 micro-batch semantics — the offset
   * log pins each batch's (start, end] version window, a post-crash
   * replay re-plans the identical window (deterministic: the log is
   * immutable history), and the sink's own idempotence completes the
   * contract, exactly as with any Spark source. The
   * fresh-checkpoint-restart story (resume from a STORE-side cursor
-  * with no checkpoint at all) is [[StoreChangeFeed]]'s replicate
-  * protocol, layered above this source.
+  * with no checkpoint at all) is [[StoreChangeFeed.replicate]].
   *
-  * Executor-side reading uses parquet-hadoop's Group API (no
-  * SparkSession on executors): primitives, strings, binary, dates,
-  * MILLIS/MICROS/INT96 timestamps, decimals (all three parquet
-  * encodings), structs, and arrays of any of these — the store's
-  * supported column shapes; anything else fails loudly at read,
-  * never a silent null.
+  * Executors read the files with Spark's own parquet reader
+  * ([[VersionedStore.parquetReader]], built on the driver per
+  * micro-batch), so every column type a batch read serves streams
+  * the same way.
   */
 final class StoreChangesSource extends TableProvider
     with DataSourceRegister {
@@ -88,29 +76,21 @@ final class StoreChangesSource extends TableProvider
   }
 
   override def inferSchema(
-      options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    if ("versions".equalsIgnoreCase(options.getOrDefault("feed",
-        "rows")))
-      StructType(Seq(StructField("version", LongType,
-        nullable = false)))
-    else VersionedStore.read(spark, pathOf(options)).schema
+      options: CaseInsensitiveStringMap): StructType =
+    VersionedStore.read(SparkSession.active, pathOf(options)).schema
       .add(StructField("_change", StringType, nullable = false))
-  }
 
   override def getTable(schema: StructType,
       partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
     new StoreChangesTable(pathOf(options), schema,
-      "versions".equalsIgnoreCase(
-        options.getOrDefault("feed", "rows")),
       Option(options.get("startingVersion")).map(_.toLong))
   }
 }
 
 private[streaming] final class StoreChangesTable(path: String,
-    tableSchema: StructType, versionsOnly: Boolean,
+    tableSchema: StructType,
     startingVersion: Option[Long]) extends Table with SupportsRead {
   override def name(): String = s"graft-store-changes($path)"
   override def schema(): StructType = tableSchema
@@ -124,7 +104,7 @@ private[streaming] final class StoreChangesTable(path: String,
         override def toMicroBatchStream(
             checkpointLocation: String): MicroBatchStream =
           new StoreChangesMicroBatchStream(path, tableSchema,
-            versionsOnly, startingVersion, checkpointLocation)
+            startingVersion, checkpointLocation)
       }
     }
 }
@@ -136,13 +116,11 @@ private[graft] final case class StoreVersionOffset(v: Long)
 }
 
 private[streaming] final class StoreChangesMicroBatchStream(
-    path: String, schema: StructType, versionsOnly: Boolean,
+    path: String, schema: StructType,
     startingVersion: Option[Long], checkpointLocation: String)
     extends MicroBatchStream {
 
   private def spark = SparkSession.active
-  private val confSer = new SerializableConfiguration(
-    spark.sparkContext.hadoopConfiguration)
 
   override def initialOffset(): Offset =
     StoreVersionOffset(startingVersion.getOrElse(0L))
@@ -159,21 +137,10 @@ private[streaming] final class StoreChangesMicroBatchStream(
     val from = start.asInstanceOf[StoreVersionOffset].v
     val to = end.asInstanceOf[StoreVersionOffset].v
     if (to <= from) return Array.empty
-    if (versionsOnly)
-      return Array(VersionTickPartition(from, to))
-    def filesUnder(dir: String): Seq[String] = {
-      val f = FileSystem.get(new Path(dir).toUri,
-        spark.sparkContext.hadoopConfiguration)
-      val d = new Path(dir)
-      if (!f.exists(d)) Seq.empty
-      else f.listStatus(d).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).map(_.toString)
-    }
     VersionedStore.appendOnlyWindow(spark, path, from, to) match {
       case Some(groupDirs) =>
         // zero-copy: executors read the store's own files in place
-        groupDirs.flatMap(filesUnder)
-          .map(f => ChangeFilePartition(f, insertTag = true))
+        ChangeFilePartition.of(spark, groupDirs, insertTag = true)
           .toArray
       case None =>
         // derivation window: stage the netted feed (one distributed
@@ -200,14 +167,16 @@ private[streaming] final class StoreChangesMicroBatchStream(
               s"graft-store-changes: cannot stage window $dir")
           }
         }
-        filesUnder(dir)
-          .map(f => ChangeFilePartition(f, insertTag = false))
+        ChangeFilePartition.of(spark, Seq(dir), insertTag = false)
           .toArray
     }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new StoreChangesReaderFactory(schema, confSer)
+    new ChangeFileReaderFactory(
+      VersionedStore.parquetReader(spark, schema),
+      Some(VersionedStore.parquetReader(spark,
+        StructType(schema.filter(_.name != "_change")))))
 
   /** Reclaim staged windows at or below the committed offset. */
   override def commit(end: Offset): Unit = {
@@ -228,231 +197,57 @@ private[streaming] final class StoreChangesMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-private[streaming] final case class VersionTickPartition(from: Long,
-  to: Long) extends InputPartition
-
-/** One parquet file of a window — a store group file (pure-append
-  * window, reader synthesizes `_change = insert`) or a staged feed
-  * file (carries its own `_change`).
+/** One parquet file of a window: a store group file (pure-append
+  * window; the change feed appends `_change = insert`) or a staged
+  * feed file (carries its own `_change`).
   */
-private[graft] final case class ChangeFilePartition(file: String,
-  insertTag: Boolean) extends InputPartition
+private[graft] final case class ChangeFilePartition(
+  file: PartitionedFile, insertTag: Boolean) extends InputPartition
 
-private[graft] final class StoreChangesReaderFactory(
-    schema: StructType, conf: SerializableConfiguration)
-    extends PartitionReaderFactory {
-  override def createReader(
-      partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case VersionTickPartition(from, to) =>
-        new PartitionReader[InternalRow] {
-          private var v = from
-          override def next(): Boolean = { v += 1; v <= to }
-          override def get(): InternalRow =
-            new GenericInternalRow(Array[Any](v))
-          override def close(): Unit = ()
-        }
-      case ChangeFilePartition(file, insertTag) =>
-        new GroupParquetReader(file, schema, insertTag, conf.value)
-    }
+private[graft] object ChangeFilePartition {
+  /** One partition per parquet file under `dirs`, listed on the
+    * driver. A dir that is gone contributes nothing.
+    */
+  def of(spark: SparkSession, dirs: Seq[String],
+      insertTag: Boolean): Seq[ChangeFilePartition] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dirs.map(new Path(_)).filter(d => d.getFileSystem(conf).exists(d))
+      .flatMap(VersionedStore.parquetFiles(_, conf))
+      .map(st => ChangeFilePartition(VersionedStore.wholeFile(st),
+        insertTag))
+  }
 }
 
-/** Executor-side parquet → InternalRow via parquet-hadoop's Group
-  * API (no SparkSession on executors). Supports the store's column
-  * shapes — primitives, strings/binary, dates, MILLIS/MICROS/INT96
-  * timestamps, decimals in all three parquet encodings, structs,
-  * arrays, and maps of any of these — and fails loudly on anything
-  * else.
+/** Serves each [[ChangeFilePartition]] through a parquet reader the
+  * driver built: `read` returns rows as stored, and `readStore`
+  * (the change feed's; over the store columns alone) reads the group
+  * files of an `insertTag` partition, whose rows get `insert`
+  * joined on. The readers reuse their row objects, so rows are
+  * handed on and never kept.
   */
-private[streaming] final class GroupParquetReader(file: String,
-    schema: StructType, insertTag: Boolean, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(),
-      new Path(file)).withConf(conf).build()
-  private var cur: Group = _
-
-  override def next(): Boolean = { cur = reader.read(); cur != null }
-
-  override def get(): InternalRow = {
-    val g = cur
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      val f = schema(i)
-      vals(i) =
-        if (insertTag && f.name == "_change")
-          UTF8String.fromString("insert")
-        else if (!g.getType.containsField(f.name))
-          // snapshot-first windows serve live group files of mixed
-          // vintages: a group written before an ADD COLUMN evolution
-          // has no such field — the column is NULL for those rows,
-          // exactly as the batch reader serves it
-          null
-        else {
-          val gi = g.getType.getFieldIndex(f.name)
-          if (g.getFieldRepetitionCount(gi) == 0) null
-          else convert(g, gi, f.dataType)
-        }
-      i += 1
+private[graft] final class ChangeFileReaderFactory(
+    read: PartitionedFile => Iterator[InternalRow],
+    readStore: Option[PartitionedFile => Iterator[InternalRow]])
+    extends PartitionReaderFactory {
+  override def createReader(
+      partition: InputPartition): PartitionReader[InternalRow] = {
+    val ChangeFilePartition(file, insertTag) = partition
+    val tag = readStore.filter(_ => insertTag)
+    val rows = tag.getOrElse(read)(file)
+    val insert = InternalRow(UTF8String.fromString("insert"))
+    val joined = new JoinedRow
+    new PartitionReader[InternalRow] {
+      private var cur: InternalRow = _
+      override def next(): Boolean =
+        rows.hasNext && { cur = rows.next(); true }
+      override def get(): InternalRow =
+        if (tag.isEmpty) cur else joined(cur, insert)
+      override def close(): Unit = rows match {
+        case c: java.io.Closeable => c.close()
+        case _ => ()
+      }
     }
-    new GenericInternalRow(vals)
   }
-
-  /** Spark's INT96 legacy timestamp: 8-byte little-endian
-    * nanos-of-day + 4-byte little-endian julian day → micros since
-    * epoch.
-    */
-  private def int96Micros(bytes: Array[Byte]): Long = {
-    val buf = java.nio.ByteBuffer.wrap(bytes)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    val epochDays = julianDay - 2440588L
-    epochDays * 86400000000L + nanosOfDay / 1000L
-  }
-
-  private def convert(g: Group, gi: Int, dt: DataType): Any =
-    dt match {
-      // widening promotions mirror the batch reader's (retypeColumn:
-      // groups written before a widening retype keep their narrow
-      // physical encoding and read under the wide requested type)
-      case LongType =>
-        val pt = g.getType.getType(gi).asPrimitiveType()
-          .getPrimitiveTypeName.toString
-        if (pt == "INT32") g.getInteger(gi, 0).toLong
-        else g.getLong(gi, 0)
-      case IntegerType => g.getInteger(gi, 0)
-      case DoubleType =>
-        val pt = g.getType.getType(gi).asPrimitiveType()
-          .getPrimitiveTypeName.toString
-        if (pt == "FLOAT") g.getFloat(gi, 0).toDouble
-        else g.getDouble(gi, 0)
-      case FloatType => g.getFloat(gi, 0)
-      case BooleanType => g.getBoolean(gi, 0)
-      case StringType =>
-        UTF8String.fromBytes(g.getBinary(gi, 0).getBytes)
-      case BinaryType => g.getBinary(gi, 0).getBytes
-      case DateType => g.getInteger(gi, 0)
-      case TimestampType =>
-        val pt = g.getType.getType(gi).asPrimitiveType()
-        if (pt.getPrimitiveTypeName.toString == "INT96")
-          int96Micros(g.getInt96(gi, 0).getBytes)
-        else {
-          // the INT64 unit comes from the column's logical type —
-          // a file written under outputTimestampType=TIMESTAMP_MILLIS
-          // decoded as micros would be silently 1000x off
-          import org.apache.parquet.schema.LogicalTypeAnnotation
-          val raw = g.getLong(gi, 0)
-          pt.getLogicalTypeAnnotation match {
-            case t: LogicalTypeAnnotation
-                .TimestampLogicalTypeAnnotation =>
-              t.getUnit match {
-                case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                  raw * 1000L
-                case LogicalTypeAnnotation.TimeUnit.MICROS => raw
-                case other => sys.error(
-                  s"graft-store-changes: unsupported timestamp " +
-                    s"unit $other")
-              }
-            case null => raw // plain INT64: Spark's default micros
-            case other => sys.error(
-              s"graft-store-changes: unexpected logical type " +
-                s"$other on a timestamp column")
-          }
-        }
-      case d: DecimalType =>
-        // Spark's three decimal encodings by precision: INT32
-        // (p<=9), INT64 (p<=18), fixed/binary big-endian unscaled.
-        // The unscaled value is at the FILE's declared scale (which
-        // a widening retype can leave below the requested scale) —
-        // rescaling to the requested type is exact, scale only grows
-        import org.apache.parquet.schema.LogicalTypeAnnotation
-        val prim = g.getType.getType(gi).asPrimitiveType()
-        val fileScale = prim.getLogicalTypeAnnotation match {
-          case a: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-            a.getScale
-          case _ => d.scale
-        }
-        def mk(unscaled: java.math.BigInteger): Decimal =
-          Decimal(new java.math.BigDecimal(unscaled, fileScale)
-            .setScale(d.scale), d.precision, d.scale)
-        prim.getPrimitiveTypeName.toString match {
-          case "INT32" => mk(java.math.BigInteger
-            .valueOf(g.getInteger(gi, 0).toLong))
-          case "INT64" => mk(java.math.BigInteger
-            .valueOf(g.getLong(gi, 0)))
-          case "FIXED_LEN_BYTE_ARRAY" | "BINARY" =>
-            mk(new java.math.BigInteger(g.getBinary(gi, 0).getBytes))
-          case other => sys.error(
-            s"graft-store-changes: unsupported decimal encoding " +
-              s"$other")
-        }
-      case st: StructType =>
-        // nested group, converted field-recursively (structs of
-        // structs/arrays/decimals come free through convert)
-        val sub = g.getGroup(gi, 0)
-        val out = new Array[Any](st.length)
-        var j = 0
-        while (j < st.length) {
-          val sf = st(j)
-          out(j) =
-            if (!sub.getType.containsField(sf.name)) null
-            else {
-              val sgi = sub.getType.getFieldIndex(sf.name)
-              if (sub.getFieldRepetitionCount(sgi) == 0) null
-              else convert(sub, sgi, sf.dataType)
-            }
-          j += 1
-        }
-        new GenericInternalRow(out)
-      case ArrayType(elem, _) =>
-        // Spark's 3-level list layout: group (LIST) { repeated
-        // group list { element } }
-        val lst = g.getGroup(gi, 0)
-        val n = lst.getFieldRepetitionCount(0)
-        val out = new Array[Any](n)
-        var j = 0
-        while (j < n) {
-          val el = lst.getGroup(0, j)
-          out(j) =
-            if (el.getFieldRepetitionCount(0) == 0) null
-            else convert(el, 0, elem) // any supported element type
-          j += 1
-        }
-        new GenericArrayData(out)
-      case MapType(kt, vt, _) =>
-        // Spark's map layout: group (MAP) { repeated group key_value
-        // { required key; optional value } } — accessed by POSITION
-        // (field 0 = key, 1 = value) so legacy `map`-named inner
-        // groups read identically
-        val m = g.getGroup(gi, 0)
-        val n = m.getFieldRepetitionCount(0)
-        val keys = new Array[Any](n)
-        val vals = new Array[Any](n)
-        var j = 0
-        while (j < n) {
-          val kv = m.getGroup(0, j)
-          keys(j) = convert(kv, 0, kt) // keys are required, non-null
-          vals(j) =
-            if (kv.getFieldRepetitionCount(1) == 0) null
-            else convert(kv, 1, vt)
-          j += 1
-        }
-        new ArrayBasedMapData(
-          new GenericArrayData(keys), new GenericArrayData(vals))
-      case other => sys.error(
-        s"graft-store-changes: unsupported column type $other — " +
-          "the store feed reader handles primitives, strings, " +
-          "binary, dates, timestamps, decimals, structs, arrays, " +
-          "and maps")
-    }
-
-  override def close(): Unit = reader.close()
 }
 
 /** The ROW feed of a store/catalog table as a streaming source —
@@ -477,8 +272,6 @@ private[graft] final class StoreTableRowStream(path: String,
     startingVersion: Option[Long]) extends MicroBatchStream {
 
   private def spark = SparkSession.active
-  private val confSer = new SerializableConfiguration(
-    spark.sparkContext.hadoopConfiguration)
 
   /** -1 = "initial snapshot pending": the first planned window
     * (-1, v] serves the live files AT v instead of a version range.
@@ -497,18 +290,10 @@ private[graft] final class StoreTableRowStream(path: String,
     val from = start.asInstanceOf[StoreVersionOffset].v
     val to = end.asInstanceOf[StoreVersionOffset].v
     if (to <= from) return Array.empty
-    def filesUnder(dir: String): Seq[String] = {
-      val f = FileSystem.get(new Path(dir).toUri,
-        spark.sparkContext.hadoopConfiguration)
-      val d = new Path(dir)
-      if (!f.exists(d)) Seq.empty
-      else f.listStatus(d).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).map(_.toString)
-    }
     if (from < 0)
       return VersionedStore.snapshotFiles(spark, path, to) match {
-        case Some(dirs) => dirs.flatMap(filesUnder)
-          .map(f => ChangeFilePartition(f, insertTag = true)).toArray
+        case Some(dirs) =>
+          ChangeFilePartition.of(spark, dirs, insertTag = false).toArray
         case None => sys.error(
           s"readStream.table over store at $path: the initial " +
             "snapshot carries live deletion vectors or renamed " +
@@ -538,8 +323,7 @@ private[graft] final class StoreTableRowStream(path: String,
     (from + 1 to to).flatMap { v =>
       VersionedStore.appendOnlyWindow(spark, path, v - 1, v) match {
         case Some(groupDirs) =>
-          groupDirs.flatMap(filesUnder)
-            .map(f => ChangeFilePartition(f, insertTag = true))
+          ChangeFilePartition.of(spark, groupDirs, insertTag = false)
         // a pure schema ANCHOR of the stream's own schema (the
         // CREATE TABLE commit) contributes no rows and changes
         // nothing — a no-op version, not a change commit
@@ -561,7 +345,8 @@ private[graft] final class StoreTableRowStream(path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new StoreChangesReaderFactory(schema, confSer)
+    new ChangeFileReaderFactory(
+      VersionedStore.parquetReader(spark, schema), None)
 
   override def commit(end: Offset): Unit = () // nothing staged
   override def stop(): Unit = ()

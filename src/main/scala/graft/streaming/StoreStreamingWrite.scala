@@ -1,14 +1,19 @@
 package graft.streaming
 
 import graft.operators.VersionedStore
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter,
   PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{OutputWriter,
+  OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet
+  .ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -42,14 +47,12 @@ import org.apache.spark.util.SerializableConfiguration
   * one stats pass over the new group only. Single-writer per store
   * path, as everywhere.
   *
-  * The executor writer mirrors [[GroupParquetReader]] (parquet-
-  * hadoop Group API, no SparkSession on executors): primitives,
-  * strings/binary, dates, MICROS timestamps, decimals, structs, and
-  * arrays — anything else fails loudly at the first row.
+  * Tasks write with Spark's own parquet writer, prepared once per
+  * query on the driver, so staged files carry the same encodings as a
+  * batch append and every column type a batch append takes streams.
   */
 final class StoreStreamingWrite(path: String, schema: StructType,
-    queryId: String, conf: SerializableConfiguration)
-    extends StreamingWrite {
+    queryId: String) extends StreamingWrite {
 
   private def spark = SparkSession.active
   private def stagingRoot = s"$path/data/.stream-stage/$queryId"
@@ -66,9 +69,21 @@ final class StoreStreamingWrite(path: String, schema: StructType,
       f.copy(name = m.getOrElse(f.name, f.name))))
   }
 
+  /** The parquet writer factory and the job conf it was prepared
+    * into (codec, timestamp and decimal encodings from the session).
+    */
+  private val (writers, conf) = {
+    val job = Job.getInstance(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.newHadoopConf())
+    val w = new ParquetFileFormat().prepareWrite(spark, job, Map.empty,
+      physSchema)
+    (w, new SerializableConfiguration(job.getConfiguration))
+  }
+
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new StoreStreamWriterFactory(stagingRoot, physSchema, conf)
+    new StoreStreamWriterFactory(stagingRoot, physSchema, writers, conf)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -79,15 +94,16 @@ final class StoreStreamingWrite(path: String, schema: StructType,
       txn = epochId, app = queryId)
     // the epoch's staging dir is spent either way (adopted, or a
     // replayed no-op whose re-staged files must not accumulate)
-    val f = FileSystem.get(new Path(path).toUri, conf.value)
-    f.delete(new Path(s"$stagingRoot/$epochId"), true)
-    ()
+    dropStaged(epochId)
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val f = FileSystem.get(new Path(path).toUri, conf.value)
-    f.delete(new Path(s"$stagingRoot/$epochId"), true)
+      messages: Array[WriterCommitMessage]): Unit =
+    dropStaged(epochId)
+
+  private def dropStaged(epochId: Long): Unit = {
+    val dir = new Path(s"$stagingRoot/$epochId")
+    dir.getFileSystem(conf.value).delete(dir, true)
     ()
   }
 }
@@ -98,202 +114,40 @@ final class StoreStreamingWrite(path: String, schema: StructType,
 private[streaming] final case class StagedFilesMessage(
   files: Seq[String]) extends WriterCommitMessage
 
+/** Each task writes one staged file, created at its first row, so an
+  * empty partition stages nothing; an aborted task deletes its file.
+  */
 private[streaming] final class StoreStreamWriterFactory(
     stagingRoot: String, schema: StructType,
-    conf: SerializableConfiguration)
+    writers: OutputWriterFactory, conf: SerializableConfiguration)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new GroupParquetWriter(
-      s"$stagingRoot/$epochId/part-$partitionId-$taskId-" +
-        s"${java.util.UUID.randomUUID}.parquet",
-      schema, conf.value)
-}
+      epochId: Long): DataWriter[InternalRow] = {
+    val file = s"$stagingRoot/$epochId/part-$partitionId-$taskId-" +
+      s"${java.util.UUID.randomUUID}.parquet"
+    new DataWriter[InternalRow] {
+      private var out: OutputWriter = _
 
-/** Executor-side InternalRow → parquet via parquet-hadoop's Group
-  * API — the WRITE mirror of [[GroupParquetReader]]. The file is
-  * created lazily at the first row (empty partitions stage
-  * nothing), and the parquet schema is built explicitly (INT64
-  * MICROS adjusted-to-UTC timestamps, Spark's decimal encodings,
-  * 3-level list layout), so the store's normal Spark reads consume
-  * the staged bytes with no special-casing.
-  */
-private[streaming] final class GroupParquetWriter(file: String,
-    schema: StructType, conf: Configuration)
-    extends DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.ParquetWriter
-  import org.apache.parquet.hadoop.example.ExampleParquetWriter
-  import org.apache.parquet.io.api.Binary
-  import org.apache.parquet.schema.{LogicalTypeAnnotation,
-    MessageType, PrimitiveType, Type, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+      override def write(record: InternalRow): Unit = {
+        if (out == null) out = writers.newInstance(file, schema,
+          new TaskAttemptContextImpl(conf.value, new TaskAttemptID))
+        out.write(record)
+      }
 
-  private def decimalBytes(precision: Int): Int = {
-    var n = 1
-    while (BigInt(2).pow(8 * n - 1) <= BigInt(10).pow(precision))
-      n += 1
-    n
-  }
+      override def commit(): WriterCommitMessage = {
+        if (out != null) out.close()
+        StagedFilesMessage(Option(out).map(_ => file).toSeq)
+      }
 
-  private def parquetField(name: String, dt: DataType,
-      rep: Type.Repetition = Type.Repetition.OPTIONAL): Type =
-    dt match {
-      case LongType => Types.primitive(INT64, rep).named(name)
-      case IntegerType => Types.primitive(INT32, rep).named(name)
-      case DoubleType => Types.primitive(DOUBLE, rep).named(name)
-      case FloatType => Types.primitive(FLOAT, rep).named(name)
-      case BooleanType => Types.primitive(BOOLEAN, rep).named(name)
-      case StringType => Types.primitive(BINARY, rep)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case BinaryType => Types.primitive(BINARY, rep).named(name)
-      case DateType => Types.primitive(INT32, rep)
-        .as(LogicalTypeAnnotation.dateType()).named(name)
-      case TimestampType => Types.primitive(INT64, rep)
-        .as(LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case d: DecimalType =>
-        val ann = LogicalTypeAnnotation
-          .decimalType(d.scale, d.precision)
-        if (d.precision <= 9)
-          Types.primitive(INT32, rep).as(ann).named(name)
-        else if (d.precision <= 18)
-          Types.primitive(INT64, rep).as(ann).named(name)
-        else Types.primitive(FIXED_LEN_BYTE_ARRAY, rep)
-          .length(decimalBytes(d.precision)).as(ann).named(name)
-      case ArrayType(et, _) =>
-        Types.buildGroup(rep)
-          .as(LogicalTypeAnnotation.listType())
-          .addField(Types.repeatedGroup()
-            .addField(parquetField("element", et)).named("list"))
-          .named(name)
-      case st: StructType =>
-        st.fields.foldLeft(Types.buildGroup(rep)) { (b, f) =>
-          b.addField(parquetField(f.name, f.dataType))
-        }.named(name)
-      case MapType(kt, vt, _) =>
-        // Spark's standard parquet map layout: group (MAP) {
-        // repeated group key_value { required key; optional value } }
-        Types.buildGroup(rep)
-          .as(LogicalTypeAnnotation.mapType())
-          .addField(Types.repeatedGroup()
-            .addField(parquetField("key", kt,
-              Type.Repetition.REQUIRED))
-            .addField(parquetField("value", vt))
-            .named("key_value"))
-          .named(name)
-      case other => sys.error(
-        s"graft streaming write: unsupported column type $other — " +
-          "the staged writer handles primitives, strings, binary, " +
-          "dates, timestamps, decimals, structs, arrays, and maps")
+      override def abort(): Unit =
+        try if (out != null) out.close()
+        finally {
+          val p = new Path(file)
+          p.getFileSystem(conf.value).delete(p, false)
+          ()
+        }
+
+      override def close(): Unit = ()
     }
-
-  private lazy val msgType: MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach(f =>
-      b.addField(parquetField(f.name, f.dataType)))
-    b.named("spark_schema")
   }
-
-  private var writer: ParquetWriter[Group] = _
-  private var factory: SimpleGroupFactory = _
-  private var count = 0L
-
-  private def setScalar(g: Group, name: String, dt: DataType,
-      src: org.apache.spark.sql.catalyst.expressions
-        .SpecializedGetters, i: Int): Unit = dt match {
-    case LongType => g.add(name, src.getLong(i))
-    case IntegerType => g.add(name, src.getInt(i))
-    case DoubleType => g.add(name, src.getDouble(i))
-    case FloatType => g.add(name, src.getFloat(i))
-    case BooleanType => g.add(name, src.getBoolean(i))
-    case StringType => g.add(name, Binary.fromConstantByteArray(
-      src.getUTF8String(i).getBytes))
-    case BinaryType => g.add(name,
-      Binary.fromConstantByteArray(src.getBinary(i)))
-    case DateType => g.add(name, src.getInt(i))
-    case TimestampType => g.add(name, src.getLong(i))
-    case d: DecimalType =>
-      val dec = src.getDecimal(i, d.precision, d.scale)
-      if (d.precision <= 9) g.add(name, dec.toUnscaledLong.toInt)
-      else if (d.precision <= 18) g.add(name, dec.toUnscaledLong)
-      else {
-        val unscaled = dec.toJavaBigDecimal.unscaledValue()
-        val raw = unscaled.toByteArray
-        val n = decimalBytes(d.precision)
-        val out = new Array[Byte](n)
-        // big-endian two's complement, sign-extended to fixed width
-        val sign: Byte = if (unscaled.signum() < 0) -1 else 0
-        java.util.Arrays.fill(out, sign)
-        System.arraycopy(raw, 0, out, n - raw.length, raw.length)
-        g.add(name, Binary.fromConstantByteArray(out))
-      }
-    case st: StructType =>
-      val sub = g.addGroup(name)
-      val row = src.getStruct(i, st.length)
-      var j = 0
-      while (j < st.length) {
-        if (!row.isNullAt(j))
-          setScalar(sub, st(j).name, st(j).dataType, row, j)
-        j += 1
-      }
-      ()
-    case ArrayType(et, _) =>
-      val lst = g.addGroup(name)
-      val arr = src.getArray(i)
-      var j = 0
-      while (j < arr.numElements()) {
-        val el = lst.addGroup("list")
-        if (!arr.isNullAt(j)) setScalar(el, "element", et, arr, j)
-        j += 1
-      }
-      ()
-    case MapType(kt, vt, _) =>
-      val grp = g.addGroup(name)
-      val m = src.getMap(i)
-      val keys = m.keyArray()
-      val vals = m.valueArray()
-      var j = 0
-      while (j < m.numElements()) {
-        val kv = grp.addGroup("key_value")
-        setScalar(kv, "key", kt, keys, j) // map keys are never null
-        if (!vals.isNullAt(j)) setScalar(kv, "value", vt, vals, j)
-        j += 1
-      }
-      ()
-    case other => sys.error(
-      s"graft streaming write: unsupported column type $other")
-  }
-
-  override def write(record: InternalRow): Unit = {
-    if (writer == null) {
-      writer = ExampleParquetWriter.builder(new Path(file))
-        .withConf(conf).withType(msgType).build()
-      factory = new SimpleGroupFactory(msgType)
-    }
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!record.isNullAt(i))
-        setScalar(g, schema(i).name, schema(i).dataType, record, i)
-      i += 1
-    }
-    writer.write(g)
-    count += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
-    StagedFilesMessage(if (count == 0) Seq.empty else Seq(file))
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) writer.close()
-    val f = FileSystem.get(new Path(file).toUri, conf)
-    f.delete(new Path(file), false)
-    ()
-  }
-
-  override def close(): Unit = ()
 }

@@ -12,9 +12,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * write and the checkpoint commit, and
   * [[VersionedStore.appendIdempotent]] turns that replay into a
   * no-op (the txn-tagged commit already exists), so the store holds
-  * each batch exactly once — no consumer-side dedup convention needed
-  * (contrast [[DeltaLedgerStream]], which is idempotent only at the
-  * content level and asks ledger readers to keep the first verdict).
+  * each batch exactly once — no consumer-side dedup convention needed.
   *
   * Each micro-batch is one atomic commit: downstream readers see
   * whole batches or nothing, time travel reproduces the store as of

@@ -6,8 +6,11 @@ import scala.util.{Success, Try}
 
 import graft.meta.{MetaEntry, MetadataStore}
 import graft.operators.{StoreManifest, VersionedStore, WinnowIndex}
-import graft.streaming.{IncrementalSink, StoreChangeFeed}
+import graft.streaming.{StoreChangeFeed, StoreStreamingWrite}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -138,21 +141,6 @@ class CrashSweepSpec extends AnyFunSuite with SparkFixture
         .map { case (p, v) => p.stripPrefix(root) -> v })
   }
 
-  test("IncrementalSink.upsertParquet: old or new snapshot at every " +
-      "fault") {
-    val s = spark
-    import s.implicits._
-    def upsert(root: String, batch: Seq[(Long, Long, String)]): Unit =
-      IncrementalSink.upsertParquet(spark,
-        batch.toDF("id", "version", "value"), s"$root/snap", "id",
-        "version")
-    sweep(
-      root => upsert(root, Seq((1L, 1L, "a"), (2L, 1L, "b"))),
-      root => upsert(root, Seq((2L, 2L, "c"), (3L, 1L, "d"))),
-      root => spark.read.parquet(s"$root/snap")
-        .as[(Long, Long, String)].collect().toSeq.sorted)
-  }
-
   test("WinnowIndex.compact: the index keeps its rows at every fault") {
     val s = spark
     import s.implicits._
@@ -205,5 +193,43 @@ class CrashSweepSpec extends AnyFunSuite with SparkFixture
       },
       root => { rep(root); () },
       root => ids(VersionedStore.read(spark, s"$root/dst")))
+  }
+
+  test("VersionedStore.adoptStreamEpoch: old or new content at every " +
+      "fault, and a replayed epoch adds nothing") {
+    def store(root: String) = s"$root/s"
+    def setup(root: String): Unit = {
+      VersionedStore.create(spark, store(root))
+      VersionedStore.append(rows(0 until 5, "a"), store(root))
+      ()
+    }
+    // epoch 0 of the `toTable` sink: two tasks stage their rows with
+    // Spark's parquet writer, then the driver commits the epoch
+    def epoch(root: String): Unit = {
+      val sink = new StoreStreamingWrite(store(root),
+        StructType.fromDDL("id BIGINT, body STRING"), "q")
+      val tasks = sink.createStreamingWriterFactory(null)
+      val staged = Seq(5 until 8, 8 until 10).zipWithIndex.map {
+        case (ids, p) =>
+          val w = tasks.createWriter(p, p.toLong, 0L)
+          try {
+            ids.foreach(i => w.write(
+              InternalRow(i.toLong, UTF8String.fromString(s"b$i"))))
+            w.commit()
+          } finally w.close()
+      }
+      sink.commit(0L, staged.toArray)
+    }
+    def content(root: String) = ids(VersionedStore.read(spark, store(root)))
+    sweep(setup, epoch, content)
+    val root = Files.createTempDirectory("graft-replay").toString
+    setup(root)
+    epoch(root)
+    val (v, once) = (VersionedStore.latestVersion(spark, store(root)),
+      content(root))
+    once.map(_._1) shouldBe (0L until 10L)
+    epoch(root)
+    VersionedStore.latestVersion(spark, store(root)) shouldBe v
+    content(root) shouldBe once
   }
 }

@@ -164,46 +164,4 @@ class StoreChangeFeedSpec extends AnyFunSuite with SparkFixture
     content(dst) shouldBe settled
     StoreChangeFeed.cursorOf(spark, cur) shouldBe 2L
   }
-
-  test("STREAMING source: the feed as a Structured Streaming query " +
-      "tracks the source live, survives a mid-stream kill + restart " +
-      "with a FRESH checkpoint, and ends bit-equal to replicateAll") {
-    val d = freshDir()
-    val src = s"$d/src"; val dst = s"$d/dst"; val cur = s"$d/cursor"
-    val s = spark
-    import s.implicits._
-    VersionedStore.create(spark, src)
-    VersionedStore.append(batch(0 until 20), src)              // v1
-    VersionedStore.merge(spark, src,
-      Seq((3L, "m3"), (100L, "m100")).toDF("id", "body"), Seq("id"))
-    def caughtUp(): Boolean =
-      StoreChangeFeed.cursorOf(spark, cur) ==
-        VersionedStore.latestVersion(spark, src)
-    def awaitCaughtUp(): Unit = {
-      val t0 = System.currentTimeMillis()
-      while (!caughtUp() &&
-        System.currentTimeMillis() - t0 < 60000) Thread.sleep(100)
-      caughtUp() shouldBe true
-    }
-    val q1 = StoreChangeFeed.stream(spark, src, dst, cur, Seq("id"),
-      s"$d/ckpt1", intervalMs = 100L)
-    try awaitCaughtUp() finally q1.stop()     // kill between windows
-    content(dst) shouldBe content(src)
-    // the source moves on while no stream is running…
-    VersionedStore.deleteKeys(spark, src,
-      Seq(5L).toDF("id"), Seq("id"))
-    VersionedStore.append(batch(200 until 210, "b"), src)
-    // …and a RESTARTED stream with a fresh checkpoint resumes from
-    // the store-side cursor alone (exactly-once lives in the
-    // protocol, not the streaming checkpoint)
-    val q2 = StoreChangeFeed.stream(spark, src, dst, cur, Seq("id"),
-      s"$d/ckpt2", intervalMs = 100L)
-    try awaitCaughtUp() finally q2.stop()
-    content(dst) shouldBe content(src)
-    // bit-equal to the batch-polled replica of the same source
-    val dst2 = s"$d/dst2"; val cur2 = s"$d/cursor2"
-    StoreChangeFeed.replicateAll(spark, src, dst2, cur2, Seq("id"))
-    VersionedStore.read(spark, dst).orderBy("id").collect().toSeq shouldBe
-      VersionedStore.read(spark, dst2).orderBy("id").collect().toSeq
-  }
 }

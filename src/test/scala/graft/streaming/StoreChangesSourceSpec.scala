@@ -126,30 +126,6 @@ class StoreChangesSourceSpec extends AnyFunSuite with SparkFixture
       (50L until 55L).map(i => (i, "insert"))).sorted
   }
 
-  test("the versions feed ticks one row per commit (the replicate " +
-      "wrapper's scheduling shape) and starts at startingVersion") {
-    val s = spark
-    import s.implicits._
-    val d = freshDir()
-    val src = s"$d/src"
-    VersionedStore.create(spark, src)
-    VersionedStore.append(batch(0 until 5), src)               // v1
-    VersionedStore.append(batch(5 until 9), src)               // v2
-    VersionedStore.append(batch(9 until 12), src)              // v3
-    val q = spark.readStream.format("graft-store-changes")
-      .option("path", src).option("feed", "versions")
-      .option("startingVersion", "1").load()
-      .writeStream.format("memory").queryName("dsv2_ticks")
-      .option("checkpointLocation", s"$d/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime(100L))
-      .start()
-    try drainTo(q, "dsv2_ticks", 2L)
-    finally if (q.isActive) q.stop()
-    spark.table("dsv2_ticks").select("version").collect()
-      .map(_.getLong(0)).sorted.toSeq shouldBe Seq(2L, 3L)
-  }
-
   test("the executor-side reader handles the store's full column " +
       "shapes: float arrays (embeddings), timestamps, doubles, " +
       "booleans — bit-equal to the batch feed") {
