@@ -65,9 +65,10 @@ object StoreCache {
     p
   }
 
-  /** Per-JVM parquet SCHEMA memo for engine-managed store dirs. A
-    * bare `spark.read.parquet(dir)` runs a one-task schema-inference
-    * job (a footer read) every time a query body is constructed; a
+  /** Per-JVM parquet SCHEMA memo for engine-managed store dirs and
+    * the testdata tables ([[Tables.table]]). A bare
+    * `spark.read.parquet(dir)` runs a one-task schema-inference job
+    * (a footer read) every time a query body is constructed; a
     * serve path reading the same materialized store hundreds of
     * times per session pays that job — plus its driver-gap — each
     * time, for an answer that never changes (guide §1.4/§5: don't
@@ -82,8 +83,10 @@ object StoreCache {
     * builder, never the shape. [[rebuild]] and [[getOrBuild]] still
     * drop memo entries under their dir after building (belt and
     * suspenders), so even a builder change mid-JVM cannot serve a
-    * stale schema. The memo never caches data or results — every
-    * read scans the parquet bytes on disk as before.
+    * stale schema. A testdata table is immutable for the life of a
+    * JVM and never lies under `graft-stores/`, so no drop touches it.
+    * The memo never caches data or results — every read scans the
+    * parquet bytes on disk as before.
     */
   private val schemas = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()

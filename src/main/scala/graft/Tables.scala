@@ -11,35 +11,14 @@ import org.apache.spark.sql.functions.{expr, timestamp_micros}
   * `PushedFilters` / `ReadSchema`).
   */
 object Tables {
-  /** Schema memo for the testdata parquet paths (per JVM). A bare
-    * `spark.read.parquet(path)` runs a one-task schema-inference job
-    * (a footer read) EVERY time a query body is constructed — ~25 ms
-    * of job+scheduling per table per execution, paid by every one of
-    * the ~360 declared queries on every bench pass. A resident driver
-    * serving a cataloged table never pays that (the schema comes from
-    * the catalog, not a per-query footer read — guide §5: the driver
-    * should do metadata work once, §6: listing/inference is
-    * driver-side overhead); this memo is the catalog's role for the
-    * bare testdata paths. First read infers (one job), every later
-    * read supplies the SAME schema explicitly (zero jobs, identical
-    * relation). Sound because the driver's testdata files are
-    * immutable for the life of a JVM — nothing in the engine or the
-    * tests rewrites `<dir>/<name>.parquet`.
+  /** `<dir>/<name>.parquet` through the per-JVM schema memo
+    * ([[StoreCache.readParquet]]): the first read infers the schema
+    * (one footer-read job), every later one supplies it (no job).
+    * Sound because the testdata files are immutable for the life of a
+    * JVM and never lie under the store cache's rebuilt dirs.
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = s"$dir/$name.parquet"
-    schemaMemo.get(p) match {
-      case null =>
-        val df = spark.read.parquet(p)
-        schemaMemo.put(p, df.schema)
-        df
-      case s => spark.read.schema(s).parquet(p)
-    }
-  }
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    StoreCache.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

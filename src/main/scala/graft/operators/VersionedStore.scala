@@ -1116,12 +1116,14 @@ object VersionedStore {
       case _ => liveFids(spark, path, v)
     }
 
-  /** (min, max) of key column `c` in zone space ([[zoneValue]]); none
-    * when the column has no zone family.
+  /** (min, max) of key column `c` in zone space
+    * ([[PruneBounds.zoneValue]]); none when the column has no zone
+    * family.
     */
   private def keySpanAggs(keys: DataFrame, c: String): Seq[Column] =
     if (zoneTypeOf(keys, c).isEmpty) Nil
-    else Seq(min(zoneValue(keys, c)), max(zoneValue(keys, c)))
+    else Seq(min(PruneBounds.zoneValue(keys, c)),
+      max(PruneBounds.zoneValue(keys, c)))
 
   /** The one duplicate-key gate of the keyed writes ([[merge]],
     * [[mergeInto]], a keyed model's first run): true when `df`
@@ -1148,44 +1150,6 @@ object VersionedStore {
   /** The zone family of `df`'s column `c` ([[PruneBounds.zoneType]]). */
   private def zoneTypeOf(df: DataFrame, c: String): Option[String] =
     PruneBounds.zoneType(df.schema(c).dataType)
-
-  /** `df`'s column `c` in zone space — a date's day number, a string
-    * as is, any other zoned type as a long: the one encoding zones are
-    * written in and key spans compared in.
-    */
-  private def zoneValue(df: DataFrame, c: String): Column =
-    df.schema(c).dataType match {
-      case org.apache.spark.sql.types.DateType =>
-        unix_date(col(c)).cast("long")
-      case org.apache.spark.sql.types.StringType => col(c)
-      case _ => col(c).cast("long")
-    }
-
-  /** min/max aggregate pair for one zone column — aggregated in the
-    * column's OWN order (never on a stringified form, which would be
-    * lexicographic for numbers), then rendered to the portable
-    * string encoding.
-    */
-  private def zoneAggs(df: DataFrame, c: String): Seq[Column] = {
-    val v = zoneValue(df, c)
-    Seq(min(v).cast("string").as(s"_zlo_$c"),
-      max(v).cast("string").as(s"_zhi_$c"))
-  }
-
-  /** The zones of one written group from its [[zoneAggs]] results
-    * (`agg` looks a result up by name). An empty or all-NULL column
-    * commits no zone for that column (the group stays a candidate
-    * for any range), never a bogus hull — the parquet-footer
-    * convention.
-    */
-  private def zonesOf(zcs: Seq[(String, String)], n: Long,
-      agg: String => Any): Seq[ColZone] =
-    zcs.flatMap { case (c, t) =>
-      val lo = agg(s"_zlo_$c")
-      if (n == 0 || lo == null) None
-      else Some(ColZone(c, t, lo.asInstanceOf[String],
-        agg(s"_zhi_$c").asInstanceOf[String]))
-    }
 
   /** The `statsCol` marker a group of `df` records: the column's name
     * when the group got an "l" zone on it and the column is integral.
@@ -1396,8 +1360,7 @@ object VersionedStore {
     val pZoneCols = (zoneCols.map(phys) ++ pStatsCol)
       .filter(pdf.columns.contains)
     val pBloomCols = bloomCols.map(phys)
-    val zcs = pZoneCols.distinct
-      .flatMap(c => zoneTypeOf(pdf, c).map(c -> _))
+    val zcs = PruneBounds.zoned(pdf, pZoneCols.distinct)
     // count/zone hulls ride the WRITE job itself as observed
     // metrics (CollectMetrics) instead of a second read-back job per
     // group: the metrics see exactly the rows the writer persists
@@ -1411,14 +1374,14 @@ object VersionedStore {
     // spark.speculation must pin it off for store write jobs (it is
     // off by default, and off in the driver's local[*] contract).
     val aggs = Seq(count(lit(1)).as("n")) ++
-      zcs.flatMap { case (c, _) => zoneAggs(pdf, c) }
+      zcs.flatMap { case (c, _) => PruneBounds.zoneAggs(pdf, c) }
     val obs = org.apache.spark.sql.Observation(
       s"vs-write-$fid-${java.util.UUID.randomUUID}")
     pdf.observe(obs, aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(dataDir(path, fid).toString)
     val r = obs.get
     val n = r("n").asInstanceOf[Long]
-    val zones = zonesOf(zcs, n, r)
+    val zones = PruneBounds.zonesOf(zcs, n, r)
     GroupAdd(fid, n, markerOf(pdf, pStatsCol, zones), sj, zones,
       blooms = buildBlooms(spark, path, fid, n, pBloomCols, pdf.schema))
   }
@@ -1488,12 +1451,12 @@ object VersionedStore {
       .distinct.filter(written.columns.contains)
     val bloomCols = propag._2
     val sj = Some(recordedSchema(spark, path, logical.schema).json)
-    val zcs = zoneCols.flatMap(c => zoneTypeOf(written, c).map(c -> _))
+    val zcs = PruneBounds.zoned(written, zoneCols)
     val aggs = Seq(count(lit(1)).as("n")) ++
-      zcs.flatMap { case (c, _) => zoneAggs(written, c) }
+      zcs.flatMap { case (c, _) => PruneBounds.zoneAggs(written, c) }
     val r = written.agg(aggs.head, aggs.tail: _*).head
     val n = r.getLong(0)
-    val zones = zonesOf(zcs, n, r.getAs[Any](_))
+    val zones = PruneBounds.zonesOf(zcs, n, r.getAs[Any](_))
     commitRetrying(spark, path, Seq(GroupAdd(fid, n,
       markerOf(written, statsCol, zones), sj, zones,
       blooms = buildBlooms(spark, path, fid, n, bloomCols,
@@ -2669,9 +2632,8 @@ object VersionedStore {
     val bloomColsP = bloomCols.map(phys)
     val salt = pmod(xxhash64(struct(dataCols.map(col): _*)), lit(8))
     val spread = kept2.repartition(col("_vs_fid"), salt)
-    val zcs = (zoneCols.map(phys) ++ statsColP).distinct
-      .filter(dataCols.contains)
-      .flatMap(c => zoneTypeOf(kept2, c).map(c -> _))
+    val zcs = PruneBounds.zoned(kept2,
+      (zoneCols.map(phys) ++ statsColP).distinct.filter(dataCols.contains))
     try {
       spread.write.partitionBy("_vs_fid").parquet(tmp.toString)
       // per-group counts/zones come from a COLUMN-PRUNED read of the
@@ -2687,7 +2649,7 @@ object VersionedStore {
         .exists(s => s.isDirectory &&
           s.getPath.getName.startsWith("_vs_fid="))
       val aggs = Seq(count(lit(1)).as("n")) ++
-        zcs.flatMap { case (c, _) => zoneAggs(kept2, c) }
+        zcs.flatMap { case (c, _) => PruneBounds.zoneAggs(kept2, c) }
       // read back under the schema just written: no job to infer it
       val writtenSchema = dataSchema.add("_vs_fid", LongType)
       val statRows = (if (!wrote) Array.empty[org.apache.spark.sql.Row]
@@ -2696,7 +2658,7 @@ object VersionedStore {
           .agg(aggs.head, aggs.tail: _*)
           .collect()).map { r =>
           val n = r.getLong(1)
-          val zones = zonesOf(zcs, n, r.getAs[Any](_))
+          val zones = PruneBounds.zonesOf(zcs, n, r.getAs[Any](_))
           r.getLong(0) -> (n, markerOf(kept2, statsColP, zones), zones)
         }.toMap
       val schemaJson = Some(logicalSchema.json)
@@ -3321,15 +3283,21 @@ object VersionedStore {
     * plain add under the current schema with no live column
     * mapping, the window's feed is exactly the added groups' files
     * tagged `insert`, and a streaming source can read them in place
-    * (no derivation job, no staging copy). Any rewrite, delete, DV,
-    * restore, or schema/mapping change in the window → None, and
-    * the caller derives the netted feed via [[changes]].
+    * (no derivation job, no staging copy). The CREATE TABLE anchor
+    * ([[declareSchema]]: the store's first commit, a lone schema
+    * record equal to the schema at `to`) adds no rows and counts as
+    * a no-op. Any rewrite, delete, DV, restore, or other
+    * schema/mapping change in the window → None, and the caller
+    * derives the netted feed via [[changes]].
     */
   private[graft] def appendOnlyWindow(spark: SparkSession,
       path: String, from: Long, to: Long): Option[Seq[String]] = {
-    val recs = logRecords(spark, path)
-      .filter(r => r.v > from && r.v <= to)
+    val all = logRecords(spark, path)
     val cur = schemaAt(spark, path, to).map(_.json)
+    val anchor = all.headOption.filter(r => r.action == "schema" &&
+      r.schemaJson == cur && all.lift(1).forall(_.v != r.v)).map(_.v)
+    val recs = all.filter(r =>
+      r.v > from && r.v <= to && !anchor.contains(r.v))
     if (recs.isEmpty) Some(Nil)
     else if (mappingAt(spark, path, to).isEmpty &&
       recs.forall(r => r.action == "add" && r.schemaJson == cur))
@@ -3848,18 +3816,6 @@ object VersionedStore {
     } else false
   }
 
-  /** Register the store (latest, or a pinned version) as a temp view
-    * so plain `spark.sql` works over the lakehouse table — the SQL
-    * executor surface (SURVEY §2.1 S7) over versioned storage. The
-    * view captures the version resolved AT registration (snapshot
-    * semantics, consistent with every other reader); re-register to
-    * follow new commits.
-    */
-  def registerView(spark: SparkSession, path: String, name: String,
-      version: Option[Long] = None): Unit =
-    version.map(readAt(spark, path, _)).getOrElse(read(spark, path))
-      .createOrReplaceTempView(name)
-
   /** Register `name` as a SQL-addressable store table: the bare
     * name serves the LATEST version (resolved fresh at every query,
     * never the stale snapshot a temp view would pin), and the
@@ -3882,7 +3838,8 @@ object VersionedStore {
       "VersionedStore.registerTable: this session was not built " +
         "with spark.sql.extensions=graft.functions.GraftExtensions " +
         "— SQL over store tables (and VERSION AS OF) cannot " +
-        "resolve. Use registerView for a plain temp view instead")
+        "resolve. Use read(...).createOrReplaceTempView for a plain " +
+        "temp view instead")
     // one- or two-part (`db.table`) names; deeper nesting is not a
     // store concept (no catalog hierarchy behind the registry)
     require(name.count(_ == '.') <= 1,
@@ -3912,16 +3869,6 @@ object VersionedStore {
       .filter(r => live(r.fid) && r.loc.isDefined)
       .map(_.loc.get).distinct
   }
-
-  /** (action, schemaJson) of version `v`'s log records — the
-    * streaming row feed uses it to recognize pure-metadata no-op
-    * commits (a CREATE TABLE schema anchor contributes no rows and
-    * is not a change commit).
-    */
-  private[graft] def versionActions(spark: SparkSession,
-      path: String, v: Long): Seq[(String, Option[String])] =
-    logRecords(spark, path).filter(_.v == v)
-      .map(r => (r.action, r.schemaJson))
 
   /** version → commit wall-clock millis, from the log records. */
   def commitTimestamps(spark: SparkSession,

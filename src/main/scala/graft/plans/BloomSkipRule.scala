@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions.{col, explode, expr, lit}
   * Parquet column bloom filters / lakehouse formats keep, here
   * surfaced as a planner rule so `WHERE doc_id IN (…)` point lookups
   * open only the files whose filters hit. At 100 TB the index is
-  * O(files × m bits) manifest metadata, same contract as zone-map
-  * stats; the data files are never touched at register or plan time
-  * beyond the one build aggregate.
+  * O(files × m bits) of driver memory, same contract as the zone-map
+  * rule's zones; the data files are never touched at register or
+  * plan time beyond the one build aggregate.
   *
   * Determinism contract: bit positions are md5-derived
   * (`conv(substring(md5(value || ':' || i), 1, 13), 16, 10) % m` for
@@ -75,18 +75,15 @@ object BloomSkipRule extends FileSkipRule {
     * per-file Bloom filters over `cols` (values hashed through their
     * string cast, so integral and string columns share one code
     * path). One distinct-projection pass per column, unioned into a
-    * single O(files × m)-row collect — the manifest a table format
-    * keeps. Re-registering the same table plan REPLACES the previous
-    * entry (the freshness hook after a store delta/rewrite, same as
-    * ZoneMapPruneRule).
+    * single O(files × m)-row collect. Re-registering the same table
+    * plan REPLACES the previous entry — the freshness hook after a
+    * store delta/rewrite, same as ZoneMapPruneRule. A
+    * `VersionedStore`'s durable per-group filters are its own Bloom
+    * sidecars; these bits exist because q325's DuckDB oracle
+    * recomputes them exactly.
     */
   def register(table: DataFrame, fileCol: String, cols: Seq[String],
-      m: Int = 4096, k: Int = 3): Entry =
-    put(build(table, fileCol, cols, m, k))
-
-  /** The entry [[register]] records, without recording it. */
-  private def build(table: DataFrame, fileCol: String,
-      cols: Seq[String], m: Int, k: Int): Entry = {
+      m: Int = 4096, k: Int = 3): Entry = {
     val probes = explode(expr(s"sequence(0, ${k - 1})")).as("__i")
     val perCol = cols.map { c =>
       table
@@ -115,89 +112,8 @@ object BloomSkipRule extends FileSkipRule {
             cr.map(_.getInt(2)): _*)
         }
       }
-    Entry(table.queryExecution.analyzed, fileCol, cols, m, k, files,
-      bits, hasNullFile)
-  }
-
-  /** Incremental freshness: fold ONLY the appended rows' filter bits
-    * into a previous registration — one O(delta)-row aggregate
-    * instead of a full-table re-register (the manifest-update a
-    * table format performs on commit). Bits union per (file, col):
-    * an appended value can only SET bits, so the merged filters are
-    * exactly a full rebuild's (BloomSkipRuleSpec pins the
-    * equivalence). `newTable` is the post-append read; its analyzed
-    * plan replaces the stale match key.
-    */
-  def addDelta(prev: Entry, newTable: DataFrame,
-      delta: DataFrame): Entry = {
-    val d = build(delta, prev.fileCol, prev.cols, prev.m, prev.k)
-    val files = (prev.files ++ d.files).distinct.sorted
-    val bits = files.map { f =>
-      val p = prev.bits.getOrElse(f, Map.empty)
-      val q = d.bits.getOrElse(f, Map.empty)
-      f -> (p.keySet ++ q.keySet).map { c =>
-        c -> (p.getOrElse(c, scala.collection.immutable.BitSet.empty) |
-          q.getOrElse(c, scala.collection.immutable.BitSet.empty))
-      }.toMap
-    }.filter(_._2.nonEmpty).toMap
-    put(Entry(newTable.queryExecution.analyzed, prev.fileCol,
-      prev.cols, prev.m, prev.k, files, bits,
-      prev.hasNullFile || d.hasNullFile))
-  }
-
-  /** Persist a registration's filters as a parquet manifest — the
-    * durable half of the table-format contract (same as
-    * ZoneMapPruneRule.saveManifest): a new session re-arms pruning
-    * from the manifest alone, never re-scanning the table. Row
-    * kinds: "bit" carries one set bit position for one (file, col);
-    * "file" marks file presence; one "meta" row carries fileCol,
-    * the column list, m, k, and the null-file flag.
-    */
-  def saveManifest(e: Entry,
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val bitRows = e.bits.toSeq.flatMap { case (f, perCol) =>
-      perCol.toSeq.flatMap { case (c, set) =>
-        set.toSeq.map(b => ("bit", f, c, b.toLong))
-      }
-    }
-    val files = e.files.map(f => ("file", f, "", 0L))
-    val meta = Seq(("meta", if (e.hasNullFile) 1L else 0L,
-      s"${e.fileCol},${e.cols.mkString(",")}",
-      e.m.toLong * 1000000L + e.k.toLong))
-    (bitRows ++ files ++ meta)
-      .toDF("kind", "f", "c", "b")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Re-arm pruning for `table` from a saved manifest: registers an
-    * entry identical to the one [[saveManifest]] captured (pinned in
-    * BloomSkipRuleSpec) without touching the table's data files.
-    */
-  def loadManifest(table: DataFrame, path: String): Entry = {
-    val rows = table.sparkSession.read.parquet(path).collect()
-    val meta = rows.find(_.getString(0) == "meta").getOrElse(
-      throw new IllegalArgumentException(
-        s"BloomSkipRule.loadManifest: no meta row in $path"))
-    val names = meta.getString(2).split(",").toSeq
-    val fileCol = names.head
-    val cols = names.tail
-    val hasNullFile = meta.getLong(1) == 1L
-    val mk = meta.getLong(3)
-    val m = (mk / 1000000L).toInt
-    val k = (mk % 1000000L).toInt
-    val files = rows.filter(_.getString(0) == "file")
-      .map(_.getLong(1)).toSeq.sorted
-    val bits = rows.filter(_.getString(0) == "bit")
-      .groupBy(_.getLong(1))
-      .map { case (f, rs) =>
-        f -> rs.groupBy(_.getString(2)).map { case (c, cr) =>
-          c -> scala.collection.immutable.BitSet(
-            cr.map(_.getLong(3).toInt): _*)
-        }
-      }
-    put(Entry(table.queryExecution.analyzed, fileCol, cols, m, k,
-      files, bits, hasNullFile))
+    put(Entry(table.queryExecution.analyzed, fileCol, cols, m, k, files,
+      bits, hasNullFile))
   }
 
   /** Does file `f`'s filter for `c` claim the value might be

@@ -8,11 +8,12 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
 /** The injection core [[ZoneMapPruneRule]] and [[BloomSkipRule]]
-  * share: a registry of per-file manifests keyed by the analyzed table
-  * plan, and the rewrite that puts `fileCol IN (survivors)` directly
-  * above a registered scan. `fileCol` is the layout's hive-partition
-  * column, so the injected IN becomes a partition filter at planning
-  * time and pruned files are never opened. Each rule supplies only
+  * share: a registry of per-file zones or filters keyed by the
+  * analyzed table plan, and the rewrite that puts
+  * `fileCol IN (survivors)` directly above a registered scan.
+  * `fileCol` is the layout's hive-partition column, so the injected
+  * IN becomes a partition filter at planning time and pruned files
+  * are never opened. Each rule supplies only
   * which columns it prunes, its survivors for one conjunction's
   * [[PruneBounds]] and its file count.
   *
@@ -50,8 +51,8 @@ trait FileSkipRule extends Rule[LogicalPlan] {
       .map(_.toSeq.sorted)
 
   /** Registers `e`, REPLACING any entry for the same table plan — the
-    * freshness hook after a store delta or rewrite: stale manifests
-    * are gone, never stacked.
+    * freshness hook after a store delta or rewrite: stale
+    * registrations are gone, never stacked.
     */
   protected def put(e: E): E = {
     entries.removeIf((p: E) => p.tablePlan.sameResult(e.tablePlan))
@@ -96,7 +97,7 @@ trait FileSkipRule extends Rule[LogicalPlan] {
                 case _ => surv.map(v => Literal(v))
               }
               // rows with a NULL file column belong to no file's
-              // manifest and must survive (IN alone yields NULL)
+              // registration and must survive (IN alone yields NULL)
               val keep: Expression =
                 if (e.hasNullFile) Or(In(fa, lits), IsNull(fa))
                 else In(fa, lits)

@@ -1,16 +1,20 @@
 package graft.plans
 
 import graft.operators.VersionedStore.ColZone
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The one predicate → bounds → surviving-files path every pruner
   * shares: [[ZoneMapPruneRule]] and [[BloomSkipRule]] (per-file
-  * manifests), [[graft.sources.GroupZoneFileIndex]] (store scans) and
-  * the store's key pruning (`VersionedStore.candidateFids` and its
-  * callers). Each keeps its own storage; the decision lives here, so
-  * a pruning fix reaches every caller at once.
+  * registrations), [[graft.sources.GroupZoneFileIndex]] (store scans)
+  * and the store's key pruning (`VersionedStore.candidateFids` and its
+  * callers). The decision lives here, so a pruning fix reaches every
+  * caller at once. So does the zone format: the store's commit
+  * records and the zone-map rule hold the same [[ColZone]]s, built by
+  * [[zoneAggs]] and [[zonesOf]] and tested by [[admits]]. Only the
+  * Bloom rule keeps storage of its own, its md5 bit filters.
   *
   * Zone space: an "l" zone holds Longs (integral columns; dates as
   * days since the epoch), an "s" zone Strings in UTF8 binary order —
@@ -75,6 +79,58 @@ object PruneBounds extends PredicateHelper {
   def overlaps(b: Bound, z: ColZone): Boolean =
     if (z.t == "l") overlaps(b, z.t, z.lo.toLong, z.hi.toLong)
     else overlaps(b, z.t, z.lo, z.hi)
+
+  /** Can a file or group with `zones` hold a row meeting one
+    * conjunction's `bounds`? A zone matches a bounded column by name,
+    * ignoring case; a column without a zone never prunes.
+    */
+  def admits(zones: Seq[ColZone], bounds: Map[String, Bound]): Boolean =
+    bounds.forall { case (c, b) =>
+      zones.filter(_.c.equalsIgnoreCase(c)).forall(overlaps(b, _))
+    }
+
+  /** The columns of `cols` that have a zone family in `df`, each with
+    * its family.
+    */
+  def zoned(df: DataFrame, cols: Seq[String]): Seq[(String, String)] =
+    cols.flatMap(c => zoneType(df.schema(c).dataType).map(c -> _))
+
+  /** `df`'s column `c` in zone space — a date's day number, a string
+    * as is, any other zoned type as a long: the one encoding zones are
+    * written in and key spans compared in.
+    */
+  def zoneValue(df: DataFrame, c: String): Column =
+    df.schema(c).dataType match {
+      case DateType => F.unix_date(F.col(c)).cast("long")
+      case StringType => F.col(c)
+      case _ => F.col(c).cast("long")
+    }
+
+  /** min/max aggregate pair for one zone column, named `_zlo_<c>` and
+    * `_zhi_<c>` — aggregated in the column's OWN order (never on a
+    * stringified form, which would be lexicographic for numbers), then
+    * rendered to the portable string encoding.
+    */
+  def zoneAggs(df: DataFrame, c: String): Seq[Column] = {
+    val v = zoneValue(df, c)
+    Seq(F.min(v).cast("string").as(s"_zlo_$c"),
+      F.max(v).cast("string").as(s"_zhi_$c"))
+  }
+
+  /** The zones of one file or group of `n` rows from its [[zoneAggs]]
+    * results over the [[zoned]] columns `zcs` (`agg` looks a result up
+    * by name). An empty or all-NULL column gets no zone (the file
+    * stays a candidate for any range), never a bogus hull — the
+    * parquet-footer convention.
+    */
+  def zonesOf(zcs: Seq[(String, String)], n: Long,
+      agg: String => Any): Seq[ColZone] =
+    zcs.flatMap { case (c, t) =>
+      val lo = agg(s"_zlo_$c")
+      if (n == 0 || lo == null) None
+      else Some(ColZone(c, t, lo.asInstanceOf[String],
+        agg(s"_zhi_$c").asInstanceOf[String]))
+    }
 
   /** The bound `col = v` of a driver-side probe value: integral →
     * "l", String → "s"; None for any other type.

@@ -70,10 +70,8 @@ object StoreMaintenanceSql {
     * through to the delegate parser.
     */
   private def storePath(name: String): Option[String] =
-    VersionedStore.registeredPath(name).orElse(
-      scala.util.Try(SparkSession.active).toOption.flatMap(s =>
-        graft.sources.GraftStoreCatalog.resolvePath(s,
-          name.split('.').toSeq)))
+    graft.sources.GraftStoreCatalog.storePath(name.split('.').toSeq,
+      SparkSession.active)
 
   /** The store-verb plan for `sqlText`, if it is one over a
     * registered or catalog name; None falls through to the

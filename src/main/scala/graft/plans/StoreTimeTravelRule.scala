@@ -57,8 +57,8 @@ class StoreTimeTravelRule(session: SparkSession)
     */
   private def pathOf(p: LogicalPlan): Option[String] = p match {
     case u: UnresolvedRelation =>
-      regPath(u).orElse(graft.sources.GraftStoreCatalog
-        .resolvePath(session, u.multipartIdentifier))
+      graft.sources.GraftStoreCatalog.storePath(u.multipartIdentifier,
+        session)
     // a catalog target usually arrives ALREADY RESOLVED: builtin
     // resolution runs before injected rules within each analyzer
     // iteration, so the DML statement's child is the v2 relation by

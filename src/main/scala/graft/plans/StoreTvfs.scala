@@ -57,12 +57,8 @@ object StoreTvfs {
   }
 
   private def pathFor(nameOrPath: String): String =
-    VersionedStore.registeredPath(nameOrPath)
-      .orElse(scala.util.Try(
-          org.apache.spark.sql.SparkSession.active).toOption
-        .flatMap(s => graft.sources.GraftStoreCatalog
-          .resolvePath(s, nameOrPath.split('.').toSeq)))
-      .getOrElse(nameOrPath)
+    graft.sources.GraftStoreCatalog.storePath(nameOrPath.split('.').toSeq,
+      org.apache.spark.sql.SparkSession.active).getOrElse(nameOrPath)
 
   val historyDescriptor: (FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => LogicalPlan) = (

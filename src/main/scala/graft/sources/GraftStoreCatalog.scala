@@ -479,6 +479,18 @@ class GraftStoreCatalog extends TableCatalog with SupportsNamespaces {
 }
 
 object GraftStoreCatalog {
+  /** The store behind a SQL name: a name registered through
+    * `VersionedStore.registerTable`, else a catalog table
+    * ([[resolvePath]] in `session`, which is only evaluated for an
+    * unregistered name and may fail: then None). None when it is
+    * neither; each caller keeps its own fallback.
+    */
+  def storePath(parts: Seq[String],
+      session: => SparkSession): Option[String] =
+    VersionedStore.registeredPath(parts.mkString("."))
+      .orElse(scala.util.Try(session).toOption
+        .flatMap(resolvePath(_, parts)))
+
   /** Resolve `catalog[.ns].table` name parts to a store path when
     * the head names a session catalog CONFIGURED as a
     * [[GraftStoreCatalog]] (`spark.sql.catalog.<name>` +

@@ -21,11 +21,13 @@ import org.apache.spark.sql.types.StructType
   * what makes it free at plan time on a 100 TB table (the log is
   * already cached on the driver; no listing storm, no repair).
   *
-  * Soundness: the bounds and the OR rule are the shared ones
-  * ([[PruneBounds]]), so a store scan prunes exactly as the zone-map
-  * rule does — strict integral bounds tighten by one, an OR whose
-  * every disjunct is recognized prunes to the union of its
-  * disjuncts' survivors, long IN lists (`InSet`) prune by their hull.
+  * Soundness: the bounds, the zone test and the OR rule are the
+  * shared ones ([[PruneBounds]]), and the commit-record zones come
+  * from the aggregates the zone-map rule registers with, so a store
+  * scan prunes exactly as that rule does — strict integral bounds
+  * tighten by one, an OR whose every disjunct is recognized prunes
+  * to the union of its disjuncts' survivors, long IN lists (`InSet`)
+  * prune by their hull.
   * Pruning only ever WEAKENS past that: a group without a zone on a
   * filtered column, an unrecognized filter (UDF, IS NULL, an OR with
   * such a disjunct), or a literal of another type family (a TIMESTAMP
@@ -95,20 +97,17 @@ object GroupZoneFileIndex {
   }
 
   /** The groups whose zones can satisfy `filters` — pure and
-    * driver-cheap (O(groups × bounds), no IO). A zone matches a
+    * driver-cheap (O(groups × bounds), no IO). The zone test is the
+    * zone-map rule's, [[PruneBounds.admits]]: a zone matches a
     * bounded column by name, ignoring case; a group without one stays
     * a candidate.
     */
   def survivors(groups: Seq[GroupFiles],
       filters: Seq[Expression]): Seq[GroupFiles] = {
-    def keeps(g: GroupFiles, bounds: Map[String, PruneBounds.Bound]) =
-      bounds.forall { case (c, b) =>
-        g.zones.filter(_.c.equalsIgnoreCase(c))
-          .forall(PruneBounds.overlaps(b, _))
-      }
     val keep = filters.reduceOption(And).flatMap(
       PruneBounds.survivors(_, _ => true)(bounds =>
-        Some(groups.indices.filter(i => keeps(groups(i), bounds)).toSet)))
+        Some(groups.indices.filter(i =>
+          PruneBounds.admits(groups(i).zones, bounds)).toSet)))
     keep.fold(groups)(k => groups.indices.filter(k).map(groups))
   }
 }

@@ -64,9 +64,8 @@ final class StoreChangesSource extends TableProvider
 
   private def pathOf(options: CaseInsensitiveStringMap): String = {
     val name = Option(options.get("table"))
-      .map(t => VersionedStore.registeredPath(t)
-        .orElse(graft.sources.GraftStoreCatalog.resolvePath(
-          SparkSession.active, t.split('.').toSeq))
+      .map(t => graft.sources.GraftStoreCatalog.storePath(
+          t.split('.').toSeq, SparkSession.active)
         .getOrElse(sys.error(
           s"graft-store-changes: `$t` is neither a registered " +
             "table nor a catalog table")))
@@ -322,16 +321,9 @@ private[graft] final class StoreTableRowStream(path: String,
     // only the rewrite
     (from + 1 to to).flatMap { v =>
       VersionedStore.appendOnlyWindow(spark, path, v - 1, v) match {
+        // the CREATE TABLE anchor plans as an empty window
         case Some(groupDirs) =>
           ChangeFilePartition.of(spark, groupDirs, insertTag = false)
-        // a pure schema ANCHOR of the stream's own schema (the
-        // CREATE TABLE commit) contributes no rows and changes
-        // nothing — a no-op version, not a change commit
-        case None if {
-          val recs = VersionedStore.versionActions(spark, path, v)
-          recs.forall(_._1 == "schema") &&
-            recs.flatMap(_._2).forall(_ == schema.json)
-        } => Seq.empty
         case None if skipChangeCommits => Seq.empty
         case None => sys.error(
           s"readStream.table over store at $path: commit v$v is a " +

@@ -171,63 +171,6 @@ class BloomSkipRuleSpec extends AnyFunSuite with SparkFixture
     }
   }
 
-  test("manifest round-trip: save, clear, load re-arms identical " +
-      "pruning without a table scan") {
-    withRule {
-      val t = table
-      val e = BloomSkipRule.register(t, "zfile", Seq("id", "tag"),
-        m = 2048, k = 2)
-      val mp = java.nio.file.Files
-        .createTempDirectory("graft-bloom-man").toString + "/m"
-      BloomSkipRule.saveManifest(e, spark, mp)
-      BloomSkipRule.clear()
-      val e2 = BloomSkipRule.loadManifest(table, mp)
-      e2.fileCol shouldBe e.fileCol
-      e2.cols shouldBe e.cols
-      e2.m shouldBe e.m
-      e2.k shouldBe e.k
-      e2.files shouldBe e.files
-      e2.bits shouldBe e.bits
-      e2.hasNullFile shouldBe e.hasNullFile
-      // and the loaded entry actually prunes
-      val q = t.filter(col("id") === 417L)
-      q.collect().map(_.getLong(0)).toSeq shouldBe Seq(417L)
-      scannedParts(q).get should be <= 2
-    }
-  }
-
-  test("addDelta folds appended filter bits in O(delta) and equals " +
-      "a full re-register exactly") {
-    withRule {
-      val s = spark
-      import s.implicits._
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-bloom-adelta").toString + "/t"
-      (0 until 100).map(i => (i.toLong, (i % 4).toLong))
-        .toDF("id", "zfile").write.partitionBy("zfile").parquet(d)
-      val prev = BloomSkipRule.register(spark.read.parquet(d),
-        "zfile", Seq("id"))
-      // delta: new ids into existing file 0 AND a brand-new file 9
-      val deltaRows = Seq((800L, 0L), (801L, 0L), (900L, 9L))
-      deltaRows.toDF("id", "zfile")
-        .write.mode("append").partitionBy("zfile").parquet(d)
-      val t2 = spark.read.parquet(d)
-      val incr = BloomSkipRule.addDelta(prev, t2,
-        deltaRows.toDF("id", "zfile"))
-      // lookups of appended ids prune straight to their files
-      val q = t2.filter(col("id") === 900L)
-      q.count() shouldBe 1L
-      scannedParts(q).get should be <= 2
-      t2.filter(col("id") === 800L).count() shouldBe 1L
-      // and the merged filters are EXACTLY a full rebuild's
-      BloomSkipRule.clear()
-      val full = BloomSkipRule.register(t2, "zfile", Seq("id"))
-      incr.files shouldBe full.files
-      incr.bits shouldBe full.bits
-      incr.hasNullFile shouldBe full.hasNullFile
-    }
-  }
-
   test("randomized no-false-negative sweep: pruned lookups always " +
       "equal rule-free ground truth") {
     withRule {

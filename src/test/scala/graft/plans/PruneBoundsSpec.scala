@@ -2,7 +2,6 @@ package graft.plans
 
 import graft.SparkFixture
 import graft.operators.VersionedStore
-import graft.operators.VersionedStore.ColZone
 import graft.sources.GroupZoneFileIndex
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{InSet,
@@ -83,12 +82,7 @@ class PruneBoundsSpec extends AnyFunSuite with SparkFixture
       Seq("id", "n", "name"))
     ZoneMapPruneRule.clear() // the conditions below stay unrewritten
     val groups = entry.stats.sortBy(_._1).map { case (f, zs) =>
-      GroupZoneFileIndex.GroupFiles(f.toString, Nil,
-        zs.map { case (c, (lo, hi)) =>
-          ColZone(c, "l", lo.toString, hi.toString)
-        }.toSeq ++ entry.strStats.getOrElse(f, Map.empty).map {
-          case (c, (lo, hi)) => ColZone(c, "s", lo, hi)
-        })
+      GroupZoneFileIndex.GroupFiles(f.toString, Nil, zs)
     }
     val v = VersionedStore.latestVersion(spark, store)
     // the store's key pruning takes one key range; fid g + 1 is group g

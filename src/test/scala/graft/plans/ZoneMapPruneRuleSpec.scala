@@ -179,19 +179,20 @@ class ZoneMapPruneRuleSpec extends AnyFunSuite with SparkFixture
       // wrap would turn this into k >= Long.MinValue (every file
       // survives but also every OTHER conjunct's pruning is polluted
       // by the broken lo) — the guarded form simply ignores it.
-      // extractBounds needs RESOLVED attrs: pull the analyzed
+      // the bounds need RESOLVED attrs: pull the analyzed
       // Filter condition (long literals, so no cast wraps them)
       def condOf(df: org.apache.spark.sql.DataFrame) =
         df.queryExecution.analyzed.collectFirst {
           case org.apache.spark.sql.catalyst.plans.logical
               .Filter(c, _) => c
         }.get
-      val bounds = ZoneMapPruneRule.extractBounds(
-        condOf(t.filter(col("k") > Long.MaxValue &&
-          col("k") < 200L)), Seq("k"))
-      bounds.get("k") shouldBe Some((None, Some(199L)))
-      val bounds2 = ZoneMapPruneRule.extractBounds(
-        condOf(t.filter(col("k") < Long.MinValue)), Seq("k"))
+      def boundsOf(df: org.apache.spark.sql.DataFrame) =
+        PruneBounds.conjunction(condOf(df), _.name == "k")
+      val bounds = boundsOf(t.filter(col("k") > Long.MaxValue &&
+        col("k") < 200L))
+      bounds.get("k") shouldBe Some(PruneBounds.Bound("l", None,
+        Some(199L)))
+      val bounds2 = boundsOf(t.filter(col("k") < Long.MinValue))
       bounds2 shouldBe empty
       // end-to-end: the unsatisfiable conjunct still yields 0 rows
       // (Spark evaluates it), with pruning from the sane conjunct
@@ -333,68 +334,6 @@ class ZoneMapPruneRuleSpec extends AnyFunSuite with SparkFixture
       val qo = t.filter(col("lang") === "de" || col("lang") === "it")
       qo.count() shouldBe 200L
       sc(qo) shouldBe Some(2)
-    }
-  }
-
-  test("manifest round-trip: save, clear, load re-arms identical " +
-      "pruning without a table scan") {
-    withRule {
-      val t = spark.read.parquet(strDir)
-      val e = ZoneMapPruneRule.register(t, "zfile", Seq("lang", "v"))
-      val mp = java.nio.file.Files
-        .createTempDirectory("graft-zmap-man").toString + "/m"
-      ZoneMapPruneRule.saveManifest(e, spark, mp)
-      ZoneMapPruneRule.clear()
-      val e2 = ZoneMapPruneRule.loadManifest(
-        spark.read.parquet(strDir), mp)
-      e2.fileCol shouldBe e.fileCol
-      e2.cols shouldBe e.cols
-      e2.stats.toMap shouldBe e.stats.toMap
-      e2.strStats shouldBe e.strStats
-      e2.hasNullFile shouldBe e.hasNullFile
-      // and the loaded entry actually prunes
-      val q = t.filter(col("lang") === "en" && col("v") >= 100)
-      q.count() shouldBe 100L
-      scannedParts(q) shouldBe Some(1)
-    }
-  }
-
-  test("addDelta folds appended zones in O(delta) and equals a " +
-      "full re-register exactly") {
-    withRule {
-      val s = spark
-      import s.implicits._
-      val d = java.nio.file.Files
-        .createTempDirectory("graft-zmap-adelta").toString + "/t"
-      (0 until 200).map(i =>
-          (i.toLong, s"w${i / 100}", (i / 100).toLong))
-        .toDF("k", "w", "zfile").write.partitionBy("zfile").parquet(d)
-      val prev = ZoneMapPruneRule.register(spark.read.parquet(d),
-        "zfile", Seq("k", "w"))
-      // the delta WIDENS file 1 (k up to 1099, new max string) and
-      // lands a brand-new file 2
-      val deltaRows = (0 until 100).map(i =>
-        (1000L + i, "z9", 1L)) ++ (0 until 50).map(i =>
-        (5000L + i, "m5", 2L))
-      deltaRows.toDF("k", "w", "zfile")
-        .write.mode("append").partitionBy("zfile").parquet(d)
-      val t2 = spark.read.parquet(d)
-      val incr = ZoneMapPruneRule.addDelta(prev, t2,
-        deltaRows.toDF("k", "w", "zfile"))
-      // pruning through the incremental entry: appended ranges are
-      // found and scanned tightly
-      val q = t2.filter(col("k") >= 5000)
-      q.count() shouldBe 50L
-      scannedParts(q) shouldBe Some(1)
-      val q2 = t2.filter(col("w") === "z9")
-      q2.count() shouldBe 100L
-      scannedParts(q2) shouldBe Some(1)
-      // and the merged stats are EXACTLY a full rebuild's
-      ZoneMapPruneRule.clear()
-      val full = ZoneMapPruneRule.register(t2, "zfile", Seq("k", "w"))
-      incr.stats.toMap shouldBe full.stats.toMap
-      incr.strStats shouldBe full.strStats
-      incr.hasNullFile shouldBe full.hasNullFile
     }
   }
 

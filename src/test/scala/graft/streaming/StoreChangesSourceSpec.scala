@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkFixture
 import graft.operators.VersionedStore
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -265,5 +266,19 @@ class StoreChangesSourceSpec extends AnyFunSuite with SparkFixture
       batch(25 until 30).withColumn("extra", lit(1L)), src,
       evolve = true)                                           // v5
     VersionedStore.appendOnlyWindow(spark, src, 3L, 5L) shouldBe None
+    // a CREATE TABLE anchor (the store's first commit, a lone schema
+    // record) adds no rows: the first window of a declared table
+    // plans the append in place; a later ADD COLUMNS still derives
+    val decl = s"$d/decl"
+    VersionedStore.create(spark, decl)
+    VersionedStore.declareSchema(spark, decl, batch(0 until 1).schema) // v1
+    VersionedStore.append(batch(0 until 10), decl)             // v2
+    val appended = VersionedStore.appendOnlyWindow(spark, decl, 1L, 2L)
+    appended.map(_.length) shouldBe Some(1)
+    VersionedStore.appendOnlyWindow(spark, decl, 0L, 2L) shouldBe appended
+    VersionedStore.addColumns(spark, decl,
+      Seq(StructField("extra", LongType)))                      // v3
+    VersionedStore.appendOnlyWindow(spark, decl, 2L, 3L) shouldBe None
+    VersionedStore.appendOnlyWindow(spark, decl, 0L, 3L) shouldBe None
   }
 }
