@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.graft.StoreSqlShims
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
@@ -11,7 +11,7 @@ import org.apache.spark.util.sketch.BloomFilter
 /** Codegen'd Bloom-filter membership test: `bloom_might_contain(bytes,
   * key)` — false means DEFINITELY absent, true means possibly present
   * (rate `fpp` of false positives). The filter travels as serialized
-  * bytes baked into the plan (a literal), is deserialized once per
+  * bytes held by the expression itself, is deserialized once per
   * task, and each probe is a handful of hash ops — no join, no
   * shuffle, no broadcast exchange.
   *
@@ -92,36 +92,15 @@ case class BloomMightContainExpr(filterBytes: Array[Byte],
 
 object BloomMightContainExpr {
 
-  /** Register `bloom_might_contain(filter_bytes, key)` in the
-    * session's function registry (first arg must fold to a binary
-    * literal — the serialized filter).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => {
-        require(exprs.length == 2,
-          s"bloom_might_contain expects 2 arguments, got ${exprs.length}")
-        val bytes = exprs.head match {
-          case Literal(b: Array[Byte], BinaryType) => b
-          case e if e.foldable && e.dataType == BinaryType =>
-            e.eval().asInstanceOf[Array[Byte]]
-          case other => throw new IllegalArgumentException(
-            "bloom_might_contain: first argument must be a binary " +
-              s"literal (the serialized filter), got $other")
-        }
-        BloomMightContainExpr(bytes, exprs(1))
-      },
-      "scala_udf")
-
-  /** Serialize a filter for embedding as a plan literal. */
+  /** Serialize a filter for embedding in the plan. */
   def serialize(filter: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     filter.writeTo(bos)
     bos.toByteArray
   }
 
-  /** Column API (requires [[register]] on the session first). */
+  /** Column API: builds the expression directly, in any session. */
   def mightContain(filter: BloomFilter, key: Column): Column =
-    call_function("bloom_might_contain", lit(serialize(filter)), key)
+    StoreSqlShims.column(BloomMightContainExpr(serialize(filter),
+      StoreSqlShims.expression(key)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.StoreSqlShims
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity over two `array<float>` columns —
@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Decimal allocation, no lambda dispatch. ~1 multiply-add per element
   * per accumulator, SIMD-friendly.
   *
-  * Register with [[CosineSimilarityExpr.register]]; use from SQL as
-  * `cosine_fast(a, b)` or via [[CosineSimilarityExpr.cosineFast]].
+  * Use via [[CosineSimilarityExpr.cosineFast]], or from SQL as
+  * `cosine_fast(a, b)` in a session built with [[GraftExtensions]].
   */
 case class CosineSimilarityExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -82,18 +82,8 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
 
 object CosineSimilarityExpr {
 
-  /** Register `cosine_fast` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_fast",
-      exprs => {
-        require(exprs.length == 2,
-          s"cosine_fast expects 2 arguments, got ${exprs.length}")
-        CosineSimilarityExpr(exprs(0), exprs(1))
-      },
-      "scala_udf")
-
-  /** Column API (requires [[register]] on the session first). */
+  /** Column API: builds the expression directly, in any session. */
   def cosineFast(a: Column, b: Column): Column =
-    call_function("cosine_fast", a, b)
+    StoreSqlShims.column(CosineSimilarityExpr(
+      StoreSqlShims.expression(a), StoreSqlShims.expression(b)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.StoreSqlShims
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Fused plain-double dot product over two `array<float|double>`
@@ -101,18 +101,8 @@ case class DotDoubleExpr(left: Expression, right: Expression)
 
 object DotDoubleExpr {
 
-  /** Register `dot_double` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_double",
-      exprs => {
-        require(exprs.length == 2,
-          s"dot_double expects 2 arguments, got ${exprs.length}")
-        DotDoubleExpr(exprs(0), exprs(1))
-      },
-      "scala_udf")
-
-  /** Column API (requires [[register]] on the session first). */
+  /** Column API: builds the expression directly, in any session. */
   def dotDouble(a: Column, b: Column): Column =
-    call_function("dot_double", a, b)
+    StoreSqlShims.column(DotDoubleExpr(
+      StoreSqlShims.expression(a), StoreSqlShims.expression(b)))
 }

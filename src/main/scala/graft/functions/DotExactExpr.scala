@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.StoreSqlShims
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Fused exact-decimal dot product over two `array<float>` columns —
@@ -111,18 +111,8 @@ case class DotExactExpr(left: Expression, right: Expression)
 
 object DotExactExpr {
 
-  /** Register `dot_exact` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_exact",
-      exprs => {
-        require(exprs.length == 2,
-          s"dot_exact expects 2 arguments, got ${exprs.length}")
-        DotExactExpr(exprs(0), exprs(1))
-      },
-      "scala_udf")
-
-  /** Column API (requires [[register]] on the session first). */
+  /** Column API: builds the expression directly, in any session. */
   def dotExactFast(a: Column, b: Column): Column =
-    call_function("dot_exact", a, b)
+    StoreSqlShims.column(DotExactExpr(
+      StoreSqlShims.expression(a), StoreSqlShims.expression(b)))
 }

@@ -2,8 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression,
-  ExpressionInfo, Literal, Lower, Md5, RegExpReplace, StringTrim}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  ExpressionInfo, Literal, Md5, RegExpReplace}
 import org.apache.spark.sql.graft.StoreSqlShims
 import org.apache.spark.sql.types.BinaryType
 
@@ -15,12 +15,14 @@ import org.apache.spark.sql.types.BinaryType
   *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   * }}}
   *
-  * This is the production registration path (every session on the
-  * cluster gets the functions, including pure-SQL clients); the
-  * per-session `CosineSimilarityExpr.register(spark)` helper remains
-  * for ad-hoc use. Catalyst sees a first-class Expression either way —
-  * codegen, null-propagation and type checks all participate in
-  * optimization, unlike an opaque UDF.
+  * This is the one place that gives the engine's functions, rules and
+  * strategy a name in a session (every session on the cluster gets
+  * them, including pure-SQL clients); [[GraftExtensions.registerAll]]
+  * installs the same function descriptors on a live session. The
+  * Column APIs (`CosineSimilarityExpr.cosineFast` and the like) build
+  * their expressions directly and need neither. Catalyst sees a
+  * first-class Expression either way — codegen, null-propagation and
+  * type checks all participate in optimization, unlike an opaque UDF.
   *
   * Session defaults: the extension also sets two Spark confs, each
   * only where the user has not set it, so that each generated class
@@ -48,12 +50,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "1000")
     StoreSqlShims.contextDefault("spark.sql.codegen.useIdInClassName",
       "false")
-    ext.injectFunction(GraftExtensions.cosineFastDescriptor)
-    ext.injectFunction(GraftExtensions.dotExactDescriptor)
-    ext.injectFunction(GraftExtensions.dotDoubleDescriptor)
-    ext.injectFunction(GraftExtensions.bloomMightContainDescriptor)
-    ext.injectFunction(GraftExtensions.fingerprintDescriptor)
-    ext.injectFunction(GraftExtensions.redactPiiDescriptor)
+    GraftExtensions.all.foreach(ext.injectFunction)
     ext.injectResolutionRule(new graft.plans.StoreTimeTravelRule(_))
     ext.injectResolutionRule(new graft.plans.GraftCatalogRule(_))
     graft.plans.StoreTvfs.all.foreach(ext.injectTableFunction)
@@ -70,103 +67,78 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** (name, info, builder) descriptor for `cosine_fast`. */
-  val cosineFastDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_fast"),
-    new ExpressionInfo(classOf[CosineSimilarityExpr].getName, "cosine_fast"),
+  /** (name, info, builder): what `injectFunction` takes. */
+  type Descriptor = (FunctionIdentifier, ExpressionInfo,
+    Seq[Expression] => Expression)
+
+  /** A descriptor whose builder checks the argument count first. */
+  private def descriptor(name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): Descriptor = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
     (exprs: Seq[Expression]) => {
-      require(exprs.length == 2,
-        s"cosine_fast expects 2 arguments, got ${exprs.length}")
-      CosineSimilarityExpr(exprs(0), exprs(1))
+      require(exprs.length == arity,
+        s"$name expects $arity argument${if (arity == 1) "" else "s"}" +
+          s", got ${exprs.length}")
+      build(exprs)
     })
+
+  /** Codegen'd cosine similarity (see CosineSimilarityExpr). */
+  val cosineFastDescriptor: Descriptor =
+    descriptor("cosine_fast", classOf[CosineSimilarityExpr], 2)(
+      e => CosineSimilarityExpr(e(0), e(1)))
 
   /** Fused exact-decimal dot product (see DotExactExpr). */
-  val dotExactDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_exact"),
-    new ExpressionInfo(classOf[DotExactExpr].getName, "dot_exact"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2,
-        s"dot_exact expects 2 arguments, got ${exprs.length}")
-      DotExactExpr(exprs(0), exprs(1))
-    })
+  val dotExactDescriptor: Descriptor =
+    descriptor("dot_exact", classOf[DotExactExpr], 2)(
+      e => DotExactExpr(e(0), e(1)))
 
   /** Fused plain-double sequential dot product (see DotDoubleExpr). */
-  val dotDoubleDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("dot_double"),
-    new ExpressionInfo(classOf[DotDoubleExpr].getName, "dot_double"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2,
-        s"dot_double expects 2 arguments, got ${exprs.length}")
-      DotDoubleExpr(exprs(0), exprs(1))
-    })
+  val dotDoubleDescriptor: Descriptor =
+    descriptor("dot_double", classOf[DotDoubleExpr], 2)(
+      e => DotDoubleExpr(e(0), e(1)))
 
   /** Bloom membership probe (see BloomMightContainExpr); the first
     * argument must fold to the serialized filter bytes.
     */
-  val bloomMightContainDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_might_contain"),
-    new ExpressionInfo(classOf[BloomMightContainExpr].getName,
-      "bloom_might_contain"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 2,
-        s"bloom_might_contain expects 2 arguments, got ${exprs.length}")
-      val bytes = exprs.head match {
-        case Literal(b: Array[Byte], BinaryType) => b
-        case e if e.foldable && e.dataType == BinaryType =>
-          e.eval().asInstanceOf[Array[Byte]]
-        case other => throw new IllegalArgumentException(
-          "bloom_might_contain: first argument must be a binary " +
-            s"literal (the serialized filter), got $other")
-      }
-      BloomMightContainExpr(bytes, exprs(1))
-    })
+  val bloomMightContainDescriptor: Descriptor =
+    descriptor("bloom_might_contain", classOf[BloomMightContainExpr], 2) {
+      e =>
+        val bytes = e.head match {
+          case Literal(b: Array[Byte], BinaryType) => b
+          case f if f.foldable && f.dataType == BinaryType =>
+            f.eval().asInstanceOf[Array[Byte]]
+          case other => throw new IllegalArgumentException(
+            "bloom_might_contain: first argument must be a binary " +
+              s"literal (the serialized filter), got $other")
+        }
+        BloomMightContainExpr(bytes, e(1))
+    }
 
   /** SQL spelling of TextFunctions.fingerprint: pure-SQL clients get
-    * the same normalized-text dedup key — the expression tree composes
-    * built-in codegen'd nodes, so no UDF boundary.
+    * the same normalized-text dedup key, built by the Column function
+    * itself — built-in codegen'd nodes, so no UDF boundary.
     */
-  val fingerprintDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("fingerprint"),
-    new ExpressionInfo(classOf[Md5].getName, "fingerprint"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1,
-        s"fingerprint expects 1 argument, got ${exprs.length}")
-      Md5(Cast(new StringTrim(
-        RegExpReplace(Lower(exprs(0)), Literal("\\s+"), Literal(" "))),
-        BinaryType))
-    })
+  val fingerprintDescriptor: Descriptor =
+    descriptor("fingerprint", classOf[Md5], 1)(e => StoreSqlShims
+      .expression(TextFunctions.fingerprint(StoreSqlShims.column(e(0)))))
+
+  /** SQL spelling of TextFunctions.redactPii. */
+  val redactPiiDescriptor: Descriptor =
+    descriptor("redact_pii", classOf[RegExpReplace], 1)(e => StoreSqlShims
+      .expression(TextFunctions.redactPii(StoreSqlShims.column(e(0)))))
+
+  private val all: Seq[Descriptor] = Seq(cosineFastDescriptor,
+    dotExactDescriptor, dotDoubleDescriptor, bloomMightContainDescriptor,
+    fingerprintDescriptor, redactPiiDescriptor)
 
   /** Ad-hoc registration of every extension function on an existing
     * session (the cluster path sets spark.sql.extensions instead —
     * builder-time config can't be added to a live session).
     */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    Seq(cosineFastDescriptor, dotExactDescriptor, dotDoubleDescriptor,
-      bloomMightContainDescriptor, fingerprintDescriptor,
-      redactPiiDescriptor)
-      .foreach { case (ident, _, builder) =>
-        spark.sessionState.functionRegistry
-          .createOrReplaceTempFunction(ident.funcName, builder, "scala_udf")
-      }
-
-  /** SQL spelling of TextFunctions.redactPii. */
-  val redactPiiDescriptor: (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier("redact_pii"),
-    new ExpressionInfo(classOf[RegExpReplace].getName, "redact_pii"),
-    (exprs: Seq[Expression]) => {
-      require(exprs.length == 1,
-        s"redact_pii expects 1 argument, got ${exprs.length}")
-      RegExpReplace(
-        RegExpReplace(exprs(0),
-          Literal("[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"),
-          Literal("[EMAIL]")),
-        Literal("\\+?[0-9][0-9()\\-\\s]{6,}[0-9]"),
-        Literal("[PHONE]"))
-    })
+    all.foreach { case (ident, _, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(ident.funcName, builder, "scala_udf")
+    }
 }

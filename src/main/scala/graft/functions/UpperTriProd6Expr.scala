@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.StoreSqlShims
 import org.apache.spark.sql.types._
 
 /** Upper-triangle scaled products of a vector with itself:
@@ -103,18 +103,7 @@ case class UpperTriProd6Expr(child: Expression)
 
 object UpperTriProd6Expr {
 
-  /** Register `upper_tri_prod6` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "upper_tri_prod6",
-      exprs => {
-        require(exprs.length == 1,
-          s"upper_tri_prod6 expects 1 argument, got ${exprs.length}")
-        UpperTriProd6Expr(exprs(0))
-      },
-      "scala_udf")
-
-  /** Column API (requires [[register]] on the session first). */
+  /** Column API: builds the expression directly, in any session. */
   def upperTriProd6(v: Column): Column =
-    call_function("upper_tri_prod6", v)
+    StoreSqlShims.column(UpperTriProd6Expr(StoreSqlShims.expression(v)))
 }

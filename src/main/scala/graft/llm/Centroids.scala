@@ -89,7 +89,6 @@ object Centroids {
   def kmeans(spark: SparkSession, emb: DataFrame, initial: DataFrame,
       iterations: Int, dim: Int = 64): DataFrame = {
     import spark.implicits._
-    CosineSimilarityExpr.register(spark)
     var cents = initial
     var i = 0
     while (i < iterations) {
@@ -128,7 +127,6 @@ object Centroids {
     */
   def assign(spark: SparkSession, emb: DataFrame,
       centroids: DataFrame): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     emb.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("label").as("true_label"),
         col("cand_label"),

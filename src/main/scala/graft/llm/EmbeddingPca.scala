@@ -55,7 +55,6 @@ object EmbeddingPca {
     */
   def covariance(embeddings: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    graft.functions.UpperTriProd6Expr.register(embeddings.sparkSession)
     val prods = embeddings
       .select(explode(
         graft.functions.UpperTriProd6Expr.upperTriProd6(col(vecCol)))
@@ -111,7 +110,6 @@ object EmbeddingPca {
     */
   def project(spark: SparkSession, embeddings: DataFrame, vecCol: String,
       component: Array[Double]): DataFrame = {
-    graft.functions.DotDoubleExpr.register(spark)
     val litVec: Column = array(component.map(lit(_)): _*)
     embeddings.withColumn("pc1_score",
       graft.functions.DotDoubleExpr.dotDouble(

@@ -52,7 +52,6 @@ object EmbeddingSearch {
     // of the projection is consumed, and the fixed left-to-right fold
     // is deterministic, so the exact-decimal fold (signBit) buys
     // nothing here at ~50× the per-element cost.
-    graft.functions.DotDoubleExpr.register(emb.sparkSession)
     val planes = emb
       .filter(col("vec_id").between(1, numBands * planesPerBand))
       .select("vec_id", "embedding")
@@ -81,9 +80,7 @@ object EmbeddingSearch {
       .drop("bsz")
   }
 
-  private def withQuery(spark: SparkSession, emb: DataFrame,
-      queryId: Long): DataFrame = {
-    CosineSimilarityExpr.register(spark)
+  private def withQuery(emb: DataFrame, queryId: Long): DataFrame = {
     val qv = emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"))
     emb.crossJoin(broadcast(qv))
@@ -91,7 +88,7 @@ object EmbeddingSearch {
 
   def bruteForceTopK(spark: SparkSession, emb: DataFrame, queryId: Long,
       k: Int): DataFrame =
-    withQuery(spark, emb, queryId)
+    withQuery(emb, queryId)
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"),
         CosineSimilarityExpr.cosineFast(col("embedding"), col("q_emb"))
@@ -105,7 +102,6 @@ object EmbeddingSearch {
   def lshTopK(spark: SparkSession, emb: DataFrame, queryId: Long, k: Int,
       numBands: Int = 4, planesPerBand: Int = 6,
       bucketCap: Int = Int.MaxValue): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val bands = srpBands(emb, numBands, planesPerBand, bucketCap)
     val qb = bands.filter(col("vec_id") === queryId)
       .select(col("band").as("q_band"), col("bv").as("q_bv"))
@@ -139,7 +135,6 @@ object EmbeddingSearch {
   def lshTopKMultiProbe(spark: SparkSession, emb: DataFrame,
       queryId: Long, k: Int, numBands: Int = 4, planesPerBand: Int = 6,
       bucketCap: Int = Int.MaxValue): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val bands = srpBands(emb, numBands, planesPerBand, bucketCap)
     val qb = bands.filter(col("vec_id") === queryId)
       .select(col("band").as("q_band"), col("bv").as("q_bv"))
@@ -179,7 +174,6 @@ object EmbeddingSearch {
     */
   def ivfTopK(spark: SparkSession, emb: DataFrame, centroids: DataFrame,
       queryId: Long, k: Int, nProbe: Int = 2): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val assigned =
       if (emb.columns.contains("cell")) emb
       else emb.crossJoin(broadcast(centroids))
@@ -231,7 +225,6 @@ object EmbeddingSearch {
   def filteredIvfTopK(spark: SparkSession, emb: DataFrame,
       centroids: DataFrame, queryId: Long, k: Int,
       predicate: Column, nProbe: Int = 2): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val extra = emb.columns
       .filterNot(Set("vec_id", "embedding", "cell")).toSeq
     val assigned =
@@ -294,7 +287,6 @@ object EmbeddingSearch {
   def adaptiveFilteredIvfTopK(spark: SparkSession, emb: DataFrame,
       centroids: DataFrame, queryId: Long, k: Int, predicate: Column,
       targetCandidates: Int = 0): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val target = if (targetCandidates > 0) targetCandidates else 3 * k
     val extra = emb.columns
       .filterNot(Set("vec_id", "embedding", "cell")).toSeq
@@ -374,7 +366,6 @@ object EmbeddingSearch {
   def ivfTopKBatch(spark: SparkSession, emb: DataFrame,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nProbe: Int = 2, broadcastProbes: Boolean = true): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val assigned =
       if (emb.columns.contains("cell")) emb
       else emb.crossJoin(broadcast(centroids))
@@ -468,7 +459,6 @@ object EmbeddingSearch {
   def nearDuplicatePairs(spark: SparkSession, emb: DataFrame,
       threshold: Double, numBands: Int = 4, planesPerBand: Int = 10,
       bucketCap: Int = 200): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val bands = srpBands(emb, numBands, planesPerBand, bucketCap)
     val pairs = bands.as("a")
       .join(bands.as("b"),
@@ -543,7 +533,6 @@ object EmbeddingSearch {
   def binaryRerankTopK(spark: SparkSession, emb: DataFrame,
       queryId: Long, k: Int, shortlist: Int = 64,
       dims: Int = 64): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val cands = hammingTopK(spark, emb, queryId, shortlist, dims)
       .select("vec_id")
     val qv = emb.filter(col("vec_id") === queryId)

@@ -90,7 +90,6 @@ object ProductQuantizer {
     */
   private[graft] def refineSubs(emb: DataFrame, numSub: Int,
       sub: Int): DataFrame = {
-    graft.functions.DotDoubleExpr.register(emb.sparkSession)
     val dot = graft.functions.DotDoubleExpr.dotDouble _
     emb.select(col("vec_id"), posexplode(array(
         (0 until numSub).map(m =>
@@ -135,7 +134,6 @@ object ProductQuantizer {
   private[graft] def refineMeans(subs: DataFrame,
       cb: Array[Array[Array[Double]]]): DataFrame = {
     val spark = subs.sparkSession
-    graft.functions.DotDoubleExpr.register(spark)
     val dot = graft.functions.DotDoubleExpr.dotDouble _
     val numK = cb(0).length
     val sub = cb(0)(0).length
@@ -249,7 +247,6 @@ object ProductQuantizer {
     */
   def encode(emb: DataFrame,
       codebook: Array[Array[Array[Double]]]): DataFrame = {
-    graft.functions.DotDoubleExpr.register(emb.sparkSession)
     emb.select(col("vec_id"), posexplode(array(
         codeExprs(codebook, col("embedding").cast("array<double>")): _*)))
       .withColumnRenamed("pos", "m")
@@ -376,7 +373,6 @@ object ProductQuantizer {
   def encodeResidual(emb: DataFrame,
       centroids: Seq[(Int, Array[Double])],
       codebook: Array[Array[Array[Double]]]): DataFrame = {
-    graft.functions.DotDoubleExpr.register(emb.sparkSession)
     val cents = centMatrix(centroids)
     emb
       .select(col("vec_id"), cellExprOf(centroids).as("cell"),
@@ -399,7 +395,6 @@ object ProductQuantizer {
       centroids: Seq[(Int, Array[Double])],
       codebook: Array[Array[Array[Double]]], queryId: Long, k: Int,
       nProbe: Int): DataFrame = {
-    graft.functions.DotDoubleExpr.register(spark)
     val cents = centMatrix(centroids)
     val qv = queryVector(emb, queryId)
     val probed: Seq[Int] = centroids.map { case (lbl, c) =>
@@ -528,7 +523,6 @@ object ProductQuantizer {
       centroids: Seq[(Int, Array[Double])],
       codebook: Array[Array[Array[Double]]], queryId: Long, k: Int,
       nProbe: Int): DataFrame = {
-    graft.functions.DotDoubleExpr.register(spark)
     val qv = queryVector(emb, queryId)
     // Same left-to-right double fold as DotDoubleExpr / list_reduce;
     // ties (equal dp) go to the larger cell id, matching the in-plan
@@ -563,7 +557,6 @@ object ProductQuantizer {
       centroids: Seq[(Int, Array[Double])],
       codebook: Array[Array[Array[Double]]], queryId: Long,
       shortlist: Int, k: Int, nProbe: Int): DataFrame = {
-    graft.functions.DotExactExpr.register(spark)
     val fdot = graft.functions.DotExactExpr.dotExactFast _
     def fnorm(c: Column) = sqrt(fdot(c, c))
     val short = ivfAdcTopK(spark, emb, centroids, codebook, queryId,
@@ -637,7 +630,6 @@ object ProductQuantizer {
       codebook: Array[Array[Array[Double]]], panelN: Long,
       nProbe: Int, codes: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    graft.functions.DotDoubleExpr.register(spark)
     val cents = centMatrix(centroids)
     val qrows = emb.filter(col("vec_id") < panelN)
       .select("vec_id", "embedding").collect()

@@ -39,7 +39,6 @@ object SemDedup {
     */
   def assignCells(emb: DataFrame,
       centroids: Seq[(Int, Array[Double])]): DataFrame = {
-    graft.functions.DotDoubleExpr.register(emb.sparkSession)
     val scored = array(centroids.map { case (cell, arr) =>
       struct(
         graft.functions.DotDoubleExpr
@@ -58,7 +57,6 @@ object SemDedup {
   def duplicatePairs(spark: SparkSession, emb: DataFrame,
       centroids: Seq[(Int, Array[Double])], tau: Double,
       subPlanes: Int = 4, cellCap: Int = Int.MaxValue): DataFrame = {
-    CosineSimilarityExpr.register(spark)
     val cells = assignCells(emb, centroids)
     val blocks = blockIds(spark, emb, cells, subPlanes, cellCap)
     val pairs = blocks.as("a")

@@ -88,7 +88,6 @@ object BloomJoin {
 
   private def probe(big: DataFrame, bigKey: String,
       filter: BloomFilter): Column = {
-    BloomMightContainExpr.register(big.sparkSession)
     BloomMightContainExpr.mightContain(filter, col(bigKey))
   }
 

@@ -142,10 +142,11 @@ object GroupedTopK {
   /** Idempotently make [[GroupedTopKStrategy]] visible to this
     * session's planner. Sessions built with
     * `spark.sql.extensions=graft.functions.GraftExtensions` already
-    * have it; this covers ad-hoc sessions (the `registerAll` analog).
+    * have it, injected, and get no second copy; this covers ad-hoc
+    * sessions (the `registerAll` analog).
     */
   def ensureStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GroupedTopKStrategy))
+    if (!spark.sessionState.planner.strategies.contains(GroupedTopKStrategy))
       spark.experimental.extraStrategies =
         GroupedTopKStrategy +: spark.experimental.extraStrategies
 

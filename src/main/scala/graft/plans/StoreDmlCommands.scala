@@ -250,9 +250,12 @@ case class StoreReplacePartitionCommand(path: String,
 /** `df.writeTo(t).overwritePartitions()` — DYNAMIC partition
   * overwrite over a clustered store table: replace exactly the
   * clustered keys PRESENT in the batch, as ONE
-  * [[VersionedStore.replaceWhere]] commit (Spark ships no V1Write
-  * fallback for this node, so the analyzer routes it here). The
-  * batch aligns BY NAME (the writeTo contract); the key list is
+  * [[VersionedStore.replaceWhere]] commit. This command is the only
+  * route: the catalog table declares no `OVERWRITE_DYNAMIC`
+  * capability (Spark ships no V1Write fallback for this node), so
+  * only the analyzer rule of `GraftExtensions` reaches it. The batch
+  * aligns BY NAME (the writeTo contract): a column the table lacks
+  * is refused, never silently dropped. The key list is
   * driver-bounded — a batch spraying over 1000 distinct keys should
   * spell its region as `overwrite(condition)` instead.
   */
@@ -274,6 +277,12 @@ case class StoreDynamicOverwriteCommand(path: String,
     require(missing.isEmpty,
       s"overwritePartitions into store table at $path: the batch " +
         s"is missing column(s) ${missing.mkString(", ")}")
+    val extra = src.columns.filterNot(c =>
+      tgt.fieldNames.exists(_.equalsIgnoreCase(c)))
+    require(extra.isEmpty,
+      s"overwritePartitions into store table at $path: the table " +
+        s"carries no column(s) ${extra.mkString(", ")} — evolve the " +
+        "table first, never silently drop")
     val aligned = src.select(tgt.fields.map(f =>
       col(srcCol(f.name).get).as(f.name)).toIndexedSeq: _*)
     val typed = StoreDml.ansiAlign(aligned, tgt, path,

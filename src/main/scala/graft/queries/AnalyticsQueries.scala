@@ -2452,11 +2452,6 @@ object AnalyticsQueries {
               sum(col("l_linenumber")).as("sum_ln"))
             .write.mode("overwrite").parquet(p)
         }
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.SummaryRewriteRule))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.SummaryRewriteRule
         graft.plans.SummaryRewriteRule.clear()
         graft.plans.SummaryRewriteRule.register(fact,
           graft.StoreCache.readParquet(s, path),

@@ -284,14 +284,6 @@ object BreadthQueries {
     QueryDef(
       "q126_fuzzy_match",
       (s, d) => {
-        // activate the additive length-difference guard for
-        // levenshtein predicates (LevenshteinGuardRuleSpec proves
-        // result-identity; cluster path injects it via GraftExtensions)
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.LevenshteinGuardRule))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.LevenshteinGuardRule
         // Blocking via the reusable BandedRangeJoin operator: the gap
         // becomes an EQUI hash-join key (block + next-block probe) —
         // a bare range predicate would plan as a nested-loop join,

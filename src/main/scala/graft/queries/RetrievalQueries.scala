@@ -465,7 +465,6 @@ object RetrievalQueries {
     QueryDef(
       "q232_hybrid_lexical_vector",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         def fdot(a: org.apache.spark.sql.Column,
             b: org.apache.spark.sql.Column) =
           graft.functions.DotExactExpr.dotExactFast(a, b)
@@ -606,7 +605,6 @@ object RetrievalQueries {
     QueryDef(
       "q250_hybrid_score_fusion",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         def fdot(a: org.apache.spark.sql.Column,
             b: org.apache.spark.sql.Column) =
           graft.functions.DotExactExpr.dotExactFast(a, b)

@@ -315,7 +315,6 @@ object SamplingQueries {
     QueryDef(
       "q236_negative_sampling",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         def fdot(a: org.apache.spark.sql.Column,
             b: org.apache.spark.sql.Column) =
           graft.functions.DotExactExpr.dotExactFast(a, b)
@@ -424,7 +423,6 @@ object SamplingQueries {
     QueryDef(
       "q245_semihard_negatives",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         def fdot(a: org.apache.spark.sql.Column,
             b: org.apache.spark.sql.Column) =
           graft.functions.DotExactExpr.dotExactFast(a, b)

@@ -609,12 +609,6 @@ object ScaleQueries {
         graft.plans.ZoneMapPruneRule.clear()
         val entry = graft.plans.ZoneMapPruneRule
           .register(tbl, "zfile", Seq("day", "pk"))
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.ZoneMapPruneRule)) {
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.ZoneMapPruneRule
-        }
         val bounds = Map(
           "day" -> (Option(1500L), Option(1560L)),
           "pk" -> (Option(500L), Option(900L)))
@@ -700,12 +694,6 @@ object ScaleQueries {
         graft.plans.ZoneMapPruneRule.clear()
         val entry = graft.plans.ZoneMapPruneRule
           .register(tbl, "zfile", Seq("sd", "pk"))
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.ZoneMapPruneRule)) {
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.ZoneMapPruneRule
-        }
         val q = tbl.filter(
           (col("sd").between(lit(java.sql.Date.valueOf("1994-03-01")),
             lit(java.sql.Date.valueOf("1994-05-31"))) ||
@@ -805,12 +793,6 @@ object ScaleQueries {
         graft.plans.ZoneMapPruneRule.clear()
         val entry = graft.plans.ZoneMapPruneRule
           .register(tbl, "zfile", Seq("lang", "source"))
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.ZoneMapPruneRule)) {
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.ZoneMapPruneRule
-        }
         val q = tbl.filter(
           (col("lang") === "en" && col("source").like("src1%")) ||
             col("lang") === "de")
@@ -889,12 +871,6 @@ object ScaleQueries {
         graft.plans.BloomSkipRule.clear()
         val entry = graft.plans.BloomSkipRule
           .register(tbl, "zfile", Seq("doc_id"))
-        if (!s.experimental.extraOptimizations
-            .contains(graft.plans.BloomSkipRule)) {
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+
-              graft.plans.BloomSkipRule
-        }
         val q = tbl.filter(col("doc_id").isin(42L, 123L, 321L))
         // None = the rule pruned EVERY file and the plan folded
         // to an empty LocalRelation (see q320's receipt note)

@@ -19,8 +19,8 @@ object VectorQueries {
 
   // Fused exact-decimal vector math (DotExactExpr) — bit-identical to
   // the VectorFunctions HOF fold the oracles mirror, one codegen'd
-  // loop instead of per-element Catalyst machinery. Queries call
-  // DotExactExpr.register(s) before building their plans.
+  // loop instead of per-element Catalyst machinery. The Column API
+  // builds the expression itself, so no session registration is needed.
   private def fdot(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column) =
     graft.functions.DotExactExpr.dotExactFast(a, b)
@@ -545,7 +545,6 @@ object VectorQueries {
   private def buildPanelRankStore(
       s: org.apache.spark.sql.SparkSession, d: String,
       p: String): Unit = {
-    graft.functions.DotExactExpr.register(s)
     val emb = embeddings(s, d)
     emb.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(panelQs(emb)))
@@ -742,7 +741,6 @@ object VectorQueries {
     QueryDef(
       "q37_ann_bruteforce",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val qv = emb.filter(col("vec_id") === 0)
           .select(col("embedding").as("q_emb"))
@@ -772,8 +770,6 @@ object VectorQueries {
     QueryDef(
       "q38_ann_lsh",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val bands = srpBandsExact(emb, numBands = 4, planesPerBand = 6)
         val qb = bands.filter(col("vec_id") === 0)
@@ -819,8 +815,6 @@ object VectorQueries {
     QueryDef(
       "q44_embed_neardup",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val bands = srpBandsExact(emb, numBands = 4, planesPerBand = 10,
           bucketCap = Some(200))
@@ -895,7 +889,6 @@ object VectorQueries {
     QueryDef(
       "q67_ivf_assign",
       (s, d) => {
-        graft.functions.DotDoubleExpr.register(s)
         val emb = graft.Tables.embeddingsUnspread(s, d)
         // Centroids are model metadata (K labels × dim means = a few
         // hundred rows): one explode+agg pass computes them, then they
@@ -935,8 +928,6 @@ object VectorQueries {
     QueryDef(
       "q98_ivf_search",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         // Same literal-centroid assignment as q67 (zero-shuffle argmax
         // per vector); the probe set is the query row's K scores,
@@ -1001,8 +992,6 @@ object VectorQueries {
     QueryDef(
       "q230_filtered_ivf",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val cents = centroidArrays(s, d)
         val scored = array(cents.map { case (lbl, arr) =>
@@ -1064,8 +1053,6 @@ object VectorQueries {
     QueryDef(
       "q237_filtered_ann_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val qids = emb.filter(col("vec_id") < PanelN)
           .select(col("vec_id").as("qid"))
@@ -1182,8 +1169,6 @@ object VectorQueries {
     QueryDef(
       "q241_adaptive_filtered_ivf",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val cents = centroidArrays(s, d)
         val kCells = cents.length
@@ -1285,8 +1270,6 @@ object VectorQueries {
     QueryDef(
       "q242_adaptive_filtered_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val qids = emb.filter(col("vec_id") < PanelN)
           .select(col("vec_id").as("qid"))
@@ -1427,7 +1410,6 @@ object VectorQueries {
     QueryDef(
       "q252_mutual_knn",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         // norms hoisted per VECTOR (n exact folds, not n² — the
         // oracle's norms CTE shape), so each pair pays exactly one
         // exact-decimal dot; cos_sim value is bit-identical to
@@ -1511,8 +1493,6 @@ object VectorQueries {
     QueryDef(
       "q255_multiprobe_lsh_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val bands = srpBandsExact(emb, numBands = 4, planesPerBand = 6)
@@ -1639,7 +1619,6 @@ object VectorQueries {
     QueryDef(
       "q117_l2_normalize",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         // The norm is computed in its OWN projection, separated from
         // the transform() by the sort: an expression referenced inside
         // a lambda is evaluated per ELEMENT (HOFs are CodegenFallback —
@@ -1695,7 +1674,6 @@ object VectorQueries {
     QueryDef(
       "q156_knn_join",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val qs = emb.filter(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1801,8 +1779,6 @@ object VectorQueries {
     QueryDef(
       "q200_ann_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val bands = srpBandsExact(emb, numBands = 4, planesPerBand = 6)
@@ -1908,8 +1884,6 @@ object VectorQueries {
     QueryDef(
       "q201_ivf_batch_search",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val cents = centroidArrays(s, d)
         val scored = array(cents.map { case (lbl, arr) =>
@@ -1987,8 +1961,6 @@ object VectorQueries {
     QueryDef(
       "q209_ivf_tuning_curve",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val kTot = exact.agg(count(lit(1)).cast("long").as("k_total"))
@@ -2080,7 +2052,6 @@ object VectorQueries {
     QueryDef(
       "q211_ivf_cell_balance",
       (s, d) => {
-        graft.functions.DotDoubleExpr.register(s)
         val emb = graft.Tables.embeddingsUnspread(s, d)
         val cents = centroidArrays(s, d)
         val k = cents.size
@@ -2135,7 +2106,6 @@ object VectorQueries {
     QueryDef(
       "q212_centroid_drift",
       (s, d) => {
-        graft.functions.DotDoubleExpr.register(s)
         val emb = graft.Tables.embeddingsUnspread(s, d)
         val cents = centroidArrays(s, d)
         val scored = array(cents.map { case (lbl, arr) =>
@@ -2199,8 +2169,6 @@ object VectorQueries {
     QueryDef(
       "q217_semdedup",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val cents = centroidArrays(s, d)
         val scored = array(cents.map { case (lbl, arr) =>
@@ -2339,7 +2307,6 @@ object VectorQueries {
     QueryDef(
       "q220_pq_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val cb = graft.llm.ProductQuantizer
           .codebookFromCorpus(emb, numSub = 8, codesPerSub = 16)
@@ -2445,8 +2412,6 @@ object VectorQueries {
     QueryDef(
       "q223_ivfpq_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val cents = centroidArrays(s, d)
@@ -2551,7 +2516,6 @@ object VectorQueries {
     QueryDef(
       "q279_residual_ivfpq_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val cents = centroidArrays(s, d)
@@ -2606,7 +2570,6 @@ object VectorQueries {
     QueryDef(
       "q290_embedding_outliers",
       (s, d) => {
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val cents = centroidArrays(s, d)
         val vd = col("embedding").cast("array<double>")
@@ -2669,7 +2632,6 @@ object VectorQueries {
     QueryDef(
       "q305_ivf_add_batch",
       (s, d) => {
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val isDelta = col("vec_id") % 10 === 3
         // centroids from the BASE slice only (the trained model)
@@ -2781,7 +2743,6 @@ object VectorQueries {
     QueryDef(
       "q261_binary_rerank",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val codes = binCodes(emb)
         val qc = codes.filter(col("vec_id") === 0)
@@ -2825,7 +2786,6 @@ object VectorQueries {
     QueryDef(
       "q262_binary_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val codes = binCodes(emb)
@@ -2907,7 +2867,6 @@ object VectorQueries {
     QueryDef(
       "q263_matryoshka_curve",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val qs = panelQs(emb)
@@ -2955,8 +2914,6 @@ object VectorQueries {
     QueryDef(
       "q265_cluster_inertia",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val cents = centroidArrays(s, d)
         val scored = array(cents.map { case (lbl, arr) =>
@@ -3030,7 +2987,6 @@ object VectorQueries {
     QueryDef(
       "q274_semantic_contamination",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val withN = embeddings(s, d)
           .select(col("vec_id"), col("embedding"),
             fnorm(col("embedding")).as("nrm"))
@@ -3153,7 +3109,6 @@ object VectorQueries {
     QueryDef(
       "q309_pq_trained_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val cbS = graft.llm.ProductQuantizer
           .codebookFromCorpus(emb, numSub = 8, codesPerSub = 16)
@@ -3203,8 +3158,6 @@ object VectorQueries {
     QueryDef(
       "q317_ivf_trained_cells",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val exact = panelExact(s, d)
         val kTot = exact.agg(count(lit(1)).cast("long").as("k_total"))
@@ -3280,8 +3233,6 @@ object VectorQueries {
     QueryDef(
       "q318_heldout_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val corpus = emb.filter(col("vec_id") >= PanelN)
         val exact = panelExactHeldout(s, d).localCheckpoint()
@@ -3464,8 +3415,6 @@ object VectorQueries {
     QueryDef(
       "q319_heldout_trained_cells",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
-        graft.functions.DotDoubleExpr.register(s)
         val emb = embeddings(s, d)
         val corpus = emb.filter(col("vec_id") >= PanelN)
         val exact = panelExactHeldout(s, d).localCheckpoint()
@@ -3526,7 +3475,6 @@ object VectorQueries {
     QueryDef(
       "q322_adc_per_query_serving",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val cb = graft.llm.ProductQuantizer
           .codebookFromCorpus(emb, numSub = 8, codesPerSub = 16)
@@ -3557,7 +3505,6 @@ object VectorQueries {
     QueryDef(
       "q323_heldout_pq_recall",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val corpus = emb.filter(col("vec_id") >= PanelN)
         val rows = emb.filter(col("vec_id").between(PanelN, PanelN + 15))
@@ -3667,7 +3614,6 @@ object VectorQueries {
     QueryDef(
       "q348_heldout_trained_pq",
       (s, d) => {
-        graft.functions.DotExactExpr.register(s)
         val emb = embeddings(s, d)
         val corpus = emb.filter(col("vec_id") >= PanelN)
         // sampled codebook — q323's exact shape (corpus vectors

@@ -10,7 +10,6 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo,
   SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{BaseRelation,
   InsertableRelation, TableScan}
 import org.apache.spark.sql.types.StructType
@@ -649,9 +648,7 @@ final case class GraftStoreTable(path: String,
   override def newWriteBuilder(
       info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate
-        with org.apache.spark.sql.connector.write.SupportsOverwrite
-        with org.apache.spark.sql.connector.write
-          .SupportsDynamicOverwrite {
+        with org.apache.spark.sql.connector.write.SupportsOverwrite {
       require(pinnedVersion.isEmpty,
         "GraftStoreTable: cannot write to a time-travel snapshot")
       private var replace = false
@@ -662,10 +659,6 @@ final case class GraftStoreTable(path: String,
         */
       private var replaceCond: Option[
         org.apache.spark.sql.Column] = None
-      /** Dynamic partition overwrite: replace exactly the clustered
-        * keys PRESENT in the batch.
-        */
-      private var dynamic = false
       override def truncate(): WriteBuilder = { replace = true; this }
       override def overwrite(filters: Array[
           org.apache.spark.sql.sources.Filter]): WriteBuilder = {
@@ -674,10 +667,6 @@ final case class GraftStoreTable(path: String,
           replace = true
         } else replaceCond = Some(filters.map(
           GraftStoreTable.filterToColumn(path, _)).reduce(_ && _))
-        this
-      }
-      override def overwriteDynamicPartitions(): WriteBuilder = {
-        dynamic = true
         this
       }
       override def build(): Write = new V1Write {
@@ -689,29 +678,7 @@ final case class GraftStoreTable(path: String,
               // range-clustered on its declared columns (per-group
               // zone hulls → partition-pruned reads)
               val cluster = VersionedStore.clusterByOf(spark, path)
-              if (dynamic) {
-                // replace exactly the clustered keys in the batch —
-                // the INSERT OVERWRITE semantic of a partitioned
-                // table under dynamic partition mode. The key list
-                // is driver-bounded: a batch spraying thousands of
-                // keys should use a conditional overwrite instead.
-                require(cluster.nonEmpty,
-                  "GraftStoreTable: dynamic partition overwrite " +
-                    "needs a PARTITIONED BY table (no clustered " +
-                    "columns declared)")
-                val keys = data.select(cluster.map(col): _*)
-                  .distinct().limit(1001).collect()
-                require(keys.length <= 1000,
-                  "GraftStoreTable: dynamic partition overwrite " +
-                    "batch carries over 1000 distinct partition " +
-                    "keys — use writeTo(...).overwrite(condition)")
-                val pred = keys.map(k => cluster.zipWithIndex.map {
-                  case (c, i) => col(c) <=> lit(k.get(i))
-                }.reduce(_ && _)).reduceOption(_ || _)
-                  .getOrElse(lit(false))
-                VersionedStore.replaceWhere(data, path, pred,
-                  clusterBy = cluster)
-              } else replaceCond match {
+              replaceCond match {
                 case Some(c) =>
                   VersionedStore.replaceWhere(data, path, c,
                     clusterBy = cluster)

@@ -86,7 +86,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("cosine_fast registration rejects wrong arity from SQL") {
-    graft.functions.CosineSimilarityExpr.register(spark)
     an[Exception] should be thrownBy
       spark.sql("SELECT cosine_fast(array(1.0f), array(1.0f), array(1.0f))")
         .collect()
@@ -94,7 +93,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture with Matchers {
 
   test("dot_exact fused expression is bit-identical to the HOF fold") {
     val spark2 = spark
-    graft.functions.DotExactExpr.register(spark2)
     val emb = graft.Tables.embeddings(spark2, "/root/testdata/sf0.001")
     val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("q"))
     val both = emb.crossJoin(broadcast(qv))
@@ -115,7 +113,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture with Matchers {
   test("dot_exact accepts a double-array side (literal model vectors) " +
       "and matches the all-double cast form bit for bit") {
     val spark2 = spark
-    graft.functions.DotExactExpr.register(spark2)
     val emb = graft.Tables.embeddings(spark2, "/root/testdata/sf0.001")
     // centroid-like double literal: a real embedding widened to double
     val cent: Array[Double] = emb.filter(col("vec_id") === 1)
@@ -139,7 +136,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture with Matchers {
   test("dot_double matches a driver-side left-to-right double fold " +
       "bit for bit (codegen and interpreted agree)") {
     val spark2 = spark
-    graft.functions.DotDoubleExpr.register(spark2)
     val emb = graft.Tables.embeddings(spark2, "/root/testdata/sf0.001")
     val qRow: Array[Double] = emb.filter(col("vec_id") === 1)
       .head().getSeq[Float](1).map(_.toDouble).toArray
@@ -163,8 +159,6 @@ class FunctionsSpec extends AnyFunSuite with SparkFixture with Matchers {
   test("dot expressions fail loudly on mismatched vector dimensions") {
     val spark2 = spark
     import spark2.implicits._
-    graft.functions.DotExactExpr.register(spark2)
-    graft.functions.DotDoubleExpr.register(spark2)
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f)))
       .toDF("a", "b")
     def rootMsg(t: Throwable): String = {

@@ -15,7 +15,6 @@ class UpperTriProd6Spec extends AnyFunSuite with SparkFixture
   import spark.implicits._
 
   private def gen(vec: Seq[Float]): Array[(Long, Long, Long)] = {
-    UpperTriProd6Expr.register(spark)
     Seq(Tuple1(vec)).toDF("v")
       .select(explode(UpperTriProd6Expr.upperTriProd6(col("v")))
         .as("c"))
@@ -49,7 +48,6 @@ class UpperTriProd6Spec extends AnyFunSuite with SparkFixture
 
   test("empty vector yields no pairs; null vector yields no rows") {
     gen(Seq.empty) shouldBe empty
-    UpperTriProd6Expr.register(spark)
     val n = Seq(Tuple1(null.asInstanceOf[Seq[Float]])).toDF("v")
       .select(explode(UpperTriProd6Expr.upperTriProd6(col("v"))))
       .count()
@@ -57,7 +55,6 @@ class UpperTriProd6Spec extends AnyFunSuite with SparkFixture
   }
 
   test("double input accepted; non-array input rejected at analysis") {
-    UpperTriProd6Expr.register(spark)
     val d = Seq(Tuple1(Seq(2.0, 3.0))).toDF("v")
       .select(explode(UpperTriProd6Expr.upperTriProd6(col("v")))
         .as("c"))
@@ -70,7 +67,6 @@ class UpperTriProd6Spec extends AnyFunSuite with SparkFixture
   }
 
   test("null ELEMENT fails loudly instead of fabricating a product") {
-    UpperTriProd6Expr.register(spark)
     val ex = intercept[Exception] {
       Seq(Tuple1(Seq[java.lang.Double](1.0, null))).toDF("v")
         .select(explode(UpperTriProd6Expr.upperTriProd6(col("v"))))

@@ -40,7 +40,6 @@ class LlmSpec extends AnyFunSuite with SparkFixture with Matchers {
 
   test("cosine_fast expression ≈ exact decimal cosine on real embeddings") {
     val emb = Tables.embeddings(spark, sfDir).limit(50)
-    CosineSimilarityExpr.register(spark)
     val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("q"))
     val both = emb.crossJoin(broadcast(qv))
       .select(
@@ -51,7 +50,6 @@ class LlmSpec extends AnyFunSuite with SparkFixture with Matchers {
   }
 
   test("cosine_fast works from SQL and rejects wrong types") {
-    CosineSimilarityExpr.register(spark)
     Tables.embeddings(spark, sfDir).limit(5)
       .createOrReplaceTempView("emb_test")
     val r = spark.sql(

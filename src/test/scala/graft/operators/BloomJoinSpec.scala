@@ -146,7 +146,6 @@ class BloomJoinSpec extends AnyFlatSpec with Matchers with SparkFixture {
     val bigDf = spark.read.parquet(dir)
     val dimDf = longs("dk", (1L to 10L).map(java.lang.Long.valueOf))
     val filter = BloomJoin.buildFilter(dimDf, "dk", 0.01)
-    graft.functions.BloomMightContainExpr.register(spark)
     val pruned = bigDf.filter(graft.functions.BloomMightContainExpr
       .mightContain(filter, col("k")))
     val plan = pruned.queryExecution.executedPlan.toString

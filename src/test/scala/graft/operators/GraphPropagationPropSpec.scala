@@ -153,7 +153,6 @@ class GraphPropagationPropSpec extends AnyFunSuite with SparkFixture
       "vectors (sign mix, tiny and large magnitudes)") {
     val s = spark
     import s.implicits._
-    graft.functions.UpperTriProd6Expr.register(spark)
     (1 to 4).foreach { seed =>
       val rnd = new Random(seed)
       val vec = Array.fill(16)(

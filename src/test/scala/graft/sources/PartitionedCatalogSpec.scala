@@ -302,4 +302,33 @@ class PartitionedCatalogSpec extends AnyFunSuite with SparkFixture
     spark.sql("DROP TABLE plat.t2copy")
     spark.sql("DROP TABLE plat.t2")
   }
+
+  test("overwritePartitions refuses a column the table lacks through " +
+      "a registered name, and a batch over 1000 distinct keys; " +
+      "nothing is committed") {
+    root
+    val s = spark
+    import s.implicits._
+    spark.sql("CREATE TABLE plat.dyn (id BIGINT, day BIGINT) " +
+      "USING `graft-store` PARTITIONED BY (day)")
+    val p = s"$root/dyn"
+    spark.sql("INSERT INTO plat.dyn VALUES (1, 1), (2, 2)")
+    VersionedStore.registerTable(spark, p, "reg_rw")
+    val v0 = VersionedStore.latestVersion(spark, p)
+    val e = intercept[Exception] {
+      Seq((4L, 1L, "y")).toDF("id", "day", "extra")
+        .writeTo("reg_rw").overwritePartitions()
+    }
+    e.getMessage should include("extra")
+    VersionedStore.latestVersion(spark, p) shouldBe v0
+    val tooMany = (0L to 1000L).map(i => (i, i)).toDF("id", "day")
+    Seq("reg_rw", "plat.dyn").foreach { t =>
+      val e2 = intercept[Exception] {
+        tooMany.writeTo(t).overwritePartitions()
+      }
+      e2.getMessage should include("1000 distinct partition keys")
+      VersionedStore.latestVersion(spark, p) shouldBe v0
+    }
+    spark.table("plat.dyn").count() shouldBe 2L
+  }
 }
